@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs the headline queries against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -30,8 +32,8 @@ import java.nio.file.{Files, Paths}
   * is self-evident from the artifact alone and the weak list is
   * adjudicated from isolated numbers, not host-distorted medians.
   *
-  * Contention retries (round-11): ProfileLeak's full suite-prefix
-  * replay could not reproduce the r10 in-suite degradation (flat run
+  * Contention retries: a full replay of the suite prefix could not
+  * reproduce the measured in-suite degradation (flat run
   * curves, flat heap/GC/JIT/disk), and the r10 degraders cluster
   * alphabetically — i.e. temporally — so the residual leak is
   * transient host contention (CPU-steal windows), not engine state. A
@@ -137,6 +139,22 @@ object Bench {
       case Seq() => all
       case hs    => hs
     } else all
+    // benchVariants drops harness-only work a plain sort-strip can't
+    // express (run() then strips the oracle-determinism root sort).
+    val (compact, full) = run(spark, sfDir, qs, skippedTables) { name =>
+      SparkEntry.benchVariants.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
+    }
+    println(compact)
+    Files.createDirectories(Paths.get("target"))
+    Files.writeString(Paths.get("target/bench.json"), full + "\n")
+    Files.writeString(Paths.get("bench.json"), full + "\n")
+    spark.stop()
+  }
+
+  /** Times `qs` (each built by `query`) and returns the compact stdout
+    * line and the full bench.json record. */
+  private[graft] def run(spark: SparkSession, sfDir: String, qs: Seq[String],
+      skippedTables: Seq[String])(query: String => DataFrame): (String, String) = {
     // Floor-robust companion metric (r15 VERDICT item 2; ADDITIONS ONLY —
     // every pre-existing field, query and methodology is unchanged): the
     // host's driver-side planning floor drifts 3-5x across sessions and
@@ -151,22 +169,26 @@ object Bench {
     // block's stragglers are bounded by the last job's tail and can only
     // UNDERcount their own query, never pollute the next.
     val taskMsCounter = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val taskListener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (te.taskMetrics != null) {
           taskMsCounter.addAndGet(te.taskMetrics.executorRunTime); ()
         }
-    })
+    }
+    spark.sparkContext.addSparkListener(taskListener)
+    // Queries that threw in any run. A failed run's elapsed time is not
+    // a measurement (a query that fails fast would LOWER the total), so
+    // these are dropped from every timed field and named under `failed`.
+    val failedNames = scala.collection.mutable.LinkedHashSet[String]()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
-      // benchVariants drops harness-only work a plain sort-strip can't
-      // express; stripRootSort then removes the oracle-determinism
-      // orderBy every registered query carries (see GraftBenchShim).
-      try org.apache.spark.sql.GraftBenchShim.stripRootSort(
-        SparkEntry.benchVariants.getOrElse(name, SparkEntry.queries(name))(spark, sfDir))
+      // stripRootSort removes the oracle-determinism orderBy every
+      // registered query carries (see GraftBenchShim).
+      try org.apache.spark.sql.GraftBenchShim.stripRootSort(query(name))
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
+        failedNames += name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       (System.nanoTime() - t0) / 1e9
@@ -240,8 +262,7 @@ object Bench {
     }
     val sqlFloorPre = probeSqlFloor("pre")
     System.err.println(f"[bench] sql_floor_pre_ms=$sqlFloorPre%.1f (healthy ~20-30)")
-    // Degradation retries (r10 VERDICT item 1, root-caused in r11 by
-    // ProfileLeak): a full replay of the 109-query suite prefix could
+    // Degradation retries: a full replay of the 109-query suite prefix could
     // NOT reproduce dedup_lsh_recall's in-suite 3.14→6.71→8.58→9.09 s
     // run curve — times stayed flat, heap/GC/JIT/local-dir all flat,
     // and the r10 degraders cluster ALPHABETICALLY (= temporally:
@@ -315,7 +336,7 @@ object Bench {
         cooldown()
         name -> Seq(once(name), once(name)).sorted
       }.toMap
-    val results = resultsPass1.map { case (name, m1, runs, taskSec) =>
+    val measured = resultsPass1.map { case (name, m1, runs, taskSec) =>
       revisitTimes.get(name) match {
         case None => (name, m1, runs, taskSec)
         case Some(t2) =>
@@ -328,6 +349,30 @@ object Bench {
           } else (name, m1, runs ++ t2, taskSec)
       }
     }
+    val timed = measured.filterNot(r => failedNames(r._1))
+    // Isolation pass (r8 VERDICT item 1, widened by r13 VERDICT item
+    // 3): re-time after a full cooldown EVERY query whose in-suite
+    // median is >= 1 s — the weak-list membership threshold — plus the
+    // top 10 regardless, so the artifact itself records whether each
+    // weak-list candidate's in-suite median is contention-inflated
+    // (isolated ≈ median) or honest, and next round's weak list is
+    // self-evidencing instead of leaning on host-distorted medians.
+    val spotN = math.max(math.min(10, timed.size),
+      timed.count(_._2 >= 1.0))
+    val isolatedAll = timed.sortBy(-_._2).take(spotN).map { case (name, _, _, _) =>
+      cooldown()
+      spark.sparkContext.setJobDescription(s"bench-isolated:$name")
+      // MIN of two runs: the spot-check itself runs at the END of a
+      // 246-query session, where one-shot timings can read HIGHER than
+      // the in-suite medians they are meant to audit (r10: g10 4.3
+      // isolated vs 3.06 median — VM steal + end-of-suite state). The
+      // min is the contention-robust estimator for a deterministic
+      // workload.
+      name -> math.min(once(name), once(name))
+    }
+    // A query that first throws in the isolation pass is failed too.
+    val results = timed.filterNot(r => failedNames(r._1))
+    val isolated = isolatedAll.filterNot(r => failedNames(r._1))
     // Self-check that the suite measured plans, not accumulated state:
     // the warm (first) run should be the SLOWEST — codegen+cache cold.
     // warm < median means the timed runs DEGRADED under leftover
@@ -339,26 +384,6 @@ object Bench {
     // not the 2-18x contention the invariant exists to catch); 50 ms of
     // grace separates the two without touching the strict record.
     val warmGeMedian50 = results.count { case (_, m, rs, _) => rs.head >= m - 0.05 }
-    // Isolation pass (r8 VERDICT item 1, widened by r13 VERDICT item
-    // 3): re-time after a full cooldown EVERY query whose in-suite
-    // median is >= 1 s — the weak-list membership threshold — plus the
-    // top 10 regardless, so the artifact itself records whether each
-    // weak-list candidate's in-suite median is contention-inflated
-    // (isolated ≈ median) or honest, and next round's weak list is
-    // self-evidencing instead of leaning on host-distorted medians.
-    val spotN = math.max(math.min(10, results.size),
-      results.count(_._2 >= 1.0))
-    val isolated = results.sortBy(-_._2).take(spotN).map { case (name, _, _, _) =>
-      cooldown()
-      spark.sparkContext.setJobDescription(s"bench-isolated:$name")
-      // MIN of two runs: the spot-check itself runs at the END of a
-      // 246-query session, where one-shot timings can read HIGHER than
-      // the in-suite medians they are meant to audit (r10: g10 4.3
-      // isolated vs 3.06 median — VM steal + end-of-suite state). The
-      // min is the contention-robust estimator for a deterministic
-      // workload.
-      name -> math.min(once(name), once(name))
-    }
     isolated.foreach { case (n, t) =>
       System.err.println(f"[bench] isolated $n%-22s $t%7.2f")
     }
@@ -431,8 +456,9 @@ object Bench {
     // pass CHANGED — a nonempty list means the first pass had uniform
     // block inflation the warm<median retry could not see.
     val revisedJson = boundedListJson(revisedNames.sortBy(-_._2).map(_._1).toSeq, 8)
+    val failedJson = boundedListJson(failedNames.toSeq, 12)
     def compactOf(rs: Seq[(String, Double, Seq[Double], Double)]) =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"omitted":${results.size - rs.size},"warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs%.1f,"sql_floor_pre_ms":$sqlFloorPre%.1f,"sql_floor_post_ms":$sqlFloorPost%.1f,"task_total":$taskTotal%.1f,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"isolated":$isolatedJsonCompact$skippedField,"queries":${qJson(rs)(v => f"$v%.3f")},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"omitted":${results.size - rs.size},"warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs%.1f,"sql_floor_pre_ms":$sqlFloorPre%.1f,"sql_floor_post_ms":$sqlFloorPost%.1f,"task_total":$taskTotal%.1f,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson,"isolated":$isolatedJsonCompact$skippedField,"queries":${qJson(rs)(v => f"$v%.3f")},"sf":"$sfDir"}"""
     // Greedy: keep dropping the cheapest query until the line fits ~1850
     // chars (2000-char driver window minus sbt's trailing [success] line).
     val byCost = results.sortBy(-_._2)
@@ -443,11 +469,8 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson}"""
-    println(compact)
-    Files.createDirectories(Paths.get("target"))
-    Files.writeString(Paths.get("target/bench.json"), full + "\n")
-    Files.writeString(Paths.get("bench.json"), full + "\n")
-    spark.stop()
+      s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson}"""
+    spark.sparkContext.removeSparkListener(taskListener)
+    (compact, full)
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.Dataset
   *     that survives executor loss — a local path on one node does NOT.
   *     Mandatory for long iterative jobs on real clusters.
   *
-  * Measured cost of `reliable` (r12, ProfileReliable): a 12-iteration
+  * Measured cost of `reliable`: a 12-iteration
   * PageRank with checkpointEvery=4 (two mid-loop lineage cuts + the
   * edge materialization) on the 1.2M-edge sf0.1 graph, alternating
   * GC-separated local/reliable reps in one JVM against a local-disk

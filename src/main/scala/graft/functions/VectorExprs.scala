@@ -477,8 +477,8 @@ object SortedIntersectKernel {
   * and a single-long-key hash aggregate — no per-pair objects, no
   * interpreted higher-order lambdas (both measured to lose in the r10
   * g7 bake-off). Bake-off honesty (r11): on the REGISTERED a19/g7
-  * fixtures this form wins the isolated pair stage (0.77 vs 1.17 s,
-  * ProfileA19b) but loses end-to-end, because those queries already
+  * fixtures this form wins the isolated pair stage (0.77 vs 1.17 s)
+  * but loses end-to-end, because those queries already
   * hold a distinct/checkpointed (key, item) table for their count
   * sidecars and the extra basket-collect aggregate costs more than the
   * self-join it removes — so they keep their joins (comments there).

@@ -48,7 +48,7 @@ object BloomJoinOps {
     }
     // shuffle_hash on the exact join: the operator's contract is "dim
     // too large to broadcast" — letting Spark auto-broadcast the dim at
-    // test SF (it did, per the r10 AuditBroadcasts re-run) would make
+    // test SF (it did, per the AQE-descending broadcast audit) would make
     // the prefilter pointless AND model the wrong plan. The hinted join
     // carries only bloom-surviving fact rows into its exchange, which
     // is the entire point of the operator.

@@ -108,8 +108,8 @@ object DedupOps {
     * is a pure function of `textCol`, so blocking the SAME frame the
     * signature came from needs no join at all; the join-back form made
     * the fact-scaled signature table a join side that Spark
-    * auto-broadcast at sf0.1 (the a19 class, r10 corpus-aware
-    * AuditBroadcasts find). Rows with null lanes (null text) get a NULL
+    * auto-broadcast at sf0.1 (the a19 class, found by the corpus-aware
+    * broadcast audit). Rows with null lanes (null text) get a NULL
     * block — an equi-join key that never matches, the same drop the
     * signature form's inner join-back applied (concat_ws would instead
     * silently bucket them together as md5("")). */
@@ -300,7 +300,7 @@ object DedupOps {
       dfCap: Int, minContainPpm: Long): DataFrame = {
     import graft.Checkpoints.CheckpointSyntax
     val grams = df.select(col(idCol).as("id"), explode(gramsCol).as("g"))
-    // The RARE gram list is checkpointed (r16, ProfileR16 same-JVM A/B:
+    // The RARE gram list is checkpointed (same-JVM alternating A/B:
     // won 4/4 alternating pairs vs recompute, 2.63-2.75 vs 2.68-3.11 s
     // at sf0.1): `kept` has three consumers (sizes + both self-join
     // sides), so left lazy the FULL document-frequency aggregate over
@@ -353,9 +353,9 @@ object DedupOps {
     * n_hits, recall_bp), integer basis points, null when the probe
     * slice has no truth pairs.
     *
-    * Registry note: the query registry is frozen at 246 (r14 VERDICT),
-    * so this audit ships as an operator + DedupRecallSpec pins + a
-    * measured number (ProfileContainRecall) rather than a new oracle
+    * Registry note: the query registry is frozen at 246, so this
+    * audit ships as an operator + DedupRecallSpec pins + a measured
+    * number rather than a new oracle
     * row. Measured at dedup_containment's standing parameters
     * (3-gram shingles, dfCap 50, 600000 ppm, probe < 50): recall
     * 10000 bp at BOTH sf0.01 (6/6 truth pairs) and sf0.1 (5/5) — on

@@ -311,7 +311,7 @@ object GraphOps {
       // adjacency lists are sorted ascending sets, so a codegen'd
       // two-pointer walk counts the closure without array_intersect's
       // per-row hash-set build and result-array allocation (the
-      // closing stage's measured dominant cost — ProfileTri r10).
+      // closing stage's measured dominant cost).
       .select(call_function("sorted_intersect_count",
         col("ns"), col("nd")).as("k"))
       .agg(coalesce(sum(col("k")), lit(0L)).as("n_triangles"))

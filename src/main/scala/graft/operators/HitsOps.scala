@@ -75,8 +75,8 @@ object HitsOps {
     // The table is node-sized, so the cut is one linear job per
     // half-round in either join mode.
     //
-    // Round-batching bake-off, CLOSED (r13, ProfileRoundBatch same-JVM
-    // A/B at sf0.1, parity checksummed): leaving the AUTH half-rounds
+    // Round-batching bake-off, CLOSED (same-JVM A/B at sf0.1, parity
+    // checksummed): leaving the AUTH half-rounds
     // lazy (cut hubs only) ran 5.1/5.2/5.3 s vs 3.4/3.7/4.5 s for this
     // form — and with MORE driver jobs (29 vs 25), because each lazy
     // half-round's subtree re-executes per consumer INCLUDING its

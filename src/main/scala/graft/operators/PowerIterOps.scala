@@ -111,7 +111,7 @@ object PowerIterOps {
       // 1.38 -> 1.53 s at sf0.1), driver jobs 10 -> 11 — the broadcast
       // materialization of the intermediate costs more than the one
       // driver round-trip it saves, the HitsOps round-batching result
-      // again. Verdict reproducible via graft.tools.ProfilePowerIter.
+      // again.
       v = folded.collect()(0).getSeq[Long](0).toArray
     }
     if (iters > 1) xq.unpersist(blocking = false)

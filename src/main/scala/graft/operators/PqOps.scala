@@ -310,7 +310,8 @@ object PqOps {
     // The probed query batch is the broadcast side (the bounded-batch
     // contract shared with SimilarityOps): the encoded corpus streams
     // map-side and can never be auto-picked as a broadcast build (it
-    // was at sf0.1 — the a19 class, r10 corpus-aware AuditBroadcasts).
+    // was at sf0.1 — the a19 class, caught by the corpus-aware
+    // broadcast audit).
     TopKOps.topKByScore(
         broadcast(q).join(c, Seq("cell"))
           .filter(col("q_id") =!= col("c_id"))

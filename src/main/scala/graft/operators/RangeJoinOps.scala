@@ -56,8 +56,8 @@ object RangeJoinOps {
     // general (points always; intervals whenever they derive from a
     // fact table), and Spark's size estimate under-counts post-explode
     // output, so at test SF it silently BROADCASTS one side — the a19
-    // defect class, found live on j12 by the r10 AQE-descending
-    // AuditBroadcasts re-run. The hinted plan keys both sides on the
+    // defect class, found live on j12 by the AQE-descending broadcast
+    // audit (PlanAuditSpec). The hinted plan keys both sides on the
     // bin id; the per-bin build side is bounded by bin occupancy.
     pt.join(iv.hint("shuffle_hash"), pt("__bin") === iv("__bin") &&
         col(ptCol) >= col(startCol) && col(ptCol) <= col(endCol))

@@ -119,8 +119,8 @@ object SimilarityOps {
     *     rides an explicit broadcast, so the corpus streams map-side —
     *     zero candidate shuffle, and Spark can never pick the
     *     fact-scaled candidate side as the build (it did at sf0.1 — the
-    *     a19 auto-broadcast class, caught by the r10 corpus-aware
-    *     AuditBroadcasts).
+    *     a19 auto-broadcast class, caught by PlanAuditSpec's
+    *     corpus-aware broadcast check).
     *   - `boundedQueries = false` (corpus×corpus self-search, e.g.
     *     mutual-NN mining where queries == candidates == the full fact
     *     table): NEITHER side may broadcast — a hard broadcast(q) here

@@ -65,7 +65,7 @@ object AssocQueries {
     // MODEL STATE consumed multiple times (c12 by its total and the
     // candidate set; uni by its total and BOTH unigram joins) — the
     // checkpoint stops each consumer replaying tokenize+shuffle (~5
-    // passes, the AuditRecompute defect class; r10 measured
+    // passes, the repeated-kernel recompute class; measured
     // 1.66 -> 1.25 s for checkpointing alone).
     val g = docs
       .select(expr("ascii_alpha_tokens(text, 3)").as("__toks"))
@@ -263,16 +263,16 @@ object AssocQueries {
     // round — 2^3 re-executions of the distinct+mirror by round 3.
     // Measured at sf0.1: 9.5 s lazy -> 3.0 s checkpointed. The edge
     // list shrinks monotonically, so each materialization is smaller
-    // than the last. The LAST round is exempt (r13, ProfileRoundBatch
-    // same-JVM A/B): its only consumer is the terminal degree
+    // than the last. The LAST round is exempt (same-JVM A/B): its
+    // only consumer is the terminal degree
     // aggregate, which reads it ONCE — cutting it was a pure extra
     // materialization barrier (4.25/4.14/4.36 s with the last cut vs
     // 3.36/3.65/3.89 s without, parity checksummed; jobs 17 -> 16).
     // Batching 2 rounds per cut (round 1 lazy) measured NEUTRAL vs
     // this form locally and re-enters round 1's semi-joins ×3 per
     // consumer at scale — between-round cuts stay.
-    // Re-probed r16 (VERDICT r15 item 6; ProfileR16 same-JVM A/B,
-    // parity checksummed): FUSING each round into two COUNT-OVER-WINDOW
+    // Re-probed (same-JVM A/B, parity checksummed): FUSING each round
+    // into two COUNT-OVER-WINDOW
     // passes (deg(src), deg(dst) attached per edge row, one filter — 3
     // fewer driver jobs) LOST 0/4 alternating pairs, 4.79-5.57 vs
     // 3.99-4.70 s. The window form ships the FULL mirrored edge list
@@ -605,8 +605,8 @@ object AssocQueries {
     // Broadcast is for DIM-sized sides; a same-sized self-join wants
     // the keyed merge. Re-pinned r9: isolation median 3.1 s (the r7
     // 2.2-2.6 s pin predates the VM's slower steal-heavy baseline;
-    // plan shape unchanged — re-verified via ExplainOne, merge join +
-    // one broadcast). r10 re-bake-off (ProfileG7, min of 4 GC'd reps):
+    // plan shape unchanged — merge join + one broadcast). Re-bake-off
+    // (min of 4 GC'd reps):
     // this merge form 3.88 s; shuffle_hash pair join 4.14 s (a wash —
     // no sort, but the hash build over 590k rows costs the same);
     // collect_set-per-part + in-row combination explode 6.1-13.9 s
@@ -616,7 +616,7 @@ object AssocQueries {
     // is the genuine ~9M-pair volume, not the join strategy.
     //
     // CONSTANT-FACTOR FLOOR (r11, closing the bake-off): two more
-    // forms measured (ProfileG7, 4 GC'd reps each) — the native
+    // forms measured (4 GC'd reps each) — the native
     // packed_pairs kernel over per-part supplier lists (the form that
     // wins a19: no interpreted lambdas, one primitive array per part,
     // codegen'd explode, single-long agg key) lands 2.4-3.6 s, and the

@@ -152,7 +152,7 @@ object CurationQueries {
     * t_unigram_nll); the BM25 side prunes exploded postings to the
     * query's terms at the scan via a literal IN filter.
     *
-    * Bake-off, CLOSED (r12, ProfileRrf): this query runs the tokenizer
+    * Bake-off, CLOSED: this query runs the tokenizer
     * kernel three times (ranker A's pruned checkpoint + twice inside
     * nllScores), so a fused form was measured — ONE tokenize pass
     * checkpointed as the full (doc_id, dl, tfm) map table, both rankers
@@ -166,9 +166,8 @@ object CurationQueries {
     * the tokenize kernel is embarrassingly parallel, so the fixture
     * penalty does not compound.
     *
-    * Re-probe, CLOSED AGAIN (r15, ProfileRrf on ProbeHarness —
-    * directive 4): after the EXPLODED-tokens checkpoint won for
-    * dedup_lsh_recall in r14, the same shape was measured here — ONE
+    * Re-probe, CLOSED AGAIN: after the EXPLODED-tokens checkpoint won
+    * for dedup_lsh_recall, the same shape was measured here — ONE
     * tokenize pass checkpointed as exploded (doc_id, term, tf) rows,
     * both rankers (and ranker A's dl join) reading it. Same-JVM
     * alternating reps at sf0.1, parity-checked: standing med 2.93 s /

@@ -100,7 +100,7 @@ object DedupQueries {
       shingleK = 3, numHashes = 8, bands = 2)
     // assumeCanonical (r15 opt): pairsWithinBuckets emits distinct
     // id_a < id_b pairs, so cc's re-canonicalization distinct shuffle +
-    // second |pairs| checkpoint is dead work (ProfileR15: min 3.65 vs
+    // second |pairs| checkpoint is dead work (same-JVM A/B: min 3.65 vs
     // 4.43 s, jobs 21 -> 19, parity checksummed; same for the three
     // sibling cc queries below and pipe_dedup_pass).
     graft.operators.GraphOps.connectedComponents(pairs, "id_a", "id_b",
@@ -1578,8 +1578,8 @@ object DedupQueries {
   private val recallProbe = 50
   private val dedupRecall: Q = (s, dir) => {
     // ONE checkpoint carries (doc_id, t, tokens) and every branch reads
-    // it (r14, ProfileLshRecall — closing the r13 degraded+retried
-    // watch item): the previous form re-derived the corpus subtree per
+    // it (closing a degraded+retried watch item): the previous form
+    // re-derived the corpus subtree per
     // branch, so the three heavy fingerprint kernels (r14 JobCensus:
     // 16.9/16.4/11.4 s task-time at sf0.1) contended to recompute the
     // same scan+union, the signature behind the in-suite<isolated
@@ -1958,7 +1958,7 @@ object DedupQueries {
     // this cut materializes one ARRAY row per doc — ~|docs| rows, not
     // ~Σ|grams| — and the 8 downstream reads re-explode from the
     // checkpoint instead of re-tokenizing (guide §1.2).
-    // Measured (ProfileR16, same-JVM alternating, parity checksummed):
+    // Measured (same-JVM alternating, parity checksummed):
     // the tok checkpoint ALONE is locally neutral (2/4 pairs — the
     // kernel replays cheaply at sf0.1, the r10 observation again); the
     // winning shape is tok + the rare-gram checkpoint now inside

@@ -444,7 +444,7 @@ object MetricsQueries {
     * codegen and the round-trip cost its three consumers ~1 s each at
     * sf0.1; the codegen'd distinct+self-join wins on constants.
     *
-    * Re-probed r15 (ProfileR15b, same-JVM alternating, parity
+    * Re-probed (same-JVM alternating, parity
     * checksummed) with the NATIVE packed_pairs kernel this time —
     * groupBy(o) + sort_array(collect_set) + codegen'd C(n,2) explode,
     * replacing BOTH the distinct and the hinted self-join (2 keyed
@@ -471,7 +471,7 @@ object MetricsQueries {
     a.join(b, Seq("o")).filter(col("p1") < col("p2")).select("p1", "p2")
   }
 
-  // Re-probed r16 (VERDICT r15 item 3; ProfileR16 same-JVM A/B, parity
+  // Re-probed (same-JVM A/B, parity
   // checksummed): feeding triangleStats an ALREADY-checkpointed coEdges
   // LOST 3/4 alternating pairs (4.44-4.75 vs 4.19-4.75 s, jobs 21->22).
   // The generator's single consumer is triangleStats' own
@@ -703,8 +703,8 @@ object MetricsQueries {
     // checkpoint + degree (6.76 s self-join over 2.39M pair rows,
     // 3.22 s distinct, 2.55 s checkpoint of 1.2M edges, 3.07 s degree
     // fold) — the fixture-graph cost every consumer of this graph pays,
-    // bake-off'd in ProfileCoE/ProfileGraph (r9/r10: shuffle_hash and
-    // dedup variants measured and rejected). The assortativity fold
+    // already bake-off'd (shuffle_hash and dedup variants measured and
+    // rejected). The assortativity fold
     // itself (two broadcast degree joins + one global aggregate) is
     // ~0.35 s. Nothing assortativity-specific is left to cut.
     //
@@ -714,12 +714,12 @@ object MetricsQueries {
     // (triangleStats' treatment; measured 3.1 -> 2.7 s at sf0.1).
     val e = coEdges(s, dir).distinct().checkpointed()
     // Materialize deg too: it feeds BOTH endpoint joins, and left lazy
-    // Spark plans the union+aggregate subtree twice (r8 VERDICT, verified
-    // via ExplainOne). It is bounded by |parts| — dimension-sized — so
+    // Spark plans the union+aggregate subtree twice (verified in the
+    // formatted plan). It is bounded by |parts| — dimension-sized — so
     // broadcast it into the mirrored-edge joins instead of paying two
     // SortMergeJoin sorts of the 2|E| list. Measured: the downstream
     // joins+fold drop to 0.35 s; the query total stays ~2.6 s because
-    // the coEdges fixture generation dominates (ProfileGraph r9).
+    // the coEdges fixture generation dominates.
     val deg = e.select(col("p1").as("v")).union(e.select(col("p2").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
       .checkpointed()
@@ -832,7 +832,7 @@ object MetricsQueries {
     val m = e.count()
     val dec = s"CAST($m AS DECIMAL(38,0))"
     // ONE edge×label pass feeds BOTH the intra-community edge count and
-    // the community degree mass (r15 opt, ProfileR15: min 5.83 vs
+    // the community degree mass (same-JVM A/B: min 5.83 vs
     // 6.83 s, jobs 31 -> 27, parity checksummed). The former shape ran
     // a separate per-node degree aggregate (one |2E| shuffle on v) and
     // joined it against labels a THIRD time; but Σ_{v∈c} deg(v) is just
@@ -1138,8 +1138,8 @@ object MetricsQueries {
     // wired): generating pairs with the native packed_pairs kernel
     // (collect per-order baskets, one codegen'd C(n,2) packed-long
     // array per basket, built-in explode, single-long-key count) wins
-    // the ISOLATED pair stage (0.77 s vs 1.17 s hinted self-join,
-    // ProfileA19b) — but LOSES the full query every way tried, same
+    // the ISOLATED pair stage (0.77 s vs 1.17 s hinted self-join) —
+    // but LOSES the full query every way tried, same
     // JVM, alternating reps: collect_set-direct base 2.3-2.8 s and
     // distinct-base + lazy collect_list hybrid 3.3-5.1 s vs 1.8-2.8 s
     // for this plan. The basket materialization is the cost: a

@@ -705,7 +705,7 @@ object RelationalQueries {
   /** W6: gap-based sessionization — events of a user belong to one
     * session while consecutive gaps stay under 30 minutes; the window
     * closes 30 minutes after the last event. Batch form is
-    * gaps-and-islands (r13, ProfileW6 same-JVM A/B): lag-diff >= gap
+    * gaps-and-islands (chosen by same-JVM A/B): lag-diff >= gap
     * flags a session start, a running sum numbers islands, one hash
     * aggregate per (user, island) — lag, cumsum, AND the aggregate all
     * cluster on user_id (partitioning on a grouping-key subset
@@ -805,8 +805,8 @@ object RelationalQueries {
     * all combinations; the oracle replays the identical prior-rows-max
     * island formulation in SQL. Integer-only arithmetic end to end.
     *
-    * Plan audited, CLOSED as machinery-bound (r13 JobCensus +
-    * ExplainOne): ONE hash exchange on okey; the sort, both Window
+    * Plan audited, CLOSED as machinery-bound (JobCensus + the
+    * formatted plan): ONE hash exchange on okey; the sort, both Window
     * operators (frames differ, so they cannot legally merge — the
     * island id depends on the flag the first window produces), and
     * both aggregate phases are all exchange-free (partitioning on a

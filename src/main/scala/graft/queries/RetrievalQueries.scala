@@ -188,7 +188,7 @@ object RetrievalQueries {
     * ONE groupBy emits both and is checkpointed; the ranked⋈rel join
     * then reads the tiny checkpointed table instead of re-running the
     * explode+groupBy subtree, and the ideal branch reads it too. Job
-    * census (ProfileNdcg, sf0.1 same JVM): the standing form launched
+    * census (sf0.1, same JVM): the standing form launched
     * 19 jobs, THREE of them 0.7-0.8 s — the rel subtree recomputed per
     * consumer; folded = 18 jobs, none over 0.5 s. A/B alternating
     * GC-separated reps: standing min 2.62 / med 3.07 s vs folded min

@@ -230,7 +230,7 @@ object ScaleQueries {
     // shuffle_hash: both distinct hash-sets are fact-scaled; the exact
     // intersection is the test-scale calibration truth but its plan
     // still must be the keyed one (Spark auto-broadcast one side at
-    // sf0.1 — the a19 class, r10 AuditBroadcasts re-run).
+    // sf0.1 — the a19 class).
     val exact = aKeys.select(SketchOps.portableHash(col("key")).as("h")).distinct()
       .join(bKeys.select(SketchOps.portableHash(col("key")).as("h")).distinct()
         .hint("shuffle_hash"), "h")
@@ -887,7 +887,7 @@ object ScaleQueries {
     * normalize, all native codegen'd regexp_replace — no boxing),
     * fully parallel across the fanned scan and executed exactly ONCE:
     * the fingerprint subtree does NOT re-run per downstream consumer
-    * (the AuditRecompute suspicion — every later stage reads 5k
+    * (the repeated-kernel suspicion — every later stage reads 5k
     * id-rows at 0.07 s). Wall = kernel/32 + six small stages × the
     * host's per-job floor; the duck-ratio residue is java.util.regex
     * throughput vs DuckDB's RE2-class engine on multi-KB documents,

@@ -364,7 +364,7 @@ object SignalQueries {
     * thresholds ride broadcasts; the clamped mean is an exact
     * nonneg integer division reported in ppm.
     *
-    * Bake-off CLOSED (r13, ProfileA24 same-JVM A/B): folding both
+    * Bake-off CLOSED (same-JVM A/B): folding both
     * order statistics into ONE threshold pass (filter to the two
     * target ranks, conditional-min to a single (lo, hi) row, one
     * broadcast) measured neutral-to-worse — median 1.20 vs 1.24 s,
@@ -759,8 +759,7 @@ object SignalQueries {
     * onto the ×(k+1) EXPANDED set, with a full sort per phase — measured
     * 11.3 s vs 2 s at sf0.1 for the identical result.
     *
-    * Bake-off, CLOSED (r15, ProfileA31 on ProbeHarness — directive 4
-    * re-probe): a ONE-scan fused variant was measured — all min/max
+    * Bake-off, CLOSED (same-JVM A/B): a ONE-scan fused variant was measured — all min/max
     * buffers made primitive (orderkey BIGINT, quantity floor-cents,
     * shipdate DATE, the 1-char flag via its code point; every encoding
     * monotone, so renderings commute) so countDistincts AND min/max

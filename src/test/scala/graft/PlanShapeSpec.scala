@@ -17,28 +17,12 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   /** Every BroadcastExchange subtree of the named query's physical plan,
-    * as strings — descending into AdaptiveSparkPlanExec (a LEAF node
-    * under AQE; a children-only walk sees nothing, the r10
-    * AuditBroadcasts bug). For pins of the form "X must never be the
-    * broadcast build side". */
+    * as strings (see PlanWalk). For pins of the form "X must never be
+    * the broadcast build side". */
   private def broadcastSubtrees(name: String): Seq[String] = {
     graft.functions.TextFns.registerAll(spark)
-    val root = SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.executedPlan
-    val out = scala.collection.mutable.Buffer[String]()
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      p match {
-        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-          out += b.child.toString
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        case _ =>
-      }
-      p.children.foreach(walk)
-      p.subqueries.foreach(walk)
-    }
-    walk(root)
-    out.toSeq
+    PlanWalk.broadcastSubtrees(
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
   }
 
   test("ANN broadcasts carry the bounded query batch, never the candidate corpus") {
@@ -282,7 +266,7 @@ class PlanShapeSpec extends AnyFunSuite {
       s"j12 regressed to a range product:\n${p.take(600)}")
     // Both bin-join sides are fact-scaled; Spark's post-explode size
     // under-count auto-broadcast one at sf0.1 (the a19 class, caught by
-    // the AQE-descending AuditBroadcasts re-run) — the hinted plan must
+    // the AQE-descending broadcast audit) — the hinted plan must
     // stay a shuffled hash join.
     assert(p.contains("ShuffledHashJoin"),
       s"j12 lost its shuffle_hash bin join:\n${p.take(600)}")
@@ -641,7 +625,7 @@ class PlanShapeSpec extends AnyFunSuite {
   // triangleStats checkpoints its input eagerly, so the fixture join
   // never appears in g2's final plan string — the a19 pin above covers
   // the shape; the fixture's hint is asserted by its measured comment
-  // and the (AQE-descending, r10-fixed) AuditBroadcasts run.)
+  // and the AQE-descending broadcast audit in PlanAuditSpec.)
 
   test("triangle census: keyed equi-joins only — no cartesian, no nested loop") {
     val p = plan("g2_triangles")
@@ -883,7 +867,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "in the final plan (r14 restructure)") {
     // ONE checkpoint of (doc_id, t, tokens) feeds the truth shingles,
     // the minhash lanes, AND the simhash branch — the r14 fix for the
-    // two-round degraded+retried contention signature (ProfileLshRecall:
+    // two-round degraded+retried contention signature (same-JVM A/B:
     // every alternating rep faster, jobs 27 -> 20). If a branch
     // re-inlines the corpus subtree, a parquet documents scan reappears
     // in the final plan next to the checkpoint RDD scans.
