@@ -1,8 +1,11 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.Checkpoints.CheckpointSyntax
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -159,15 +162,25 @@ object FileStream {
   def bucketExpr(keys: Seq[String], nBuckets: Int): org.apache.spark.sql.Column =
     pmod(hash(keys.map(col): _*), lit(nBuckets))
 
+  /** Underscore-prefixed file under the base holding the bucket count it
+    * was written with. Parquet reads skip `_`-prefixed names, and
+    * compaction only rewrites the bucket directories, so it stays put. */
+  val BucketCountFile = "_gbucket_count"
+
   /** Materialize an upsert base in the bucketed layout streamingUpsert
     * requires: parquet files under `basePath/gbucket=K`, K = murmur3(keys)
-    * mod nBuckets. Pick nBuckets so one bucket's data is a comfortable rewrite
-    * unit (e.g. 100 TB / 4096 buckets ≈ 25 GB per bucket). */
+    * mod nBuckets, plus the bucket count in `BucketCountFile`. Pick
+    * nBuckets so one bucket's data is a comfortable rewrite unit (e.g.
+    * 100 TB / 4096 buckets ≈ 25 GB per bucket). */
   def writeBucketedBase(
       df: DataFrame, basePath: String, keys: Seq[String], nBuckets: Int): Unit = {
     require(!df.columns.contains(BucketCol), s"input already has a $BucketCol column")
     df.withColumn(BucketCol, bucketExpr(keys, nBuckets))
       .write.partitionBy(BucketCol).parquet(basePath)
+    val countP = new Path(basePath, BucketCountFile)
+    val out = countP.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .create(countP, true)
+    try out.write(nBuckets.toString.getBytes(UTF_8)) finally out.close()
   }
 
   /** CDC-style streaming upsert: each micro-batch MERGEs into a
@@ -181,19 +194,50 @@ object FileStream {
     *
     * Scale shape: the base lives as `gbucket=K` hash partitions (see
     * writeBucketedBase), and a micro-batch only ever touches the buckets
-    * its keys hash into — partition pruning keeps untouched buckets
-    * UNREAD, and the swap below keeps them UNWRITTEN. Per-batch cost is
+    * its keys hash into — it lists and reads only those directories, and
+    * the swap below keeps every other one UNWRITTEN. Per-batch cost is
     * O(touched buckets + batch), not O(base): a trickle of CDC rows
     * against a 100 TB base rewrites a few ~25 GB buckets, never the
-    * table. (The earlier design rewrote the whole base every batch.)
+    * table.
     *
     * `nBuckets` must match the value the base was written with — it is
-    * the same hash both times, asserted cheaply against the batch's own
-    * buckets each merge. */
+    * the same hash both times, and a mismatch would insert an existing
+    * key a second time into the wrong bucket. It is checked once, here,
+    * against the count writeBucketedBase recorded, so the base must come
+    * from writeBucketedBase. */
   def streamingUpsert(
       updates: DataFrame, basePath: String, keys: Seq[String],
       updateCols: Seq[String], orderCol: String,
-      checkpoint: String, nBuckets: Int = 256): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpoint: String, nBuckets: Int = 256): org.apache.spark.sql.streaming.StreamingQuery = {
+    val baseP = new Path(basePath)
+    val fs = baseP.getFileSystem(updates.sparkSession.sparkContext.hadoopConfiguration)
+    val countP = new Path(baseP, BucketCountFile)
+    require(fs.exists(countP), s"$basePath has no $BucketCountFile; write it with writeBucketedBase")
+    val in = fs.open(countP)
+    val written = try new String(in.readAllBytes(), UTF_8).trim.toInt finally in.close()
+    require(written == nBuckets,
+      s"$basePath was written with nBuckets = $written but is upserted with " +
+        s"nBuckets = $nBuckets; keys would hash to the wrong buckets")
+    def bucketDir(b: Int) = new Path(baseP, s"$BucketCol=$b")
+    def backup(b: Int) = new Path(baseP, s".$BucketCol=$b.old")
+    // A crash mid-swap (below, or in IoOps.compactParquet, which parks
+    // under the same name) can leave a bucket parked at its backup with no
+    // live directory. Move every such bucket back before any batch reads:
+    // otherwise a batch touching it would merge without the bucket's rows
+    // and its swap would then delete the only copy of them. A failed batch
+    // stops the query, so a retried batch always comes through here.
+    val names = fs.listStatus(baseP).map(_.getPath.getName).toSet
+    val Parked = raw"\.$BucketCol=(\d+)\.old".r
+    val parked = names.toSeq.collect { case Parked(b) if !names(s"$BucketCol=$b") => b.toInt }
+    parked.foreach(b => require(fs.rename(backup(b), bucketDir(b)), s"cannot restore ${backup(b)}"))
+    // The schema comes from one bucket directory, once per query: a read
+    // of basePath itself would list every bucket (a Spark job of nBuckets
+    // tasks above the parallel-discovery threshold) on every batch. The
+    // merge writes the base's own columns back, so it cannot drift.
+    val anyBucket = names.find(_.startsWith(s"$BucketCol=")).map(new Path(baseP, _))
+      .orElse(parked.headOption.map(bucketDir)).getOrElse(baseP)
+    val baseSchema = updates.sparkSession.read.option("basePath", basePath)
+      .parquet(anyBucket.toString).schema
     updates.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
@@ -209,10 +253,13 @@ object FileStream {
         // Bounded collect: at most nBuckets ints — bucket IDS, never rows.
         val touched = keyed.select(BucketCol).distinct()
           .collect().map(_.getInt(0)).sorted
-        // Partition pruning on gbucket means ONLY the touched directories
-        // are listed and read; .explain shows PartitionFilters on gbucket.
-        val baseSlice = spark.read.parquet(basePath)
-          .where(col(BucketCol).isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
+        // Only the touched bucket directories that exist are listed and
+        // read; the schema is the one resolved at query start, so a batch
+        // of keys new to the base reads an empty slice of the same shape.
+        val dirs = touched.map(bucketDir).filter(fs.exists).map(_.toString)
+        val baseSlice =
+          if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), baseSchema)
+          else spark.read.schema(baseSchema).option("basePath", basePath).parquet(dirs.toIndexedSeq: _*)
         // gbucket rides as an updateCol so inserted rows land in their
         // hash bucket; for matched rows update and base agree by
         // construction (same keys -> same hash).
@@ -226,18 +273,17 @@ object FileStream {
         // on; rename/delete signal failure by RETURNING FALSE, and a
         // checked failure throws -> the batch fails -> the streaming
         // engine retries it. A crash mid-swap leaves each bucket either
-        // old, new, or parked at its `.old` backup — per-bucket
-        // recoverable (plain file stores have no atomic multi-dir swap; a
+        // old, new, or parked at its `.old` backup; the restarted query
+        // moves a parked bucket back before its first batch reads, so
+        // every bucket is recoverable (plain file stores have no atomic multi-dir swap; a
         // table format is the transactional answer, this is the best a
         // bare directory layout can do).
-        val baseP = new org.apache.hadoop.fs.Path(basePath)
-        val fs = baseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val tmpP = new org.apache.hadoop.fs.Path(baseP.getParent, "." + baseP.getName + ".next")
+        val tmpP = new Path(baseP.getParent, "." + baseP.getName + ".next")
         merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmpP.toString)
         touched.foreach { b =>
-          val dir = new org.apache.hadoop.fs.Path(baseP, s"$BucketCol=$b")
-          val src = new org.apache.hadoop.fs.Path(tmpP, s"$BucketCol=$b")
-          val bak = new org.apache.hadoop.fs.Path(baseP, s".$BucketCol=$b.old")
+          val dir = bucketDir(b)
+          val src = new Path(tmpP, s"$BucketCol=$b")
+          val bak = backup(b)
           if (fs.exists(bak)) require(fs.delete(bak, true), s"cannot clear $bak")
           if (fs.exists(dir)) require(fs.rename(dir, bak), s"cannot park $dir at $bak")
           require(fs.rename(src, dir), s"cannot move $src to $dir")
@@ -246,6 +292,7 @@ object FileStream {
         ()
       }
       .start()
+  }
 
   /** Event-time windowed counts with a watermark — the streaming-native
     * shape of the reference's per-stage success/fail counters (§2.4 A5).

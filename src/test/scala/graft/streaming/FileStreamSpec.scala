@@ -253,35 +253,36 @@ class FileStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming upsert: a batch touching 1 of N buckets rewrites ONLY that bucket's directory") {
+  /** path -> (size, MD5) of every visible parquet file under `base`. */
+  private def snapshot(base: String): Map[String, (Long, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(base))
+      .filter(f => f.getName.endsWith(".parquet") && !f.getPath.contains("/."))
+      .map { f =>
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        val md = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+        f.getPath -> (f.length(), md.map("%02x".format(_)).mkString)
+      }.toMap
+  }
+
+  /** A base of 400 keys (`v<k>`, seq 0) spread over all 8 buckets, at
+    * `root/base` under a fresh temp root; returns (root, base). */
+  private def base400(prefix: String): (String, String) = {
+    import spark.implicits._
+    val root = Files.createTempDirectory(prefix).toString
+    val base = s"$root/base"
+    FileStream.writeBucketedBase(
+      (1 to 400).map(k => (k, s"v$k", 0L)).toDF("k", "v", "seq"),
+      base, Seq("k"), nBuckets = 8)
+    (root, base)
+  }
+
+  /** Streams one batch setting key 7 to "updated" into `base`. */
+  private def updateKey7(root: String, base: String, nB: Int): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("supsert_pruned").toString
-    val base = s"$root/base"
-    val nB = 8
-    // 400 keys spread over all 8 buckets
-    FileStream.writeBucketedBase(
-      (1 to 400).map(k => (k, s"v$k", 0L)).toDF("k", "v", "seq"),
-      base, Seq("k"), nBuckets = nB)
-
-    def snapshot(): Map[String, (Long, String)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(base))
-        .filter(f => f.getName.endsWith(".parquet") && !f.getPath.contains("/."))
-        .map { f =>
-          val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-          val md = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-          f.getPath -> (f.length(), md.map("%02x".format(_)).mkString)
-        }.toMap
-    }
-    val before = snapshot()
-    val touchedBucket = spark.range(1).select(
-      org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.hash(org.apache.spark.sql.functions.lit(7)),
-        org.apache.spark.sql.functions.lit(nB))).collect()(0).getInt(0)
-
     val mem = MemoryStream[(Int, String, Long)]
     val q = FileStream.streamingUpsert(
       mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
@@ -290,7 +291,20 @@ class FileStreamSpec extends AnyFunSuite {
       mem.addData((7, "updated", 1L)) // single key -> single bucket
       q.processAllAvailable()
     } finally q.stop()
-    val after = snapshot()
+  }
+
+  test("streaming upsert: a batch touching 1 of N buckets rewrites ONLY that bucket's directory") {
+    import spark.implicits._
+    val nB = 8
+    val (root, base) = base400("supsert_pruned")
+    val before = snapshot(base)
+    val touchedBucket = spark.range(1).select(
+      org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.hash(org.apache.spark.sql.functions.lit(7)),
+        org.apache.spark.sql.functions.lit(nB))).collect()(0).getInt(0)
+
+    updateKey7(root, base, nB)
+    val after = snapshot(base)
 
     // every file OUTSIDE the touched bucket is byte-identical and still present
     val untouchedBefore = before.filterNot(_._1.contains(s"/gbucket=$touchedBucket/"))
@@ -304,6 +318,151 @@ class FileStreamSpec extends AnyFunSuite {
     // and the merge is correct
     val rows = spark.read.parquet(base).select("k", "v").as[(Int, String)].collect().toMap
     assert(rows(7) == "updated" && rows.size == 400 && rows(8) == "v8")
+  }
+
+  /** Bucket of each Int key under `FileStream.bucketExpr`. */
+  private def bucketsOf(keys: Seq[Int], nB: Int): Map[Int, Int] = {
+    import spark.implicits._
+    keys.toDF("k").select(col("k"), FileStream.bucketExpr(Seq("k"), nB))
+      .as[(Int, Int)].collect().toMap
+  }
+
+  test("streaming upsert: a bucket left parked at its backup by a crashed swap is restored, not lost") {
+    import spark.implicits._
+    val nB = 8
+    val (root, base) = base400("supsert_crash")
+    // The state a crash leaves between the swap's park and move steps:
+    // key 7's bucket, and one the next batch does not touch, sit only at
+    // their hidden backups.
+    val b = bucketsOf(Seq(7), nB)(7)
+    for (p <- Seq(b, (b + 1) % nB))
+      Files.move(java.nio.file.Paths.get(base, s"gbucket=$p"),
+        java.nio.file.Paths.get(base, s".gbucket=$p.old"))
+    updateKey7(root, base, nB)
+    val rows = spark.read.parquet(base).select("k", "v").as[(Int, String)].collect()
+    val n = rows.length
+    assert(n == 400, "rows of the parked bucket were lost")
+    val byKey = rows.toMap
+    assert(byKey.size == 400 && byKey(7) == "updated" && byKey(8) == "v8")
+  }
+
+  test("streaming upsert: a base written with 8 buckets refuses an upsert with 16") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val (root, base) = base400("supsert_nbuckets")
+    // A key whose bucket under 16 does not exist under 8: unchecked, its
+    // update would land beside the stored row instead of replacing it.
+    val k = bucketsOf(1 to 400, 16).collectFirst { case (k, b) if b >= 8 => k }.get
+    val mem = MemoryStream[(Int, String, Long)]
+    mem.addData((k, "updated", 1L))
+    val err = intercept[IllegalArgumentException] {
+      val q = FileStream.streamingUpsert(
+        mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
+        orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = 16)
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(err.getMessage.contains("nBuckets = 8") && err.getMessage.contains("nBuckets = 16"),
+      err.getMessage)
+    val rows = spark.read.parquet(base).select("k", "v").as[(Int, String)].collect().toMap
+    assert(rows.size == 400 && rows(k) == s"v$k")
+    // with the recorded count gone, the count cannot be checked: refused too
+    Files.delete(java.nio.file.Paths.get(base, FileStream.BucketCountFile))
+    val noCount = intercept[IllegalArgumentException](FileStream.streamingUpsert(
+      mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
+      orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = 8))
+    assert(noCount.getMessage.contains(FileStream.BucketCountFile), noCount.getMessage)
+  }
+
+  test("streaming upsert: a batch whose keys hash only to buckets absent from the base inserts them") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val root = Files.createTempDirectory("supsert_newbuckets").toString
+    val base = s"$root/base"
+    val nB = 8
+    val bucket = bucketsOf(1 to 1000, nB)
+    val baseKeys = (1 to 400).filter(bucket(_) < 4)
+    val newKeys = (401 to 1000).filter(bucket(_) >= 4).take(5)
+    FileStream.writeBucketedBase(
+      baseKeys.map(k => (k, s"v$k", 0L)).toDF("k", "v", "seq"),
+      base, Seq("k"), nBuckets = nB)
+    val before = snapshot(base)
+    val mem = MemoryStream[(Int, String, Long)]
+    val q = FileStream.streamingUpsert(
+      mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
+      orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = nB)
+    try {
+      mem.addData(newKeys.map(k => (k, s"new$k", 1L)): _*)
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, q.exception.toString)
+    } finally q.stop()
+    val after = snapshot(base)
+    assert(after.view.filterKeys(before.contains).toMap == before,
+      "the base's existing files must be byte-identical after the batch")
+    val rows = spark.read.parquet(base).select("k", "v", "gbucket")
+      .as[(Int, String, Int)].collect()
+    assert(rows.length == baseKeys.size + newKeys.size)
+    val inserted = rows.filter(r => newKeys.contains(r._1)).toSet
+    assert(inserted == newKeys.map(k => (k, s"new$k", bucket(k))).toSet)
+    assert(rows.filterNot(r => newKeys.contains(r._1)).toSet ==
+      baseKeys.map(k => (k, s"v$k", bucket(k))).toSet)
+  }
+
+  test("streaming upsert: a one-key batch on a 64-bucket base runs no stage as wide as the base") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val root = Files.createTempDirectory("supsert_listing").toString
+    val base = s"$root/base"
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32):
+    // a listing of the whole base would run as one task per bucket
+    val nB = 64
+    FileStream.writeBucketedBase(
+      (1 to 640).map(k => (k, s"v$k", 0L)).toDF("k", "v", "seq"),
+      base, Seq("k"), nBuckets = nB)
+    val mem = MemoryStream[(Int, String, Long)]
+    val q = FileStream.streamingUpsert(
+      mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
+      orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = nB)
+    // The listener bus delivers events in order, so stages seen between
+    // two marked jobs are exactly the stages run between them.
+    val marker = "graft.test.listingScope"
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var recording = false
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(marker))) match {
+          case Some("start") => recording = true
+          case Some("end") => recording = false; done.countDown()
+          case _ =>
+        }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (recording) widths.add(s.stageInfo.numTasks)
+    }
+    val sc = spark.sparkContext
+    def markedJob(phase: String): Unit = {
+      sc.setLocalProperty(marker, phase)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      markedJob("start")
+      try {
+        mem.addData((7, "updated", 1L))
+        q.processAllAvailable()
+      } finally q.stop()
+      markedJob("end")
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = widths.asScala.toSeq
+    assert(seen.size > 1, s"the batch ran no stages: $seen")
+    assert(seen.forall(_ < nB), s"a stage as wide as the base ran: task counts $seen")
+    val rows = spark.read.parquet(base).select("k", "v").as[(Int, String)].collect().toMap
+    assert(rows.size == 640 && rows(7) == "updated")
   }
 
   test("streaming upsert + compaction: accreted small files compact back to the target bound, layout intact") {
