@@ -17,8 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the steady-state cost (r2 recorded 716.7 s for a rerun-measured 157.7 s
   * total). Every query therefore gets one untimed warm-up run (codegen +
   * C2 + file-cache warm) followed by `RUNS` timed runs; the reported
-  * number is the median. All individual runs are kept in the JSON under
-  * "runs" for noise diagnosis. The line is also written to
+  * number is the median. The warm-up absorbs codegen only because
+  * [[Sessions.builder]] sizes Spark's generated-class cache for a query's
+  * working set and keeps stage ids out of class names; `warm_compiles`
+  * counts the classes the timed runs still compiled (0 when it holds),
+  * with the nonzero queries in `warm_compiles_by_query` in bench.json.
+  * All individual runs are kept in the JSON under "runs" for noise
+  * diagnosis. The line is also written to
   * target/bench.json and ./bench.json so the driver has a copy free of
   * sbt's [info] stdout prefix.
   *
@@ -181,6 +186,14 @@ object Bench {
     // a measurement (a query that fails fast would LOWER the total), so
     // these are dropped from every timed field and named under `failed`.
     val failedNames = scala.collection.mutable.LinkedHashSet[String]()
+    // Generated classes compiled during a query's kept block of timed
+    // runs (after its warm-up). Spark counts every class it compiles in
+    // one JVM-wide histogram; a warm run that compiles anything pays
+    // codegen inside its timing.
+    def compiledClasses(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+    val warmCompiles = scala.collection.mutable.Map[String, Long]()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       // stripRootSort removes the oracle-determinism orderBy every
@@ -282,26 +295,29 @@ object Bench {
     val retriedNames = scala.collection.mutable.Buffer[String]()
     val resultsPass1 = qs.map { name =>
       spark.sparkContext.setJobDescription(s"bench:$name")
-      def attempt(): (Double, Seq[Double], Double) = {
+      def attempt(): (Double, Seq[Double], Double, Long) = {
         cooldown()
         val tk0 = taskMsCounter.get()
         val warm = once(name)
+        val cg0 = compiledClasses()
         val timed = Seq.fill(Runs)(once(name)).sorted
-        (warm, timed, (taskMsCounter.get() - tk0) / 1e3 / (Runs + 1))
+        (warm, timed, (taskMsCounter.get() - tk0) / 1e3 / (Runs + 1),
+          compiledClasses() - cg0)
       }
-      var (warm, timed, taskSec) = attempt()
+      var (warm, timed, taskSec, compiles) = attempt()
       var median = timed(timed.size / 2)
       var retries = 0
       while (warm < median - 0.05 && retries < 2 && retryBudget > 0) {
         retries += 1; retryBudget -= 1
-        val (w2, t2, k2) = attempt()
+        val (w2, t2, k2, c2) = attempt()
         val m2 = t2(t2.size / 2)
-        if (m2 < median) { warm = w2; timed = t2; median = m2; taskSec = k2 }
+        if (m2 < median) { warm = w2; timed = t2; median = m2; taskSec = k2; compiles = c2 }
       }
       if (retries > 0) retriedNames += name
       val retryNote = if (retries > 0) s" retries=$retries" else ""
       System.err.println(
-        f"[bench] $name%-22s warm=$warm%7.2f runs=${timed.map(t => f"$t%.2f").mkString(",")} median=$median%7.2f task=$taskSec%6.2f$retryNote")
+        f"[bench] $name%-22s warm=$warm%7.2f runs=${timed.map(t => f"$t%.2f").mkString(",")} median=$median%7.2f task=$taskSec%6.2f compiles=$compiles$retryNote")
+      warmCompiles(name) = compiles
       (name, median, warm +: timed, taskSec)
     }
     // Split-visit re-timing (r11, closing the residual leak): UNIFORM
@@ -416,6 +432,12 @@ object Bench {
     val taskJson = results.map { case (k, _, _, tk) =>
       "\"" + k + "\":" + f"$tk%.3f"
     }.mkString("{", ",", "}")
+    // Warm-compile additions: the total on both lines, the nonzero
+    // queries (most compiles first) in bench.json only.
+    val compiling = results.map(r => r._1 -> warmCompiles(r._1)).filter(_._2 > 0)
+    val warmCompilesTotal = compiling.map(_._2).sum
+    val warmCompilesJson = compiling.sortBy(-_._2)
+      .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
     // skipped_tables rides every emitted line: a silently-missing view
     // would otherwise show up only as N fast-failing queries (round-7
     // advice — artifact-only automation never sees stderr).
@@ -458,7 +480,7 @@ object Bench {
     val revisedJson = boundedListJson(revisedNames.sortBy(-_._2).map(_._1).toSeq, 8)
     val failedJson = boundedListJson(failedNames.toSeq, 12)
     def compactOf(rs: Seq[(String, Double, Seq[Double], Double)]) =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"omitted":${results.size - rs.size},"warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs%.1f,"sql_floor_pre_ms":$sqlFloorPre%.1f,"sql_floor_post_ms":$sqlFloorPost%.1f,"task_total":$taskTotal%.1f,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson,"isolated":$isolatedJsonCompact$skippedField,"queries":${qJson(rs)(v => f"$v%.3f")},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"omitted":${results.size - rs.size},"warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs%.1f,"sql_floor_pre_ms":$sqlFloorPre%.1f,"sql_floor_post_ms":$sqlFloorPost%.1f,"task_total":$taskTotal%.1f,"warm_compiles":$warmCompilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson,"isolated":$isolatedJsonCompact$skippedField,"queries":${qJson(rs)(v => f"$v%.3f")},"sf":"$sfDir"}"""
     // Greedy: keep dropping the cheapest query until the line fits ~1850
     // chars (2000-char driver window minus sbt's trailing [success] line).
     val byCost = results.sortBy(-_._2)
@@ -469,7 +491,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"warm_compiles":$warmCompilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson,"warm_compiles_by_query":$warmCompilesJson}"""
     spark.sparkContext.removeSparkListener(taskListener)
     (compact, full)
   }

@@ -93,11 +93,37 @@ object Tables {
   }
 }
 
-/** One place for session tuning shared by Verify / Bench / tests. */
+/** One place for session tuning shared by Verify / Bench / tests.
+  *
+  * Two codegen settings make a warm run reuse the classes its first run
+  * compiled instead of compiling them again ([[CodegenCacheEntries]] and
+  * `useIdInClassName`, below). Deployers who embed the library in their
+  * own session must set both themselves, as for `cleanCheckpoints`. */
 object Sessions {
   private val defaultCpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
+
+  /** Size of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100).
+    *
+    * Invariant: the cache holds the working set of one corpus pipeline
+    * pass, and of any one registry query, with room to spare, so a warm
+    * run finds every class its previous run compiled.
+    *
+    * Reason: Spark keys the cache by (context classloader, source). In
+    * local mode the driver threads and the task threads have different
+    * context loaders, so a whole-stage class is compiled and cached
+    * twice: once when the driver checks that it compiles, once in the
+    * first task. A corpus pass compiles 126 distinct class bodies into
+    * 176 entries; with 100 the LRU evicted each entry before its next
+    * use, and a warm pass compiled ≈230 classes again (4–6 s of a
+    * 12–13 s pass). 512 is ≈3× that working set; the largest registry
+    * query (`dedup_cc_best`) adds 83 entries of its own.
+    *
+    * It is a static conf, read once per JVM when the code generator is
+    * first used: it takes effect only if this session is the first. */
+  private[graft] val CodegenCacheEntries = 512
 
   def builder(master: String = s"local[$defaultCpus]"): SparkSession.Builder = {
     val cpus = defaultCpus
@@ -130,5 +156,14 @@ object Sessions {
       // the library in their own session must set this themselves).
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Invariant: a generated class's source holds no per-plan number,
+      // so one pipeline compiles to the same text on every run. Reason:
+      // the cache compares source text, and by default the whole-stage
+      // class name carries its codegenStageId, which AQE renumbers from
+      // run to run as it re-plans (stage 19 in one pass is stage 21 in
+      // the next): the same body then misses the cache. The id stays in
+      // the plan's `*(N)` markers and in the generated code's comments.
+      .config("spark.sql.codegen.useIdInClassName", "false")
   }
 }

@@ -275,7 +275,13 @@ object RelationalQueries {
       |ORDER BY o_orderkey""".stripMargin
 
   /** J2 ★: positional zip join — row-aligned pairing of two ordered
-    * projections (crawler/metadata.py:192-195). */
+    * projections (crawler/metadata.py:192-195).
+    *
+    * region has five rows by the TPC-H contract, so it is broadcast by
+    * hint. Left to AQE, both sides fit its broadcast threshold and the
+    * side whose shuffle stage finished first became the build side, so
+    * the plan and its generated classes flipped from run to run and a
+    * warm run could compile again. */
   private val j2: Q = (s, dir) => {
     val wa = Window.orderBy("n_name")
     val wb = Window.orderBy("r_name")
@@ -283,7 +289,7 @@ object RelationalQueries {
       .withColumn("rn", row_number().over(wa))
     val b = t(s, dir, "region").select(col("r_name"))
       .withColumn("rn", row_number().over(wb))
-    a.join(b, Seq("rn"), "inner").select(col("rn"), col("n_name"), col("r_name"))
+    a.join(broadcast(b), Seq("rn"), "inner").select(col("rn"), col("n_name"), col("r_name"))
       .orderBy("rn")
   }
   private val j2Sql =

@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions.{lit, raise_error}
+import org.apache.spark.sql.functions.{col, lit, raise_error}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A query that throws is not a timing: Bench leaves it out of every
-  * timed field and names it under `failed`, on both emitted lines. */
+  * timed field and names it under `failed`, on both emitted lines. A
+  * timed run that compiles generated classes is counted under
+  * `warm_compiles`. */
 class BenchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -21,5 +23,22 @@ class BenchSpec extends AnyFunSuite {
       assert(math.abs(value - ok) < 1e-3, s"total $value is not the ok query's $ok")
     }
     assert(compact.contains(""""n":1,"""), compact)
+  }
+
+  test("warm_compiles counts classes compiled by timed runs, per query") {
+    // `fresh` inlines a new literal into its generated code on every run,
+    // so each of its 3 timed runs compiles; `ok` compiles only in its
+    // warm-up.
+    val n = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
+    val (compact, full) = Bench.run(spark, "unused", Seq("ok", "fresh"), Nil) {
+      case "ok" => spark.range(1000).toDF("id")
+      case _ => spark.range(1000).select((col("id") * lit(n.incrementAndGet())).as("x"))
+    }
+    def total(line: String) =
+      """"warm_compiles":([0-9]+)""".r.findFirstMatchIn(line).get.group(1).toLong
+    assert(total(compact) >= 3, compact)
+    assert(total(full) == total(compact), full)
+    val byQuery = """"warm_compiles_by_query":\{([^}]*)\}""".r.findFirstMatchIn(full).get.group(1)
+    assert(byQuery == s""""fresh":${total(full)}""", full)
   }
 }
