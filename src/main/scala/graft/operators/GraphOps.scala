@@ -37,9 +37,10 @@ import org.apache.spark.sql.functions._
 object GraphOps {
 
   /** Connected components of the undirected graph given by `edges0`
-    * (two integral columns; by default loops and duplicate/reversed
-    * edges are tolerated and canonicalized away and null endpoints
-    * dropped).
+    * (two integral columns). With the default `assumeCanonical = false`,
+    * loops and duplicate/reversed edges are tolerated and canonicalized
+    * away and null endpoints dropped; with `true` they are out of
+    * contract (below).
     *
     * `assumeCanonical = true` skips that canonicalization (one |pairs|
     * distinct shuffle plus a second |pairs| checkpoint — the r15
@@ -92,8 +93,9 @@ object GraphOps {
 
     // assumeCanonical (r15 optimization round): the caller asserts the
     // input is ALREADY canonical — distinct pairs with src < dst
-    // strictly, no nulls. Every LSH-style pair generator in DedupOps
-    // ends in pairsWithinBuckets, whose output is exactly that shape
+    // strictly, no nulls, integral ids (the scaladoc's contract). Every
+    // LSH-style pair generator in DedupOps ends in pairsWithinBuckets,
+    // whose output is exactly that shape
     // (sorted bucket member lists emit id_a < id_b, then a distinct) —
     // so re-canonicalizing here paid one full |pairs| distinct shuffle
     // plus a SECOND |pairs| checkpoint materialization per cc call for
@@ -199,7 +201,10 @@ object GraphOps {
     // component min): v's component is u, centers and isolated nodes
     // map to themselves.
     //
-    // assumeCanonical output (r15 opt): with no self-loops possible,
+    // assumeCanonical output (r15 opt), valid only under the scaladoc's
+    // contract — distinct, non-null, integral ids with src < dst in their
+    // long cast, so each star's center is its component minimum: with no
+    // self-loops possible,
     // every input node carries >= 1 real edge, so the fixpoint star
     // forest ITSELF spans the node universe — children are exactly the
     // v column (each exactly once, the forest property the convergence
@@ -350,8 +355,10 @@ object GraphOps {
     * single-read-round measurement (per-round checkpoints HURT there).
     *
     * `assumeCanonical = true` carries [[connectedComponents]]'s exact
-    * caller contract (distinct, non-null, strictly src < dst, integral
-    * ids, already materialized/cheap to re-read) and additionally
+    * caller contract — rows DISTINCT, both endpoints NON-NULL, STRICTLY
+    * src < dst, INTEGRAL id columns whose native ordering equals their
+    * long-cast ordering — plus one of its own: the edges are already
+    * materialized or cheap to re-read. The contract additionally
     * LOAD-BEARS round 1's fused min-aggregate below: the fusion is only
     * valid because every (dst, label) count is exactly 1, which needs
     * edge DISTINCTNESS — a non-distinct input silently corrupts round 1
@@ -372,8 +379,8 @@ object GraphOps {
     def maybeB(df: DataFrame): DataFrame =
       if (dimensionNodes) broadcast(df) else df.hint("shuffle_hash")
     // assumeCanonical (the connectedComponents contract, r15): caller
-    // asserts distinct a < b edges, no nulls, ALREADY materialized
-    // (checkpointed or similarly cheap to re-read) — g8_modularity
+    // asserts distinct a < b edges, no nulls, integral ids, ALREADY
+    // materialized (checkpointed or similarly cheap to re-read) — g8_modularity
     // checkpoints the canonical co-purchase edges itself and then fed
     // them through this canon path a second time, paying a redundant
     // |E| distinct shuffle + |E| checkpoint per call.
@@ -397,9 +404,11 @@ object GraphOps {
     // labels are the identity map over the node universe, so the round-1
     // join matches every mirrored edge exactly once and — the edge list
     // being distinct by construction above, or by CALLER ASSERTION under
-    // assumeCanonical (see scaladoc: distinctness load-bears this fusion)
-    // — every (dst, label=src) count is exactly 1. The argmax (highest count, then smallest
-    // label) therefore reduces to min(src) per dst, which also spans
+    // assumeCanonical — every (dst, label=src) count is exactly 1. This
+    // fusion therefore depends on the scaladoc's assumeCanonical contract:
+    // a non-distinct input under the flag corrupts it with no failure.
+    // The argmax (highest count, then smallest label) therefore reduces
+    // to min(src) per dst, which also spans
     // the full node universe (every node appears as a dst of the
     // mirrored list). One keyed aggregate replaces the seed-distinct
     // shuffle AND round 1's join + two aggregates; value-identity is

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Checkpoints.CheckpointSyntax
 import graft.io.IoOps
 import graft.operators.{EncodeOps, WerAgg}
 
@@ -26,6 +27,14 @@ object AlignPublishPipeline {
   final case class PublishResult(
     utterances: DataFrame, bookWer: DataFrame, corpusHours: Double)
 
+  /** Aligns, gates and publishes; writes JSONL under `outDir`.
+    *
+    * Three intermediates are materialised eagerly, once each, through
+    * [[graft.Checkpoints.cp]] (so `spark.graft.checkpoint.mode` applies):
+    * the utterance table, the per-book WER and the published table. The
+    * call runs those jobs; the returned `utterances` and `bookWer` read
+    * the materialised rows, so the segment and line files are scanned and
+    * each sampled utterance is transcribed once per call. */
   def run(spark: SparkSession, segTsv: String, linesPath: String,
       outDir: String, samplePct: Double = 0.05, werThreshold: Double = 50.0,
       minDur: Double = 3.0, maxDur: Double = 12.0,
@@ -51,6 +60,8 @@ object AlignPublishPipeline {
       .select(col("s.speaker_id"), col("s.book_id"),
         col("s.id").cast("int").as("utt_idx"), col("s.start"), col("s.end"),
         col("s.duration"), col("l.text"))
+      // Consumers: the md5 sample, the QC semi-join (corpus hours, publish).
+      .checkpointed()
 
     // O4: per-book fractional sample (min 1), md5-keyed determinism
     val w = Window.partitionBy("book_id")
@@ -65,6 +76,8 @@ object AlignPublishPipeline {
       udf((t: String) => ext.transcribe(Array.empty[Float], t)).apply(col("text")))
     val bookWer = transcribed.groupBy("book_id")
       .agg(WerAgg.asUdaf(col("text"), col("hyp")).as("corpus_wer"))            // A8
+      // Consumers: the QC gate below, the caller's bookWer.
+      .checkpointed()
     val qualifiedBooks = bookWer.filter(col("corpus_wer") < werThreshold)      // 2.2-F7
       .select("book_id")
     val qualified = utts.join(broadcast(qualifiedBooks), Seq("book_id"), "left_semi") // J5
@@ -76,6 +89,8 @@ object AlignPublishPipeline {
       coalesce(sum(col("duration").cast("decimal(18,4)")).cast("double"), lit(0.0))
         .divide(3600.0).as("h")).collect()(0).getDouble(0)
     val published = EncodeOps.dictEncode(qualified, "speaker_id", "speaker_label")
+      // Consumers: the JSONL write, the caller's utterances.
+      .checkpointed()
     IoOps.writeJsonl(published.orderBy("book_id", "utt_idx"), outDir)          // K4
     PublishResult(published, bookWer, corpusHours)
   }
@@ -85,9 +100,19 @@ object AlignPublishPipeline {
     * :329-424 per-utterance cuts, process_all.py:429-432 soundfile.write).
     *
     * Utterance spans are collect_list'd per book FIRST so each book's
-    * sample array crosses the shuffle exactly once (spans per book are
-    * bounded; book audio is the heavy side), then sliced and written
+    * sample array is joined exactly once (spans per book are bounded;
+    * book audio is the heavy side), then sliced and written
     * executor-side — no per-segment subprocess, no driver collect.
+    * The span lists are pinned as the broadcast side: left to AQE, a
+    * small corpus has both sides under the broadcast threshold and the
+    * side whose stage finished first was broadcast, in some passes the
+    * float arrays. With the pin the sample arrays never leave the
+    * partition that holds them; a shuffle-hash join with the spans as
+    * build side, the other pin that keeps them out of a broadcast,
+    * shuffles them and took 964 vs 805 ms median for this step of a
+    * corpus pass (4-core VM, 10 alternating same-JVM pairs, the
+    * broadcast won 9). The span table is text, about 100 bytes
+    * per utterance, so a 10^6-utterance call broadcasts about 100 MB.
     * `outDir` must be executor-visible storage.
     *
     * @param utts      rows of (book_id, utt_idx: int, start, end: double, text)
@@ -99,7 +124,7 @@ object AlignPublishPipeline {
     val spans = utts.groupBy("book_id").agg(
       collect_list(struct(col("utt_idx"), col("start"), col("end"), col("text")))
         .as("spans"))
-    val joined = spans.join(bookAudio, Seq("book_id"))
+    val joined = broadcast(spans).join(bookAudio, Seq("book_id"))
       .select(col("book_id"), col("spans"), col("samples"), col("sr").cast("int"))
     val perBook = joined.mapPartitions { rows =>
       // Executor-side mkdir (idempotent, once per partition): a

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints.CheckpointSyntax
 import graft.functions.TextFns
 import graft.io.IoOps
 
@@ -25,6 +26,13 @@ object CatalogPipeline {
     narrator_names: Seq[String], narrator_urls: Seq[String],
     audio_download_url: Seq[String], text_download_url: String)
 
+  /** Builds the catalog, writes it as CSV under `outDir` and returns it.
+    *
+    * The fetched metadata is materialised eagerly, once, through
+    * [[graft.Checkpoints.cp]] (so `spark.graft.checkpoint.mode` applies):
+    * the call runs that job, and the max-narrators collect, the CSV write
+    * and every consumer of the returned catalog read the materialised
+    * rows. Each valid url is fetched once per call. */
   def run(spark: SparkSession, urlsPath: String, outDir: String,
       ext: Externals = StubExternals): DataFrame = {
     val triples = IoOps.readDelimLines(spark, urlsPath, ", ",
@@ -41,6 +49,9 @@ object CatalogPipeline {
             m.audioUrls, m.textUrl)
         }
       }(Encoders.product[RawBook]).toDF()
+      // Consumers: the max-narrators collect, the CSV write, the caller's
+      // uses of the returned catalog.
+      .checkpointed()
 
     // A6: max narrator count decides the wide-schema width
     val maxRow = fetched.agg(max(size(col("narrator_names")))).collect()(0)

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Checkpoints.CheckpointSyntax
 import graft.functions.TextFns
 import graft.io.IoOps
 import graft.operators.{AudioOps, MergeOps, RegroupOps}
@@ -33,7 +34,12 @@ object PreprocessPipeline {
   val MinSr = 16000
   val RegroupThreshold = 20
 
-  /** Text phase: returns (regrouped lines DF, per-book text metrics DF). */
+  /** Text phase: returns (regrouped lines DF, per-book text metrics DF).
+    *
+    * The regrouped lines are materialised eagerly, once, through
+    * [[graft.Checkpoints.cp]] (so `spark.graft.checkpoint.mode` applies):
+    * the call runs the extraction job, and both returned frames read the
+    * materialised lines. Each PDF is extracted once per call. */
   def processText(spark: SparkSession, pdfGlob: String,
       ext: Externals = StubExternals): (DataFrame, DataFrame) = {
     val docs = IoOps.readBinaryTree(spark, pdfGlob)
@@ -59,6 +65,8 @@ object PreprocessPipeline {
         sentences, "book_id", "rn", "sentence", "wc", RegroupThreshold)      // W3
       .select(col("doc_id").as("book_id"), col("grp_idx"),
         col("grp_text"), col("grp_wc"))
+      // Consumers: the caller's lines write and the metrics below.
+      .checkpointed()
 
     val metrics = grouped.groupBy("book_id").agg(
       sum(col("grp_wc")).as("word_count"),                                   // F11/A4

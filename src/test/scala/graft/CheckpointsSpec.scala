@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.ContextShim
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.CheckpointSyntax
@@ -34,10 +35,9 @@ class CheckpointsSpec extends AnyFunSuite {
   }
 
   test("reliable mode without a durable dir fails loudly") {
-    // Declared BEFORE the passing reliable-mode test: once any test
-    // sets the SparkContext checkpoint dir it stays set for the shared
-    // session and this path legitimately proceeds.
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
+    // A dir an earlier test set on the shared context is lifted for the
+    // test, so the check holds whatever ran before.
+    ContextShim.withoutCheckpointDir(spark.sparkContext) {
       spark.conf.set(Checkpoints.ModeKey, "reliable")
       try {
         val e = intercept[IllegalArgumentException](df.checkpointed())

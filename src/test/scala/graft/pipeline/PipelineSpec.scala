@@ -1,12 +1,42 @@
 package graft.pipeline
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ContextShim
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Checkpoints, PlanWalk, TestSpark}
+import graft.io.IoOps
+
+/** [[StubExternals]] with a count of each expensive per-row call. Spark
+  * ships the externals into tasks by serialisation, so the counts live in
+  * this JVM-wide object (local mode runs every task in the driver JVM). */
+object CountingExternals extends Externals {
+  val fetches, pdfs, transcripts = new AtomicLong
+  def reset(): Unit = Seq(fetches, pdfs, transcripts).foreach(_.set(0))
+
+  override def fetchBookMetadata(url: String): BookMeta = {
+    fetches.incrementAndGet(); StubExternals.fetchBookMetadata(url)
+  }
+  override def extractPdfText(bytes: Array[Byte]): String = {
+    pdfs.incrementAndGet(); StubExternals.extractPdfText(bytes)
+  }
+  override def decodeAudio(bytes: Array[Byte]): (Array[Float], Int) =
+    StubExternals.decodeAudio(bytes)
+  override def transcribe(samples: Array[Float], refText: String): String = {
+    transcripts.incrementAndGet(); StubExternals.transcribe(samples, refText)
+  }
+  override def resizeImage(bytes: Array[Byte], w: Int, h: Int): Array[Byte] =
+    StubExternals.resizeImage(bytes, w, h)
+}
 
 /** End-to-end golden tests for the three §3 pipelines over FIXTURES.md
   * shapes, externals stubbed deterministically. */
@@ -191,5 +221,172 @@ class PipelineSpec extends AnyFunSuite {
     assert(cut1.sameElements(expected))
     assert(new String(Files.readAllBytes(Paths.get(outDir, "bookA_0002.txt")),
       java.nio.charset.StandardCharsets.UTF_8) == "second utterance")
+  }
+
+  // ------------------------------------------------------- whole pass
+  private val passBooks = Seq("bookA", "bookB")
+  // Three 4 s segments per book, ids 1..3, each with a text line.
+  private val passSegments = 3
+  // floor(3 * 0.7) = 2 sampled utterances per book
+  private val passSamplePct = 0.7
+  private val passSampled = passBooks.length * 2
+
+  /** The inputs of [[corpusPass]] under `root`: two valid urls, one
+    * tvshows url (fetched, then filtered) and one invalid url; one PDF per
+    * book that regroups into 4 lines; three segments per book. */
+  private def writePassInputs(root: Path): Unit = {
+    def file(rel: String, text: String): Unit = {
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, text.getBytes(StandardCharsets.UTF_8))
+    }
+    file("urls/urls.txt", (passBooks.map(b => s"http://a/$b, http://t/$b, thuviensach") ++
+      Seq("http://a/tvshows/x, http://t/x, taisachhay", "http://a/bad, http://t/bad, invalid"))
+      .mkString("", "\n", "\n"))
+    passBooks.foreach(b => file(s"pdf/spk1/${b}_1.pdf", "mot hai ba bon nam sau bay tam. " * 12))
+    file("segments/seg.tsv", passBooks.flatMap(b => (1 to passSegments).map(i =>
+      s"${(i - 1) * 4.0}\t${i * 4.0}\tf$i\t$b\tspk1")).mkString("", "\n", "\n"))
+  }
+
+  /** What a pass returned and wrote, comparable by value across passes. */
+  private final case class PassOut(
+      returned: Map[String, Seq[String]], corpusHours: Double, pairs: Long,
+      written: Map[String, Seq[String]])
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** Every line of every data file under `dir`, sorted (part-file names
+    * differ between runs); the utterance pairs by file name and md5. */
+  private def written(dir: Path): Seq[String] =
+    Files.walk(dir).iterator.asScala.filter(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.startsWith(".") && !p.getFileName.toString.startsWith("_"))
+      .flatMap { p =>
+        val bytes = Files.readAllBytes(p)
+        if (dir.getFileName.toString == "utterances")
+          Seq(p.getFileName.toString + " " + java.security.MessageDigest.getInstance("MD5")
+            .digest(bytes).map("%02x".format(_)).mkString)
+        else new String(bytes, StandardCharsets.UTF_8).split("\n").toSeq
+      }.toSeq.sorted
+
+  /** One pass of the paper's pipeline over the [[writePassInputs]] corpus,
+    * chained as a corpus pass chains it: catalog, text phase with its
+    * lines write, catalog upsert, align/publish, the caller's WER read,
+    * utterance materialisation. */
+  private def corpusPass(ext: Externals): PassOut = {
+    val root = Files.createTempDirectory("corpus_pass")
+    writePassInputs(root)
+    val catalog = CatalogPipeline.run(spark, s"$root/urls/*.txt", s"$root/catalog", ext)
+    val (grouped, textM) = PreprocessPipeline.processText(spark, s"$root/pdf/*/*.pdf", ext)
+    IoOps.writeTextLines(
+      grouped.select(concat_ws("|", col("book_id"), col("grp_idx"), col("grp_text")).as("line")),
+      "line", s"$root/lines")
+    val audioM = passBooks.map(b => (b, 24000, true)).toDF("book_id", "sample_rate", "qualified")
+    val upserted = PreprocessPipeline.updateCatalog(catalog, textM, audioM)
+    val res = AlignPublishPipeline.run(spark, s"$root/segments/*.tsv", s"$root/lines/*.txt",
+      s"$root/publish", samplePct = passSamplePct, ext = ext)
+    val returned = Map("catalog" -> rows(catalog), "upserted" -> rows(upserted),
+      "textMetrics" -> rows(textM), "bookWer" -> rows(res.bookWer),
+      "utterances" -> rows(res.utterances))
+    val bookAudio = passBooks.map(b =>
+      (b, Seq.tabulate(passSegments * 4 * 1000)(i => (i % 100) / 200.0f), 1000))
+      .toDF("book_id", "samples", "sr")
+    val pairs = AlignPublishPipeline.materializeUtterances(
+      res.utterances, bookAudio, s"$root/utterances")
+    PassOut(returned, res.corpusHours, pairs,
+      Seq("catalog", "lines", "publish", "utterances").map(d => d -> written(root.resolve(d))).toMap)
+  }
+
+  test("a pass calls each expensive external once per input") {
+    CountingExternals.reset()
+    val out = corpusPass(CountingExternals)
+    assert(out.pairs == passBooks.length * passSegments)
+    assert(CountingExternals.pdfs.get == passBooks.length, "PDF extractions")
+    // the tvshows row is fetched (its filter reads the fetched url), the invalid one is not
+    assert(CountingExternals.fetches.get == passBooks.length + 1, "metadata fetches")
+    assert(CountingExternals.transcripts.get == passSampled, "transcriptions")
+  }
+
+  test("a pass writes and returns the same under reliable checkpoints as under local ones") {
+    val local = corpusPass(StubExternals)
+    val dir = Files.createTempDirectory("pipeline_ckpt").toString
+    spark.conf.set(Checkpoints.ModeKey, "reliable")
+    spark.conf.set(Checkpoints.DirKey, dir)
+    val reliable =
+      try corpusPass(StubExternals)
+      finally {
+        spark.conf.unset(Checkpoints.ModeKey)
+        spark.conf.unset(Checkpoints.DirKey)
+      }
+    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(dir)))
+    assert(local.written.values.forall(_.nonEmpty), local.written)
+    assert(reliable == local)
+  }
+
+  test("reliable checkpoints without a directory fail each stage before it writes") {
+    val root = Files.createTempDirectory("pipeline_nodir")
+    writePassInputs(root)
+    Files.createDirectories(root.resolve("lines"))
+    Files.write(root.resolve("lines/part-0.txt"),
+      "bookA|0|mot hai ba\n".getBytes(StandardCharsets.UTF_8))
+    assert(spark.conf.getOption(Checkpoints.DirKey).isEmpty)
+    spark.conf.set(Checkpoints.ModeKey, "reliable")
+    try ContextShim.withoutCheckpointDir(spark.sparkContext) {
+      def failsWithoutDir(stage: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](stage)
+        assert(e.getMessage.contains(Checkpoints.DirKey), e.getMessage)
+      }
+      failsWithoutDir(CatalogPipeline.run(spark, s"$root/urls/*.txt", s"$root/catalog"))
+      failsWithoutDir(PreprocessPipeline.processText(spark, s"$root/pdf/*/*.pdf"))
+      failsWithoutDir(AlignPublishPipeline.run(spark, s"$root/segments/*.tsv",
+        s"$root/lines/*.txt", s"$root/publish"))
+      assert(!Files.exists(root.resolve("catalog")) && !Files.exists(root.resolve("publish")))
+    } finally spark.conf.unset(Checkpoints.ModeKey)
+  }
+
+  /** The executed plans of the queries `f` runs. */
+  private def plansOf(f: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ContextShim.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      f
+      ContextShim.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("materializeUtterances never broadcasts the book audio") {
+    // Both sides fit the broadcast threshold. The span side is built from
+    // an RDD, whose size Spark cannot estimate, and finishes last (its
+    // rows pass a slow udf); the audio side is shaped as a corpus pass
+    // builds it (parts concatenated per book by groupByKey). Left to
+    // choose, Spark broadcasts the audio here on every run.
+    val slow = udf { (t: String) => Thread.sleep(200); t }
+    val spans = passBooks.flatMap(b => (1 to 2).map(i => (b, i, i - 1.0, i.toDouble, s"$b $i")))
+      .toDF("book_id", "utt_idx", "start", "end", "text")
+    val utts = spark.createDataFrame(spans.rdd, spans.schema)
+      .withColumn("text", slow(col("text")))
+    val bookAudio = passBooks.flatMap(b => (1 to 2).map(k => (b, k, Array.tabulate(1500)(_ / 3000.0f))))
+      .toDS().groupByKey(_._1)
+      .mapGroups((b, parts) => (b, parts.toSeq.sortBy(_._2).flatMap(_._3.toSeq).toArray))
+      .toDF("book_id", "samples").withColumn("sr", lit(1000))
+    var n = 0L
+    val plans = plansOf {
+      n = AlignPublishPipeline.materializeUtterances(utts, bookAudio, tmp("ap_pin"))
+    }
+    assert(n == 4L)
+    def carriesSamples(p: SparkPlan) = p.output.exists(_.name == "samples")
+    val joins = plans.filter(PlanWalk.nodes(_).exists(carriesSamples))
+    assert(joins.nonEmpty, "no executed plan read the book audio")
+    val audioBroadcasts = joins.flatMap(PlanWalk.nodes).collect {
+      case b: BroadcastExchangeExec if carriesSamples(b.child) => b
+    }
+    assert(audioBroadcasts.isEmpty, audioBroadcasts.mkString("\n"))
   }
 }

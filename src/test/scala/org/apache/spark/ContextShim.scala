@@ -1,0 +1,18 @@
+package org.apache.spark
+
+/** Test access to SparkContext state that only code in this package can
+  * reach. */
+object ContextShim {
+  /** Runs `f` with no checkpoint directory set, then restores the old one:
+    * a test of the no-directory path must not depend on whether an
+    * earlier suite set one on the shared context. */
+  def withoutCheckpointDir[T](sc: SparkContext)(f: => T): T = {
+    val saved = sc.checkpointDir
+    sc.checkpointDir = None
+    try f finally sc.checkpointDir = saved
+  }
+
+  /** Returns once the listener bus has delivered every event posted so
+    * far, query-execution listener callbacks included. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
