@@ -4,32 +4,32 @@ import org.apache.spark.sql.Dataset
 
 /** Lineage-truncation with a FAULT-TOLERANCE MODE SWITCH for the
   * iterative family (PageRank/CC/BFS/HITS/label-prop/k-core, the
-  * LSH/winnow/k-means dedup pipelines, and every multi-consumer
-  * materialization in the query layer).
+  * LSH/winnow/k-means dedup pipelines, the corpus pipeline stages, and
+  * every multi-consumer materialization in the query layer).
   *
-  * Why a switch exists (r10 VERDICT, What's wrong #2): `localCheckpoint`
-  * truncates lineage by storing the blocks ONLY on executors. On
-  * local[32] that is free and invisible; on the 1000-executor/100 TB
-  * deployment this library targets, one lost executor mid-iteration
-  * destroys blocks that no lineage can rebuild — the job dies
-  * unrecoverably, hours in. `df.checkpoint()` against a durable
-  * checkpoint directory (HDFS/S3) survives executor loss at the cost of
-  * a write + re-read per checkpoint. Neither default is right for both
-  * worlds, so the mode is a session conf:
+  * Why a switch exists: `localCheckpoint` truncates lineage by storing
+  * the blocks ONLY on executors. In one JVM that is free and invisible;
+  * on a multi-executor cluster, one lost executor mid-iteration destroys
+  * blocks that no lineage can rebuild — the job dies unrecoverably,
+  * hours in. `df.checkpoint()` against a durable checkpoint directory
+  * (HDFS/S3) survives executor loss at the cost of a write + re-read per
+  * checkpoint. Neither default is right for both worlds, so the mode is
+  * a session conf:
   *
-  *   - `spark.graft.checkpoint.mode = local` (default): today's
-  *     behavior — eager `localCheckpoint`. Right for single-JVM runs,
-  *     benchmarks, and short jobs where a retry is cheaper than N
-  *     durable writes.
-  *   - `spark.graft.checkpoint.mode = reliable`: eager `checkpoint()`
-  *     to the SparkContext checkpoint dir. The deployer must point
-  *     `spark.graft.checkpoint.dir` (or `setCheckpointDir`) at storage
-  *     that survives executor loss — a local path on one node does NOT.
-  *     Mandatory for long iterative jobs on real clusters.
+  *   - `spark.graft.checkpoint.mode = local` (default): eager
+  *     `localCheckpoint`. Right for single-JVM runs, benchmarks, and
+  *     short jobs where a retry is cheaper than N durable writes.
+  *   - `spark.graft.checkpoint.mode = reliable`: eager `checkpoint()` to
+  *     the SparkContext's own checkpoint directory. The deployer points
+  *     it (`spark.checkpoint.dir` at context start, or
+  *     `SparkContext.setCheckpointDir`) at storage that survives executor
+  *     loss — a local path on one node does NOT. Mandatory for long
+  *     iterative jobs on real clusters. The directory is context-global:
+  *     every session of one context checkpoints under it.
   *
-  * Measured cost of `reliable`: a 12-iteration
-  * PageRank with checkpointEvery=4 (two mid-loop lineage cuts + the
-  * edge materialization) on the 1.2M-edge sf0.1 graph, alternating
+  * Measured cost of `reliable`: a 12-iteration PageRank with
+  * checkpointEvery=4 (two mid-loop lineage cuts + the edge
+  * materialization) on the 1.2M-edge sf0.1 graph, alternating
   * GC-separated local/reliable reps in one JVM against a local-disk
   * checkpoint dir: local min 7.00 / med 7.30 s vs reliable min 7.46 /
   * med 7.92 s — a **1.07-1.08× overhead** for the write+re-read per
@@ -43,56 +43,12 @@ import org.apache.spark.sql.Dataset
   */
 object Checkpoints {
   val ModeKey = "spark.graft.checkpoint.mode"
-  val DirKey = "spark.graft.checkpoint.dir"
-
-  /** Bookkeeping: (DirKey value last applied → the UUID-suffixed dir it
-    * resolved to), keyed by SparkContext.applicationId. CONTEXT-scoped,
-    * not session-scoped, because the checkpoint dir itself is a
-    * SparkContext property: with session-conf bookkeeping (r11 form),
-    * sibling sessions (`spark.newSession`) sharing one context each saw
-    * empty bookkeeping on their first cp() and re-pointed, minting a
-    * fresh UUID subdir per session even for an identical DirKey
-    * (ADVICE r11). Keyed by applicationId (unique per context, no
-    * strong ref pinning a stopped context). Scope note (r12 review):
-    * this closes the SAME-DirKey half only — two sessions with
-    * CONFLICTING DirKey values on one context still re-point on every
-    * alternation (each explicit config must win when it runs; the dir
-    * is context-global, so the conflict has no silent resolution). A
-    * deployer who needs two durable dirs needs two SparkContexts. */
-  private val applied =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Contexts that already emitted the re-point warning: the conflict
-    * warn below is once per context, not once per alternation — the
-    * first occurrence names the defect; repeating it every round of a
-    * thrashing pair would bury the job log. */
-  private val warnedRepoint =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Test hooks: total re-point warnings emitted by this JVM (the
-    * 2-session thrash test asserts exactly one fires), and a reset for
-    * the once-per-context latch so that test is order-independent
-    * (earlier legitimate DirKey changes would otherwise consume it). */
-  private[graft] val repointWarns = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def resetRepointWarnLatch(): Unit = warnedRepoint.clear()
-
-  @transient private lazy val log =
-    org.slf4j.LoggerFactory.getLogger(Checkpoints.getClass)
 
   def mode(ds: Dataset[_]): String =
     ds.sparkSession.conf.get(ModeKey, "local")
 
   /** Eagerly materialize `ds` and truncate its lineage, per the session's
     * checkpoint mode. See the object scaladoc for the tradeoff.
-    *
-    * Directory precedence: an explicit `spark.graft.checkpoint.dir`
-    * ALWAYS wins — it re-points the SparkContext dir even when some
-    * earlier code already set one (r11 review: the old
-    * only-if-unset check silently dropped the user's durable path in
-    * favor of whatever stale — possibly non-durable — dir a notebook
-    * or another library had left behind, defeating the fail-loud
-    * contract). Without DirKey, an existing SparkContext dir is
-    * accepted as the deployer's choice.
     *
     * Superseded-checkpoint growth: reliable checkpoints are files the
     * cluster must eventually delete. [[Sessions.builder]] sets
@@ -107,78 +63,10 @@ object Checkpoints {
   def cp[T](ds: Dataset[T]): Dataset[T] = mode(ds) match {
     case "local" => ds.localCheckpoint(true)
     case "reliable" =>
-      val sc = ds.sparkSession.sparkContext
-      val configured = ds.sparkSession.conf.get(DirKey, "")
-      if (configured.nonEmpty) {
-        // Idempotency bookkeeping: setCheckpointDir appends a fresh
-        // UUID subdir and returns it scheme-QUALIFIED, so neither
-        // equality nor raw prefix against the configured root is
-        // reliable. Instead remember (what we applied → what it
-        // resolved to) per CONTEXT (see `applied`); re-point only when
-        // the configured value changed or something else moved the
-        // SparkContext dir out from under us. Synchronized so two
-        // sessions' first cp() can't both observe-stale-and-re-point.
-        applied.synchronized {
-          val current = sc.getCheckpointDir.getOrElse("")
-          val (lastConf, lastResolved) =
-            applied.getOrDefault(sc.applicationId, ("", ""))
-          if (lastConf != configured || lastResolved != current ||
-              current.isEmpty) {
-            // LOUD on a RE-point (r12 scope note, made visible): when
-            // this context's bookkeeping had already applied a dir and
-            // we are about to move it — a sibling session configured a
-            // CONFLICTING DirKey, or outside code re-pointed the
-            // SparkContext dir — alternating cp() calls will thrash
-            // (each alternation mints a fresh UUID subdir in the durable
-            // store). The dir is context-global so there is no silent
-            // resolution; warn once per context so the deployer sees the
-            // conflict in the job log instead of as churn in the dir.
-            if (lastConf.nonEmpty && warnedRepoint.add(sc.applicationId)) {
-              repointWarns.incrementAndGet()
-              // Two distinct causes need two distinct messages (r13
-              // review): naming '$configured conflicts with $lastConf'
-              // when the two are EQUAL — the external-move case —
-              // would send the deployer hunting for a DirKey conflict
-              // that does not exist.
-              val cause =
-                if (lastConf != configured)
-                  s"$DirKey='$configured' conflicts with the previously " +
-                    s"applied '$lastConf' — sessions sharing one " +
-                    "SparkContext share ONE checkpoint dir, and " +
-                    "alternating conflicting values thrashes the durable " +
-                    "store (a fresh UUID subdir per alternation); use one " +
-                    "DirKey per context, or separate SparkContexts"
-                else if (current.isEmpty)
-                  // cleared, not moved (r13 ADVICE): "moved to ''" would
-                  // read as a move to a bizarre empty path
-                  s"outside code CLEARED the SparkContext checkpoint dir " +
-                    s"after $DirKey='$configured' had resolved to " +
-                    s"'$lastResolved'; re-applying the configured dir — " +
-                    s"if the clear was intentional, clear $DirKey too"
-                else
-                  s"outside code moved the SparkContext checkpoint dir to " +
-                    s"'$current' after $DirKey='$configured' had resolved " +
-                    s"to '$lastResolved'; re-applying the configured dir — " +
-                    "if the move was intentional, clear " +
-                    s"$DirKey instead of racing it"
-              log.warn(s"re-pointing the SparkContext checkpoint dir: $cause")
-            }
-            sc.setCheckpointDir(configured)
-            // Eviction (ADVICE r12): at most one SparkContext is live
-            // per JVM in practice — entries under other applicationIds
-            // belong to stopped contexts, and a long-lived JVM cycling
-            // contexts (test suites, notebooks) would otherwise grow the
-            // map without bound.
-            applied.keySet.removeIf(k => k != sc.applicationId)
-            warnedRepoint.removeIf(k => k != sc.applicationId)
-            applied.put(sc.applicationId,
-              (configured, sc.getCheckpointDir.get))
-          }
-        }
-      } else require(sc.getCheckpointDir.nonEmpty,
+      require(ds.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
         s"$ModeKey=reliable needs a durable checkpoint location: set " +
-          s"$DirKey (or SparkContext.setCheckpointDir) to an HDFS/S3 " +
-          "path that survives executor loss")
+          "spark.checkpoint.dir (or SparkContext.setCheckpointDir) to an " +
+          "HDFS/S3 path that survives executor loss")
       ds.checkpoint(true)
     case other =>
       throw new IllegalArgumentException(

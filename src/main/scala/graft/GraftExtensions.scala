@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.{AsciiTokensExpr, BpeCountExpr, BpeTokensExpr,
-  DurationToHoursExpr, GraphemeLenExpr, KGramsExpr,
-  NfcNormalizeExpr, NormalizeNameExpr, PackedPairsExpr, RepStatsExpr,
+  GraphemeLenExpr, KGramsExpr, NfcNormalizeExpr, PackedPairsExpr, RepStatsExpr,
   LangHitsExpr, LshBucketExpr, LshTableBucketsExpr, MinHashLanesExpr,
   RpProjectExpr, SimHashExpr,
   SortableBitsExpr, SortedIntersectCountExpr, TfMapExpr,
@@ -25,14 +24,6 @@ import graft.functions.{AsciiTokensExpr, BpeCountExpr, BpeTokensExpr,
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("normalize_name_native"),
-      new ExpressionInfo(classOf[NormalizeNameExpr].getName, "normalize_name_native"),
-      (children: Seq[Expression]) => NormalizeNameExpr(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("duration_to_hours_native"),
-      new ExpressionInfo(classOf[DurationToHoursExpr].getName, "duration_to_hours_native"),
-      (children: Seq[Expression]) => DurationToHoursExpr(children.head)))
     ext.injectFunction((
       FunctionIdentifier("ascii_tokens"),
       new ExpressionInfo(classOf[AsciiTokensExpr].getName, "ascii_tokens"),

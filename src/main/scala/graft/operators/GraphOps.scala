@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * Fault tolerance: default `local` checkpoint mode keeps blocks on
   * executors only — one lost executor mid-run is unrecoverable; set
   * `spark.graft.checkpoint.mode=reliable` (plus a durable
-  * `spark.graft.checkpoint.dir`) for long cluster runs.
+  * `spark.checkpoint.dir`) for long cluster runs.
   */
 object GraphOps {
 

@@ -54,8 +54,8 @@ import org.apache.spark.sql.functions._
   * Fault tolerance: every lineage cut routes through [[graft.Checkpoints]]
   * — default `local` mode stores checkpoint blocks on executors only
   * (fast; one lost executor kills a long run), `reliable` mode writes
-  * them to the durable checkpoint dir and survives executor loss. Long
-  * cluster runs of this iterative loop should set
+  * them to the durable `spark.checkpoint.dir` and survives executor
+  * loss. Long cluster runs of this iterative loop should set
   * `spark.graft.checkpoint.mode=reliable`.
   */
 object PageRankOps {

@@ -40,13 +40,19 @@ object AlignPublishPipeline {
       minDur: Double = 3.0, maxDur: Double = 12.0,
       ext: Externals = StubExternals): PublishResult = {
 
-    // S3 scan + P3/P4 derive
+    // S3 scan + P3/P4 derive; a non-numeric raw_id becomes a null id,
+    // which J7 drops, instead of failing the run under ANSI casts
     val segs = IoOps.readTsv(spark, segTsv, segSchema)
-      .withColumn("id", regexp_replace(col("raw_id"), "f", "").cast("double")) // P4
-      .withColumn("duration", round(col("end") - col("start"), 4))             // P3
-    val outliers = segs.filter(!col("duration").between(minDur, maxDur))       // 2.2-F4/A12
-      .select(col("book_id"), col("id"))
-    val kept = segs.join(outliers, Seq("book_id", "id"), "left_anti")          // J6
+      .withColumn("id", regexp_replace(col("raw_id"), "f", "").try_cast("double")) // P4
+      .withColumn("duration", round(col("end") - col("start"), 4))                 // P3
+    // 2.2-F4/A12 band + J6 exclusion: a (book_id, id) with any copy out of
+    // band loses every copy. One window pass over the file, not a
+    // self-anti-join that scans it once per side. Null keys group here
+    // where the anti-join kept them; J7 drops them either way.
+    val outOfBand = coalesce(!col("duration").between(minDur, maxDur), lit(false))
+    val kept = segs
+      .withColumn("excluded", max(outOfBand).over(Window.partitionBy("book_id", "id")))
+      .filter(!col("excluded"))
 
     // S8/W4: per-book text lines with 0-based ids; J7: id-1 arithmetic join
     val lines = IoOps.readTextLines(spark, linesPath)

@@ -1,15 +1,14 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import graft.{Sessions, SparkEntry, Tables}
+import graft.{Sessions, SparkEntry, Tables, Verify}
 
 /** Selective Verify for the inner dev loop: run ONLY the named queries
   * (args: sfDir outDir name...) and write their parquet + a matching
   * oracle_sql.json, so `python3 tools/oracle_check.py sfDir outDir
   * name...` checks just the queries under edit instead of the full
-  * registry. The driver's gate still runs graft.Verify; this tool
-  * shares its session/table setup so a pass here predicts a pass there.
+  * registry. The full gate still runs graft.Verify; this tool shares its
+  * session/table setup and its oracle writer, so a pass here predicts a
+  * pass there.
   */
 object VerifySome {
   def main(args: Array[String]): Unit = {
@@ -28,17 +27,7 @@ object VerifySome {
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     }
-    val oracle = GenOracleBody.union
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = names.flatMap(n => oracle.get(n).map(sql =>
-        s"${q(n)}: ${q(GenOracleBody.normalize(sql))}"))
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir, names)
     spark.stop()
   }
 }

@@ -7,13 +7,13 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ContextShim
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Checkpoints, PlanWalk, TestSpark}
+import graft.{PlanWalk, TestSpark}
 import graft.io.IoOps
 
 /** [[StubExternals]] with a count of each expensive per-row call. Spark
@@ -198,6 +198,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(Files.list(Paths.get(outDir)).toArray.exists(_.toString.endsWith(".json")))
   }
 
+  test("AlignPublishPipeline: the outlier exclusion drops every copy of an id and scans the segments once") {
+    val segDir = tmp("ap_seg1"); val linesDir = tmp("ap_lines1")
+    val segRows = Seq(
+      "0.0\t5.0\tf1\tbookA\tspk1",
+      "5.0\t10.0\tf2\tbookA\tspk1", "10.0\t10.5\tf2\tbookA\tspk1", // id 2 twice, one copy 0.5 s
+      "10.5\t16.0\tf3\tbookA\tspk1",
+      "16.0\t21.0\tfx\tbookA\tspk1", // non-numeric id: null, no line joins it
+      "0.0\t4.0\tf2\tbookB\tspk2")   // id 2 of another book stays
+    IoOps.writeTextLines(segRows.toDF("line"), "line", segDir)
+    val lineRows = (0 until 5).map(i => s"bookA|$i|a b c") ++ Seq("bookB|0|d e f", "bookB|1|g h i")
+    IoOps.writeTextLines(lineRows.toDF("line"), "line", linesDir)
+    var res: AlignPublishPipeline.PublishResult = null
+    val plans = plansOf {
+      res = AlignPublishPipeline.run(spark, segDir + "/*.txt", linesDir + "/*.txt", tmp("ap_out1"))
+    }
+    val kept = res.utterances.select("book_id", "utt_idx").as[(String, Int)].collect().toSet
+    assert(kept == Set(("bookA", 1), ("bookA", 3), ("bookB", 2)), kept)
+    val segScans = plans.flatMap(PlanWalk.nodes).collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.toString.contains(segDir)) => f
+    }
+    assert(segScans.length == 1, segScans.mkString("\n"))
+  }
+
   test("AlignPublishPipeline.materializeUtterances: K6 wav/txt pairs, sample-exact cuts") {
     import graft.operators.AudioOps
     val outDir = tmp("ap_wav")
@@ -309,16 +332,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a pass writes and returns the same under reliable checkpoints as under local ones") {
     val local = corpusPass(StubExternals)
-    val dir = Files.createTempDirectory("pipeline_ckpt").toString
-    spark.conf.set(Checkpoints.ModeKey, "reliable")
-    spark.conf.set(Checkpoints.DirKey, dir)
-    val reliable =
-      try corpusPass(StubExternals)
-      finally {
-        spark.conf.unset(Checkpoints.ModeKey)
-        spark.conf.unset(Checkpoints.DirKey)
-      }
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(dir)))
+    val reliable = TestSpark.reliable(_ => corpusPass(StubExternals))
     assert(local.written.values.forall(_.nonEmpty), local.written)
     assert(reliable == local)
   }
@@ -329,19 +343,17 @@ class PipelineSpec extends AnyFunSuite {
     Files.createDirectories(root.resolve("lines"))
     Files.write(root.resolve("lines/part-0.txt"),
       "bookA|0|mot hai ba\n".getBytes(StandardCharsets.UTF_8))
-    assert(spark.conf.getOption(Checkpoints.DirKey).isEmpty)
-    spark.conf.set(Checkpoints.ModeKey, "reliable")
-    try ContextShim.withoutCheckpointDir(spark.sparkContext) {
+    TestSpark.reliableWithoutDir {
       def failsWithoutDir(stage: => Any): Unit = {
         val e = intercept[IllegalArgumentException](stage)
-        assert(e.getMessage.contains(Checkpoints.DirKey), e.getMessage)
+        assert(e.getMessage.contains("spark.checkpoint.dir"), e.getMessage)
       }
       failsWithoutDir(CatalogPipeline.run(spark, s"$root/urls/*.txt", s"$root/catalog"))
       failsWithoutDir(PreprocessPipeline.processText(spark, s"$root/pdf/*/*.pdf"))
       failsWithoutDir(AlignPublishPipeline.run(spark, s"$root/segments/*.tsv",
         s"$root/lines/*.txt", s"$root/publish"))
       assert(!Files.exists(root.resolve("catalog")) && !Files.exists(root.resolve("publish")))
-    } finally spark.conf.unset(Checkpoints.ModeKey)
+    }
   }
 
   /** The executed plans of the queries `f` runs. */

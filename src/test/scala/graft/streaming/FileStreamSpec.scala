@@ -227,7 +227,10 @@ class FileStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming upsert: micro-batches merge into the bucketed parquet base, last writer wins") {
+  /** Streams two batches into a fresh 8-bucket base holding keys 1 and 2
+    * and returns the final base as k -> v: batch 1 updates k=2 twice (seq
+    * 1 then 2, so "b2" wins) and inserts k=3, batch 2 updates k=1. */
+  private def twoBatchUpsert(): Map[Int, String] = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -241,16 +244,26 @@ class FileStreamSpec extends AnyFunSuite {
       mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
       orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = 8)
     try {
-      // batch 1: update k=2 twice (seq 1 then 2 -> "b2" wins), insert k=3
       mem.addData((2, "b1", 1L), (2, "b2", 2L), (3, "c", 1L))
       q.processAllAvailable()
-      // batch 2: update k=1
       mem.addData((1, "a9", 3L))
       q.processAllAvailable()
-      val rows = spark.read.parquet(base)
-        .select("k", "v").as[(Int, String)].collect().toMap
-      assert(rows == Map(1 -> "a9", 2 -> "b2", 3 -> "c"))
+      spark.read.parquet(base).select("k", "v").as[(Int, String)].collect().toMap
     } finally q.stop()
+  }
+
+  test("streaming upsert: micro-batches merge into the bucketed parquet base, last writer wins") {
+    assert(twoBatchUpsert() == Map(1 -> "a9", 2 -> "b2", 3 -> "c"))
+  }
+
+  test("streaming upsert: reliable checkpoints give the same final base as local ones") {
+    val local = twoBatchUpsert()
+    assert(TestSpark.reliable(_ => twoBatchUpsert()) == local)
+    // The micro-batches run in the stream's own session; without a
+    // directory the same stream fails, so the mode did reach them.
+    val e = TestSpark.reliableWithoutDir(
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](twoBatchUpsert()))
+    assert(e.getCause.getMessage.contains("spark.checkpoint.dir"), e.getCause)
   }
 
   /** path -> (size, MD5) of every visible parquet file under `base`. */

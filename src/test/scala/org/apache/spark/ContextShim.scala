@@ -12,6 +12,15 @@ object ContextShim {
     try f finally sc.checkpointDir = saved
   }
 
+  /** Runs `f` with the checkpoint directory set through
+    * `setCheckpointDir(dir)`, as a deployer sets it, then restores the old
+    * one: later suites on the shared context see what they saw before. */
+  def withCheckpointDir[T](sc: SparkContext, dir: String)(f: => T): T = {
+    val saved = sc.checkpointDir
+    sc.setCheckpointDir(dir)
+    try f finally sc.checkpointDir = saved
+  }
+
   /** Returns once the listener bus has delivered every event posted so
     * far, query-execution listener callbacks included. */
   def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
