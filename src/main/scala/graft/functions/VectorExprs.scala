@@ -58,7 +58,7 @@ object VectorKernels {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
       i += 1
     }
-    var d0 = get(a, 0, aFloat) - get(b, 0, bFloat)
+    val d0 = get(a, 0, aFloat) - get(b, 0, bFloat)
     var acc = d0 * d0
     i = 1
     while (i < dim) {

@@ -40,10 +40,6 @@ object VectorFns {
   def sqNormFlat(a: Column, dim: Int): Column =
     call_function("vec_sqnorm", a, lit(dim))
 
-  /** Σ (a[i]-b[i])^2 (double), native kernel form. */
-  def sqDistFlat(a: Column, b: Column, dim: Int): Column =
-    call_function("vec_sqdist", a, b, lit(dim))
-
   /** Cosine when norms are precomputed columns (saves re-reduction in
     * pairwise joins — at scale, norm is computed once per vector, not once
     * per pair). */

@@ -144,27 +144,6 @@ object IoOps {
     df.coalesce(1).write.mode("overwrite")
       .option("compression", "gzip").json(dir)
 
-  /** K6: one wav file per row, named by `nameCol` (process_all.py:429-432
-    * soundfile.write). Executor-side writer like K3 — sample arrays never
-    * collect to the driver; `dir` must be executor-visible storage. */
-  def writeWavPerRow(df: DataFrame, nameCol: String, samplesCol: String,
-      srCol: String, dir: String): Unit = {
-    // Driver-side mkdir for the empty-input case — see writeJsonPerRow.
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    df.select(col(nameCol).cast("string"), col(samplesCol), col(srCol).cast("int"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        // Executor-side mkdir (idempotent, per partition) — see
-        // writeJsonPerRow; dir must be executor-visible storage.
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        rows.foreach { r =>
-          val bytes = graft.operators.AudioOps.encodePcm16Wav(
-            r.getSeq[Float](1).toArray, r.getInt(2))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir, r.getString(0) + ".wav"), bytes)
-        }
-      }
-  }
-
   /** K8: pipe-CSV sink (prepare_prompt_for_vnavc.py:219-224). */
   def writePipeCsv(df: DataFrame, dir: String): Unit =
     df.coalesce(1).write.mode("overwrite")

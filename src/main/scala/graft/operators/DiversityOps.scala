@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Diversity / coreset sampling over an embedding column: k-center
@@ -46,7 +46,7 @@ object DiversityOps {
     val seed = wellFormed.orderBy(col("__id")).limit(1).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).head
     var chosen = Vector((seed._1, seed._2, 0.0))
-    for (step <- 1 to steps) {
+    for (_ <- 1 to steps) {
       val ids = chosen.map(_._1)
       // the vector rides the argmax struct (compared only on (d, -id)
       // ties, which unique ids preclude) so the pick is ONE job

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Upsert / MERGE INTO as a plain-Spark composition (no Delta required):
@@ -13,91 +13,60 @@ import org.apache.spark.sql.functions._
   * match indicator rather than `coalesce(u.c, b.c)` — with coalesce, a null
   * update would be indistinguishable from "not matched".
   *
-  * Scale shape: one shuffle on the merge key. A full-outer join cannot
-  * broadcast either side, so at 100 TB-base/small-updates scale this is a
-  * sort-merge join with a full shuffle of `base`. If `updates` is known
-  * small, pass `broadcastUpdates = true` to plan it as broadcast
-  * left-outer (update pass) + left-anti (insert set) union — `base` is
-  * then never shuffled.
+  * Scale shape: `updates` is broadcast and `base` is never shuffled — a
+  * broadcast left-outer join (update pass) unioned with a left-anti join
+  * (insert set). Contract: `updates` must fit a broadcast, the
+  * small-batch-into-large-table case every caller has.
   */
 object MergeOps {
 
   private val uMark = "__u_present"
-  private val bMark = "__b_present"
 
   /** @param base       existing table
-    * @param updates    new rows; must contain `keys` and `updateCols`
-    * @param keys       equality merge key column names
+    * @param updates    new rows, small enough to broadcast; must contain
+    *                   `keys` and `updateCols`
+    * @param keys       equality merge key column names (matched null-safely)
     * @param updateCols columns taken from `updates` when matched (and used
     *                   for inserts); any base column absent from `updates`
-    *                   is null on inserted rows unless given in `insertDefaults`
-    * @param broadcastUpdates when true, plan as broadcast left-outer +
-    *                   left-anti union instead of a full-outer SMJ — the
-    *                   scale-safe shape when updates << base.
+    *                   is null on inserted rows
     */
   def upsert(
       base: DataFrame,
       updates: DataFrame,
       keys: Seq[String],
-      updateCols: Seq[String],
-      insertDefaults: Map[String, Column] = Map.empty,
-      broadcastUpdates: Boolean = false): DataFrame = {
+      updateCols: Seq[String]): DataFrame = {
     require(updateCols.forall(updates.columns.contains),
       "updates must carry every updateCol")
-    val b0 = base.withColumn(bMark, lit(true)).alias("b")
-
-    /** Output row given a joined (b, u) pair; works for matched, base-only
-      * and update-only rows uniformly via the two presence markers. */
-    def mergedCols(): Seq[Column] = {
-      val matched = col(s"u.$uMark") === lit(true) && col(s"b.$bMark") === lit(true)
-      val insert = col(s"b.$bMark").isNull
+    val u = broadcast(updates.withColumn(uMark, lit(true))).alias("u")
+    val cond = keys.map(k => col(s"b.$k") <=> col(s"u.$k")).reduce(_ && _)
+    val matched = col(s"u.$uMark").isNotNull
+    // Every base row survives the left-outer join once per match; a
+    // matched row takes the update's values, nulls included.
+    val updated = base.alias("b").join(u, cond, "left_outer").select(
       base.columns.toSeq.map { c =>
-        if (keys.contains(c))
-          coalesce(col(s"b.$c"), col(s"u.$c")).as(c)
-        else if (updateCols.contains(c)) {
-          val onInsert = insertDefaults.get(c)
-            .map(d => coalesce(col(s"u.$c"), d)).getOrElse(col(s"u.$c"))
-          when(matched, col(s"u.$c")) // matched: update wins, nulls included
-            .when(insert, onInsert)
-            .otherwise(col(s"b.$c")).as(c)
-        } else {
-          val d = insertDefaults.getOrElse(c, lit(null).cast(base.schema(c).dataType))
-          when(insert, d).otherwise(col(s"b.$c")).as(c)
-        }
-      }
+        if (updateCols.contains(c) && !keys.contains(c))
+          when(matched, col(s"u.$c")).otherwise(col(s"b.$c")).as(c)
+        else col(s"b.$c").as(c)
+      }: _*)
+    val insertCols = base.columns.toSeq.map { c =>
+      if (keys.contains(c) || updateCols.contains(c)) col(s"u.$c").as(c)
+      else lit(null).cast(base.schema(c).dataType).as(c)
     }
-
-    if (broadcastUpdates) {
-      val u = broadcast(updates.withColumn(uMark, lit(true))).alias("u")
-      val cond = keys.map(k => col(s"b.$k") <=> col(s"u.$k")).reduce(_ && _)
-      val updated = b0.join(u, cond, "left_outer").select(mergedCols(): _*)
-      val insertCols = base.columns.toSeq.map { c =>
-        if (keys.contains(c)) col(s"u.$c").as(c)
-        else if (updateCols.contains(c))
-          insertDefaults.get(c).map(d => coalesce(col(s"u.$c"), d))
-            .getOrElse(col(s"u.$c")).as(c)
-        else insertDefaults.getOrElse(c, lit(null).cast(base.schema(c).dataType)).as(c)
-      }
-      // Insert set = update keys that match nothing in base. Never
-      // broadcast base (it is the 100 TB side): matchedKeys is computed by
-      // semi-joining base against broadcast(updates) — at most |updates|
-      // rows — and then anti-joined back against updates. The semi-join
-      // must be null-safe like every other key comparison here, or a
-      // null-key update row both updates its match and re-inserts.
-      val matchedKeys = base.select(keys.map(col): _*).alias("bk")
-        .join(broadcast(updates.select(keys.map(col): _*)).alias("uk"),
-          keys.map(k => col(s"bk.$k") <=> col(s"uk.$k")).reduce(_ && _),
-          "left_semi")
-        .distinct()
-      val inserts = updates.alias("u")
-        .join(broadcast(matchedKeys).alias("b"),
-          keys.map(k => col(s"u.$k") <=> col(s"b.$k")).reduce(_ && _), "left_anti")
-        .select(insertCols: _*)
-      updated.unionByName(inserts)
-    } else {
-      val u = updates.withColumn(uMark, lit(true)).alias("u")
-      val cond = keys.map(k => col(s"b.$k") <=> col(s"u.$k")).reduce(_ && _)
-      b0.join(u, cond, "full_outer").select(mergedCols(): _*)
-    }
+    // Insert set = update keys that match nothing in base. Never
+    // broadcast base (it is the 100 TB side): matchedKeys is computed by
+    // semi-joining base against broadcast(updates) — at most |updates|
+    // rows — and then anti-joined back against updates. The semi-join
+    // must be null-safe like every other key comparison here, or a
+    // null-key update row both updates its match and re-inserts.
+    val matchedKeys = base.select(keys.map(col): _*).alias("bk")
+      .join(broadcast(updates.select(keys.map(col): _*)).alias("uk"),
+        keys.map(k => col(s"bk.$k") <=> col(s"uk.$k")).reduce(_ && _),
+        "left_semi")
+      .distinct()
+    val inserts = updates.alias("u")
+      .join(broadcast(matchedKeys).alias("b"),
+        keys.map(k => col(s"u.$k") <=> col(s"b.$k")).reduce(_ && _), "left_anti")
+      .select(insertCols: _*)
+    updated.unionByName(inserts)
   }
 }

@@ -1237,7 +1237,7 @@ object PdfText {
     * dicts are parsed for the predictor pass). Corrupt input (an
     * out-of-range code, no EOD) degrades to empty — the never-throws
     * contract. */
-  private def lzw(data: Array[Byte], earlyChange: Int = 1): Array[Byte] =
+  private def lzw(data: Array[Byte], earlyChange: Int): Array[Byte] =
     try {
       val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 3))
       val table = new Array[Array[Byte]](4096)

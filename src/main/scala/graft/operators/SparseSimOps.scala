@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Checkpoints.CheckpointSyntax
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sparse (term-space) cosine similarity via an inverted-index posting

@@ -108,12 +108,10 @@ object PreprocessPipeline {
       audioMetrics: DataFrame): DataFrame = {
     val t = MergeOps.upsert(catalog,
       textMetrics.withColumnRenamed("book_id", "id"),
-      Seq("id"), Seq("word_count", "num_sentences", "text_size"),
-      broadcastUpdates = true)
+      Seq("id"), Seq("word_count", "num_sentences", "text_size"))
     MergeOps.upsert(t,
       audioMetrics.select(col("book_id").as("id"),
         col("sample_rate"), col("qualified").cast("string").as("quality")),
-      Seq("id"), Seq("sample_rate", "quality"),
-      broadcastUpdates = true)
+      Seq("id"), Seq("sample_rate", "quality"))
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Checkpoints.CheckpointSyntax
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -541,9 +541,4 @@ object CurationQueries {
     "t_rrf_fusion" -> rrfSql,
     "emb_outlier_filter" -> embOutlierSql,
     "pipe_curation_pass" -> pipeCurSql)
-
-  /** Sort-free bench forms (the trailing ORDER BY exists only for the
-    * oracle's deterministic hash-compare; the top-N itself is already
-    * TakeOrderedAndProject / bounded-buffer). */
-  val benchVariants: Map[String, Q] = Map.empty
 }

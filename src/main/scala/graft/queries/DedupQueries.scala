@@ -1725,34 +1725,6 @@ object DedupQueries {
       |  CAST((SELECT COUNT(*) FROM kept) AS BIGINT) AS n_after_near,
       |  CAST((SELECT SUM(n_chars) FROM kept) AS BIGINT) AS chars_kept""".stripMargin
 
-  // ------------------------------------------------------------ registry
-
-  /** Bench-only forms: the global ORDER BY on pair outputs exists purely
-    * for the oracle's deterministic hash-compare (see
-    * RelationalQueries.benchVariants). */
-  val benchVariants: Map[String, Q] = Map(
-    "dedup_simhash" -> ((s, dir) =>
-      DedupOps.simHashPairs(corpus(s, dir), "doc_id", "t",
-        bits = 16, prefixBits = 8, maxHamming = 3)),
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      DedupOps.minHashLshPairs(corpus(s, dir), "doc_id", "t",
-        shingleK = 3, numHashes = 8, bands = 2)),
-    "dedup_cc_clusters" -> ((s, dir) =>
-      graft.operators.GraphOps.connectedComponents(
-        DedupOps.minHashLshPairs(corpus(s, dir), "doc_id", "t",
-          shingleK = 3, numHashes = 8, bands = 2), "id_a", "id_b",
-        assumeCanonical = true)
-        .select(col("node").as("doc_id"), col("component").as("cluster_id"),
-          (col("node") === col("component")).as("is_survivor"))),
-    "dedup_sparse_cosine" -> ((s, dir) =>
-      graft.operators.SparseSimOps.tfCosinePairs(
-        corpus(s, dir), "doc_id", "t", minCosine = 0.8, dfCap = 400L)),
-    "emb_near_dup" -> ((s, dir) =>
-      SimilarityOps.cosineNearDupPairs(
-        embCorpus(s, dir).withColumn("lsh_block",
-          SimilarityOps.lshBucket("embedding", nPlanes = 16, dim = 64)),
-        "vec_id", "embedding", "lsh_block", 0.999)))
-
   // ------------------------------------------------- dedup_winnow_pairs
 
   /** Substring-level near-dup candidates: docs sharing >= 3 winnowing
@@ -1994,6 +1966,8 @@ object DedupQueries {
        |FROM p JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
        |WHERE (shared * 1000000) // least(sa.n, sb.n) >= $contMinPpm
        |ORDER BY id_a, id_b""".stripMargin
+
+  // ------------------------------------------------------------ registry
 
   val queries: Map[String, Q] = Map(
     "dedup_containment" -> dedupContainment,

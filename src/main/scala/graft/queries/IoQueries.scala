@@ -961,6 +961,8 @@ object IoQueries {
       .orderBy("o_orderkey")
   }
 
+  /** Bench forms for harness work that is not a root sort (which Bench
+    * strips itself): j15's fixture-table rewrite. */
   val benchVariants: Map[String, Q] = Map(
     "j15_bucketed_join" -> j15Steady)
 

@@ -324,12 +324,15 @@ object RelationalQueries {
 
   /** J3 ★: upsert/MERGE — matched rows take the update value (nulls
     * included), unmatched update rows are inserted (process_all.py:797-839).
-    * Uses the broadcast-safe plan: base is never shuffled. */
+    * Base is never shuffled. A CDC batch arrives materialised in
+    * practice, and the upsert plan reads `updates` three times (merge
+    * side, matched-keys broadcast, insert anti-join), so the synthesised
+    * batch is checkpointed: its subtree runs once. Bounded by |updates|,
+    * the broadcast contract upsert already has. */
   private val j3: Q = (s, dir) =>
     MergeOps.upsert(
       t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal", "c_mktsegment"),
-      j3Updates(s, dir), Seq("c_custkey"), Seq("c_acctbal"),
-      broadcastUpdates = true)
+      j3Updates(s, dir).checkpointed(), Seq("c_custkey"), Seq("c_acctbal"))
       .orderBy("c_custkey")
   private val j3Sql =
     "WITH " + j3UpdatesSql +
@@ -409,12 +412,9 @@ object RelationalQueries {
 
   /** J7 ★: arithmetic equi-join — alignment id joins text line id-1
     * (aeneas_batch_align.py:389-403); out-of-range ids drop (inner).
-    * The operator itself is the unsorted join; the registered form adds a
-    * global orderBy ONLY so the oracle hash-compare is deterministic. The
-    * bench variant (benchVariants) times the unsorted operator — at scale
-    * the harness sort would be the plan's dominant exchange while serving
-    * no semantic purpose. */
-  private val j7Unsorted: Q = (s, dir) => {
+    * The root orderBy exists only for the oracle's deterministic
+    * hash-compare; Bench times the join without it (stripRootSort). */
+  private val j7: Q = (s, dir) => {
     val segs = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("book"), col("l_linenumber").as("seg_id"))
     val lines = t(s, dir, "lineitem")
@@ -431,8 +431,8 @@ object RelationalQueries {
         segs("book") === lines("book") && segs("seg_id") - 1 === lines("line_no"),
         "inner")
       .select(segs("book").as("book"), col("seg_id"), col("line_txt"))
+      .orderBy("book", "seg_id")
   }
-  private val j7: Q = (s, dir) => j7Unsorted(s, dir).orderBy("book", "seg_id")
   private val j7Sql =
     """SELECT s.book, s.seg_id, l.line_txt
       |FROM (SELECT l_orderkey AS book, l_linenumber AS seg_id FROM lineitem) s
@@ -1154,30 +1154,6 @@ object RelationalQueries {
     "u3_task_union" -> u3,
     "u5_intersect" -> u5,
     "u6_except" -> u6)
-
-  /** Bench-only forms: identical operator semantics minus the global sort
-    * the registered query adds purely for oracle determinism. Verify
-    * always runs `queries`; Bench prefers these so the recorded number
-    * measures the operator, not the harness. */
-  val benchVariants: Map[String, Q] = Map(
-    "j7_lineid_arith" -> j7Unsorted,
-    // A CDC batch arrives MATERIALIZED in practice; the registered form
-    // synthesizes it from orders as a lazy subtree that the upsert plan
-    // evaluates three times (merge side, matched-keys broadcast, insert
-    // anti-join). Materializing it first times the upsert operator, not
-    // the fixture synthesis. Bounded by |updates| — the same assumption
-    // broadcastUpdates already makes.
-    "j3_upsert" -> ((s, dir) =>
-      MergeOps.upsert(
-        t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal", "c_mktsegment"),
-        j3Updates(s, dir).checkpointed(),
-        Seq("c_custkey"), Seq("c_acctbal"), broadcastUpdates = true)),
-    "o4_group_sample" -> ((s, dir) =>
-      graft.operators.SampleOps.groupFractionalSample(
-        t(s, dir, "lineitem"), Seq("l_returnflag"), o4Hash,
-        Seq(col("l_orderkey"), col("l_linenumber")), pct = 0.01,
-        survivor = h => h <= lit(o4Cut))
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"))))
 
   val oracle: Map[String, String] = Map(
     "p1_derived_hours" -> p1Sql,

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Checkpoints.CheckpointSyntax
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -529,14 +529,4 @@ object RetrievalQueries {
     "t_unigram_nll" -> unigramNllSql,
     "t_bigram_nll" -> bigramNllSql,
     "emb_rp_project" -> rpSql)
-
-  /** Sort-free bench forms (global ORDER BY exists only for the oracle's
-    * deterministic hash-compare; top-k output is already tiny). */
-  val benchVariants: Map[String, Q] = Map(
-    "emb_rp_project" -> ((s, dir) =>
-      t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          call_function("rp_project", col("embedding"), lit(16), lit(64)).as("proj"))
-        .select(col("vec_id"), concat_ws(",", transform(col("proj"),
-          x => floor(x * lit(1e6)).cast("bigint").cast("string"))).as("proj_fp"))))
 }

@@ -997,51 +997,4 @@ object ScaleQueries {
     "o20_stratified_split" -> o20Sql,
     "o21_compaction_plan" -> o21Sql,
     "pipe_pretrain_pack" -> pipeSql)
-
-  /** Sort-free forms for the bench (global ORDER BY exists only for the
-    * oracle's deterministic hash-compare). */
-  val benchVariants: Map[String, Q] = Map(
-    "w7_sequence_pack" -> ((s, dir) =>
-      PackOps.packSequences(
-        t(s, dir, "documents"), "source", Seq("doc_id"),
-        TextFns.token_count(col("text")), budget)),
-    "j12_range_join" -> ((s, dir) => {
-      val pts = Tables.events(s, dir)
-        .select(col("event_id"), unix_micros(col("ts")).as("pt_us"))
-      RangeJoinOps.binnedRangeJoin(
-        pts, rjIntervals(s, dir), "pt_us", "start_us", "end_us", rjBinUs)
-    }),
-    "o6_quota_sample" -> ((s, dir) =>
-      QuotaOps.quotaSample(
-        t(s, dir, "documents"), "lang", o6Weights.toMap, o6TotalN,
-        SketchOps.portableHash(col("doc_id")), Seq(col("doc_id")))),
-    "a14_topk_per_group" -> ((s, dir) =>
-      graft.operators.TopKOps.topKByValue(
-        t(s, dir, "documents"), Seq("lang"),
-        col("n_chars"), col("doc_id"), k = 3,
-        orderName = "n_chars", tieName = "doc_id")),
-    "w8_chunk_overlap" -> ((s, dir) =>
-      PackOps.chunkOverlap(
-        t(s, dir, "documents").select(col("doc_id"), col("text")),
-        call_function("bpe_tokens", col("text")),
-        w8Size, w8Stride)),
-    "pipe_pretrain_pack" -> ((s, dir) => {
-      val clean = t(s, dir, "documents")
-        .withColumn("text", TextFns.redact_pii(col("text")))
-      val ded = graft.operators.DedupOps.exactDedup(clean, "text", "doc_id")
-      val mixed = QuotaOps.quotaSample(ded, "lang", pipeWeights.toMap, pipeN,
-        SketchOps.portableHash(col("doc_id")), Seq(col("doc_id")))
-      PackOps.packSequences(mixed, "lang", Seq("doc_id"),
-        TextFns.token_count(col("text")), budget)
-    }),
-    "o10_token_budget" -> ((s, dir) =>
-      graft.operators.BudgetOps.tokenBudgetSample(
-        t(s, dir, "documents")
-          .withColumn("n_tok", TextFns.token_count(col("text")).cast("long")),
-        SketchOps.portableHash(col("doc_id")), Seq(col("doc_id")),
-        col("n_tok"), o10Budget, nBuckets = 64)),
-    "o11_temperature_mix" -> ((s, dir) =>
-      QuotaOps.sqrtTemperatureSample(
-        t(s, dir, "documents"), "lang", o11N,
-        SketchOps.portableHash(col("doc_id")), Seq(col("doc_id")))))
 }

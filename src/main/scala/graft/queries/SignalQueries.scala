@@ -1054,7 +1054,6 @@ object SignalQueries {
     * distribution). Degenerate users (single day, or constant y for
     * r²) yield NULL by the guarded CASE, not a division blow-up. */
   private val a32: Q = (s, dir) => {
-    val w = Window.partitionBy("user_id")
     Tables.events(s, dir).filter(col("value").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("tu"),
         expr("CAST(floor(value * 100) AS BIGINT)").as("v"))

@@ -264,8 +264,7 @@ object FileStream {
         // hash bucket; for matched rows update and base agree by
         // construction (same keys -> same hash).
         val merged = graft.operators.MergeOps.upsert(
-          baseSlice, keyed, keys, updateCols :+ BucketCol,
-          broadcastUpdates = true)
+          baseSlice, keyed, keys, updateCols :+ BucketCol)
         // Write the merged TOUCHED buckets to a hidden sibling (dot prefix
         // keeps partition discovery from ever seeing it), then swap each
         // touched bucket directory individually. Hadoop FileSystem (not

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** W13's CUSUM change detector as a STREAMING operator (SURVEY §2.10
   * companion to queries/SignalQueries.w13): the batch form replays the

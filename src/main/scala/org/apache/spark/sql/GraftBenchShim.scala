@@ -3,16 +3,15 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 
 /** Bench-only plan surgery (lives in this package for `Dataset.ofRows`
-  * access). [[stripRootSort]] removes a GLOBAL Sort at the ROOT of a
-  * query's logical plan — the `.orderBy` the registered queries carry
-  * solely so the DuckDB oracle compare is deterministic. The sort is not
-  * part of any operator's semantics (the driver's compare re-sorts by
-  * hash anyway), but benching it times a full range-partition exchange +
-  * per-partition sort that a production caller of the operator would
-  * never run — at 100 TB the harness sort would dominate every plan it
-  * touches. Generalizes the round-4 `j7Unsorted` bench variant (VERDICT
-  * r4 "What's wrong #3") to every benched query, with no per-query
-  * hand-written variant to drift out of sync.
+  * access). Bench times `stripRootSort(query)`: [[stripRootSort]]
+  * removes a GLOBAL Sort at the ROOT of a query's logical plan — the
+  * `.orderBy` the registered queries carry solely so the DuckDB oracle
+  * compare is deterministic. The sort is not part of any operator's
+  * semantics (the compare re-sorts by hash anyway), but timing it would
+  * time a range-partition exchange and sort a production caller never
+  * runs. One rule for every query, so no hand-written unsorted copy can
+  * drift from the verified plan; a bench variant exists only for harness
+  * work that is not a sort (j15, see `SparkEntry.benchVariants`).
   *
   * Root-only on purpose: an interior Sort (e.g. under a window or an
   * ordered collect) IS operator semantics and is never touched.

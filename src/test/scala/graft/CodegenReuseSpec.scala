@@ -102,12 +102,9 @@ class CodegenReuseSpec extends AnyFunSuite {
     // expression ids, so a warm run can plan them in a new order and
     // compile that order's classes.
     val names = Seq("dedup_cc_best", "pipe_dedup_pass", "dedup_lsh_recall", "j2_zip_join")
-    // The form Bench times: its bench variant, root sort stripped, noop sink.
-    def run(name: String): Unit = {
-      val q = SparkEntry.benchVariants.getOrElse(name, SparkEntry.queries(name))
-      org.apache.spark.sql.GraftBenchShim.stripRootSort(q(spark, sfDir))
-        .write.format("noop").mode("overwrite").save()
-    }
+    // The form Bench times, written to the noop sink.
+    def run(name: String): Unit =
+      Bench.timedForm(spark, sfDir, name).write.format("noop").mode("overwrite").save()
     val warm = names.map { name =>
       run(name)
       name -> compilesOf(run(name))

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.Checkpoints.CheckpointSyntax
 
 /** The plan audits as one registry sweep. Every registered query's
-  * executed plan is built once at sf0.001 — in the form Bench times, so
-  * a `benchVariants` override where one exists — and five detectors run
-  * over it. Each detector's hits must equal a reviewed known-good set
+  * executed plan is built once at sf0.001 — the plan Verify checks, or
+  * for j15 its bench variant (the only one: Bench times
+  * `stripRootSort(query)`, and a variant exists only for harness work
+  * that is not a sort) — and five detectors run over it. Each detector's hits must equal a reviewed known-good set
   * kept as data below: a new hit is an unreviewed plan to look at, a
   * vanished one is a reviewed entry to drop.
   *

@@ -44,38 +44,24 @@ class OperatorsSpec extends AnyFunSuite {
   test("MergeOps.upsert: explicit null in update OVERWRITES base (dict-merge semantics)") {
     val base = Seq(("a", Option(1.0), "x"), ("b", Option(2.0), "y")).toDF("k", "v", "o")
     val upd = Seq(("a", None: Option[Double]), ("c", Option(9.0))).toDF("k", "v")
-    for (bc <- Seq(false, true)) {
-      val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"), broadcastUpdates = bc)
-        .orderBy("k").collect().map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2))))
-      assert(out.toSeq == Seq(
-        ("a", None, Some("x")),      // matched: null update wins, other col kept
-        ("b", Some(2.0), Some("y")), // unmatched base row untouched
-        ("c", Some(9.0), None)))     // inserted; non-update col null
-    }
+    val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"))
+      .orderBy("k").collect().map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2))))
+    assert(out.toSeq == Seq(
+      ("a", None, Some("x")),      // matched: null update wins, other col kept
+      ("b", Some(2.0), Some("y")), // unmatched base row untouched
+      ("c", Some(9.0), None)))     // inserted; non-update col null
   }
 
   test("MergeOps.upsert: null merge key matches null-safely in BOTH modes — no duplicate row") {
-    // A null-key update must update the null-key base row exactly once;
-    // before the fix the broadcast path's null-UNSAFE semi-join also
-    // re-inserted it.
+    // Both passes match null-safely: the update join updates the null-key
+    // base row, and the insert set's semi-join sees that match, so the
+    // row is not re-inserted as well.
     val base = Seq((Option("a"), Option(1.0)), (None: Option[String], Option(2.0)))
       .toDF("k", "v")
     val upd = Seq((None: Option[String], Option(9.0))).toDF("k", "v")
-    for (bc <- Seq(false, true)) {
-      val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"), broadcastUpdates = bc)
-        .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq.sortBy(_.toString)
-      assert(out == Seq((None, Some(9.0)), (Some("a"), Some(1.0))),
-        s"broadcastUpdates=$bc")
-    }
-  }
-
-  test("MergeOps.upsert: insertDefaults fill non-update columns on inserts only") {
-    val base = Seq(("a", Option(1.0), "x")).toDF("k", "v", "o")
-    val upd = Seq(("c", Option(9.0))).toDF("k", "v")
-    val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"),
-        insertDefaults = Map("o" -> lit("dflt")))
-      .orderBy("k").collect().map(r => (r.getString(0), r.getString(2)))
-    assert(out.toSeq == Seq(("a", "x"), ("c", "dflt")))
+    val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"))
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq.sortBy(_.toString)
+    assert(out == Seq((None, Some(9.0)), (Some("a"), Some(1.0))))
   }
 
   // ---------------------------------------------------------- EncodeOps
