@@ -21,7 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    start), and every query runs once untimed before `Runs` timed runs;
   *    the median is recorded. `warm_compiles` counts classes the timed
   *    runs still compiled ([[Sessions.builder]] sizes the codegen cache
-  *    so the warm-up absorbs it).
+  *    so the warm-up absorbs it), and `warm_files_discovered` files they
+  *    still listed ([[Tables]] resolves each table once per session).
   *  - Cooldown between queries: cached blocks unpersisted and two GC
   *    passes, so no query pays for an earlier one's storage or GC debt.
   *  - Retry: a warm run faster than the timed median by > 50 ms is
@@ -135,6 +136,13 @@ object Bench {
       org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount
     val warmCompiles = scala.collection.mutable.Map[String, Long]()
+    // Files listed during the same block, from Spark's JVM-wide counter of
+    // files a file index discovered: a timed run that lists a table pays
+    // the listing (and its schema-inference job) inside its timing.
+    def discoveredFiles(): Long =
+      org.apache.spark.metrics.source.HiveCatalogMetrics
+        .METRIC_FILES_DISCOVERED.getCount
+    val warmFiles = scala.collection.mutable.Map[String, Long]()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       try query(name).write.format("noop").mode("overwrite").save()
@@ -196,29 +204,33 @@ object Bench {
     val retriedNames = scala.collection.mutable.Buffer[String]()
     val resultsPass1 = qs.map { name =>
       spark.sparkContext.setJobDescription(s"bench:$name")
-      def attempt(): (Double, Seq[Double], Double, Long) = {
+      def attempt(): (Double, Seq[Double], Double, Long, Long) = {
         cooldown()
         val tk0 = taskMsCounter.get()
         val warm = once(name)
         val cg0 = compiledClasses()
+        val fd0 = discoveredFiles()
         val timed = Seq.fill(Runs)(once(name)).sorted
         (warm, timed, (taskMsCounter.get() - tk0) / 1e3 / (Runs + 1),
-          compiledClasses() - cg0)
+          compiledClasses() - cg0, discoveredFiles() - fd0)
       }
-      var (warm, timed, taskSec, compiles) = attempt()
+      var (warm, timed, taskSec, compiles, files) = attempt()
       var median = timed(timed.size / 2)
       var retries = 0
       while (warm < median - 0.05 && retries < 2 && retryBudget > 0) {
         retries += 1; retryBudget -= 1
-        val (w2, t2, k2, c2) = attempt()
+        val (w2, t2, k2, c2, f2) = attempt()
         val m2 = t2(t2.size / 2)
-        if (m2 < median) { warm = w2; timed = t2; median = m2; taskSec = k2; compiles = c2 }
+        if (m2 < median) {
+          warm = w2; timed = t2; median = m2; taskSec = k2; compiles = c2; files = f2
+        }
       }
       if (retries > 0) retriedNames += name
       val retryNote = if (retries > 0) s" retries=$retries" else ""
       System.err.println(
-        f"[bench] $name%-22s warm=$warm%7.2f runs=${timed.map(t => f"$t%.2f").mkString(",")} median=$median%7.2f task=$taskSec%6.2f compiles=$compiles$retryNote")
+        f"[bench] $name%-22s warm=$warm%7.2f runs=${timed.map(t => f"$t%.2f").mkString(",")} median=$median%7.2f task=$taskSec%6.2f compiles=$compiles files=$files$retryNote")
       warmCompiles(name) = compiles
+      warmFiles(name) = files
       (name, median, warm +: timed, taskSec)
     }
     // Revisit: a contention window covering a whole warm+timed block
@@ -296,12 +308,15 @@ object Bench {
     val taskJson = results.map { case (k, _, _, tk) =>
       "\"" + k + "\":" + f"$tk%.3f"
     }.mkString("{", ",", "}")
-    // Warm-compile additions: the total on both lines, the nonzero
-    // queries (most compiles first) in bench.json only.
-    val compiling = results.map(r => r._1 -> warmCompiles(r._1)).filter(_._2 > 0)
-    val warmCompilesTotal = compiling.map(_._2).sum
-    val warmCompilesJson = compiling.sortBy(-_._2)
-      .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}")
+    // Warm-compile and warm-listing additions: the total on both lines,
+    // the nonzero queries (largest first) in bench.json only.
+    def warmCounts(byQuery: collection.Map[String, Long]): (Long, String) = {
+      val nonzero = results.map(r => r._1 -> byQuery(r._1)).filter(_._2 > 0)
+      (nonzero.map(_._2).sum, nonzero.sortBy(-_._2)
+        .map { case (k, n) => "\"" + k + "\":" + n }.mkString("{", ",", "}"))
+    }
+    val (warmCompilesTotal, warmCompilesJson) = warmCounts(warmCompiles)
+    val (warmFilesTotal, warmFilesJson) = warmCounts(warmFiles)
     // skipped_tables rides every line: a missing view would otherwise show
     // only as fast-failing queries.
     val skippedJson = skippedTables.mkString("[\"", "\",\"", "\"]")
@@ -330,7 +345,7 @@ object Bench {
     val revisedJson = boundedListJson(revisedNames.sortBy(-_._2).map(_._1).toSeq, 8)
     val failedJson = boundedListJson(failedNames.toSeq, 12)
     def compactOf(rs: Seq[(String, Double, Seq[Double], Double)]) =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"omitted":${results.size - rs.size},"warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs%.1f,"sql_floor_pre_ms":$sqlFloorPre%.1f,"sql_floor_post_ms":$sqlFloorPost%.1f,"task_total":$taskTotal%.1f,"warm_compiles":$warmCompilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson,"isolated":$isolatedJsonCompact$skippedField,"queries":${qJson(rs)(v => f"$v%.3f")},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"omitted":${results.size - rs.size},"warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs%.1f,"sql_floor_pre_ms":$sqlFloorPre%.1f,"sql_floor_post_ms":$sqlFloorPost%.1f,"task_total":$taskTotal%.1f,"warm_compiles":$warmCompilesTotal,"warm_files_discovered":$warmFilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson,"isolated":$isolatedJsonCompact$skippedField,"queries":${qJson(rs)(v => f"$v%.3f")},"sf":"$sfDir"}"""
     // Drop the cheapest query until the line fits ~1850 chars (the
     // 2000-char window minus sbt's trailing line).
     val byCost = results.sortBy(-_._2)
@@ -341,7 +356,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"warm_compiles":$warmCompilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson,"warm_compiles_by_query":$warmCompilesJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"warm_compiles":$warmCompilesTotal,"warm_files_discovered":$warmFilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson,"warm_compiles_by_query":$warmCompilesJson,"warm_files_discovered_by_query":$warmFilesJson}"""
     spark.sparkContext.removeSparkListener(taskListener)
     (compact, full)
   }

@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver's synthetic TPC-H-ish parquet tables (TESTDATA.md).
@@ -8,24 +11,55 @@ import org.apache.spark.sql.functions._
   * All engine queries read through here so that scale-sensitive read options
   * live in one place. Tables are plain parquet directories/files named
   * `<table>.parquet` under a scale-factor dir.
-  */
+  *
+  * Each table is resolved once per session. The first [[load]] of a path
+  * runs `spark.read.parquet`, which lists the files and runs a one-task
+  * job to infer the schema; every later load wraps the resolved relation
+  * in a fresh `LogicalRelation` (fresh expression ids, so self-joins
+  * work) with no listing and no job. A warm `spark.read.parquet` of
+  * sf0.01 lineitem takes ≈100 ms on a 4-core VM, most of a short query's
+  * build; the cached load ≈3 ms. Invariants:
+  *  - Table files do not change under a session. A caller that rewrites a
+  *    table calls [[refresh]] before it loads the table again.
+  *  - A relation is only handed out in the session that resolved it: its
+  *    scan reads that session's conf, and its schema was inferred under it
+  *    (`nanosAsLong` decides how `events.ts` reads).
+  *  - A load that throws caches nothing, so the next call retries and
+  *    [[registerAll]] keeps its per-table isolation.
+  *  - No eviction. The program makes one session per JVM (tests add one
+  *    sibling), so the map holds a few relations per table directory. */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val resolved =
+    new ConcurrentHashMap[(SparkSession, String), HadoopFsRelation]()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // A function that throws leaves no mapping behind.
+    val rel = resolved.computeIfAbsent((spark, path), _ =>
+      spark.read.parquet(path).queryExecution.analyzed.collectFirst {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+      }.get)
+    spark.baseRelationToDataFrame(rel)
+  }
+
+  /** Drops every table `spark` has resolved: the next [[load]] of each
+    * lists its files and infers its schema again. */
+  def refresh(spark: SparkSession): Unit =
+    resolved.keySet.removeIf(_._1 eq spark)
 
   /** Fan a NARROW scan out to the session's parallelism — for kernel-
     * heavy per-row stages (tokenize, rolling hash, vector math) whose
     * map work would otherwise serialize on however few splits the input
     * file has. The local fixtures are single-row-group parquet, so their
     * scans are 1 task and a 46 µs/row kernel over 150k rows burns 7 s of
-    * ONE core on a 32-core session (round-8 bench finding, see
-    * fn_normalize_pipeline). Widen-only: at real scale the scan already
-    * carries >= parallelism splits and this is the identity — it never
-    * narrows, so it can never concentrate a 100 TB scan. Explicit
+    * ONE core on a 32-core session (fn_normalize_pipeline). Widen-only:
+    * at real scale the scan already carries >= parallelism splits and
+    * this is the identity — it never narrows, so it can never
+    * concentrate a 100 TB scan. Explicit
     * numPartitions keeps AQE from coalescing the tiny exchange away.
     * Apply ONLY where the per-row kernel dominates the stage — a fanned
     * exchange on a scan-light query is pure overhead. */
@@ -65,17 +99,15 @@ object Tables {
 
   /** Register all tables as temp views so every operator is SQL-addressable.
     *
-    * Per-table isolation (round-6 postmortem): registerAll used to run
-    * OUTSIDE the harness mains' per-query try, so ONE unreadable table —
-    * the regenerated events.parquet switching to TIMESTAMP_NTZ — aborted
-    * the entire Bench/Verify startup and zeroed the round's artifacts.
-    * A table that fails to register now logs and is skipped; only the
-    * queries touching it fail, and they fail visibly per-query.
+    * Per-table isolation: registerAll runs outside the harness mains'
+    * per-query try, so one unreadable table (a regenerated fixture with a
+    * new column type, say) must not abort the whole Bench/Verify startup.
+    * A table that fails to register logs and is skipped; only the queries
+    * touching it fail, and they fail visibly per query.
     *
     * Returns the names that FAILED to register so the harness mains can
-    * surface them in their JSON artifacts — automation that reads only
-    * the artifacts (not stderr) must still see that a table was skipped
-    * (round-7 advice). */
+    * surface them in their JSON artifacts: automation that reads only
+    * the artifacts (not stderr) must still see that a table was skipped. */
   def registerAll(spark: SparkSession, dir: String): Seq[String] = {
     def tryRegister(n: String)(mk: => DataFrame): Option[String] =
       try { mk.createOrReplaceTempView(n); None }
@@ -133,9 +165,8 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // parallelismFirst stays at its default (true). The r9 probe set
-      // it false to chase per-task overhead on the many small queries:
-      // the small queries did NOT speed up and the CPU-dense g2
+      // parallelismFirst stays at its default (true). With it false, the
+      // many small queries did NOT speed up and the CPU-dense g2
       // triangle intersect collapsed to one 64MB-advisory task
       // (5.2 -> 19.6 s). Byte-size advisories cannot see CPU density;
       // keep scheduling width tied to cores.

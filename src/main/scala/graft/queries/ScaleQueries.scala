@@ -406,7 +406,20 @@ object ScaleQueries {
     val exact = docTerm.groupBy("term").agg(sum("tf").as("exact_cnt"))
       .checkpointed()
     val cms = graft.operators.CmsOps.cmsBuild(exact, "term", "exact_cnt", cmsD, cmsW)
-    val top = exact.orderBy(col("exact_cnt").desc, col("term")).limit(15)
+    // Top-15 as `rank() <= 15` over one global order, not
+    // `orderBy.limit(15)`: the estimate's projections are pushed through
+    // a limit and split it from its sort, so Spark plans a codegen'd
+    // sort+limit whose counter it names from a JVM-wide sequence and a
+    // warm run recompiles 4 classes. The rank filter plans a window group
+    // limit (a bounded top-15 per partition before the single-partition
+    // exchange) with no limit operator; `row_number()` over an
+    // unpartitioned window is planned as a limit again. Terms are the
+    // grouping key, so (exact_cnt, term) is unique and rank equals row
+    // number.
+    val top = exact
+      .withColumn("__rank", rank().over(Window.orderBy(col("exact_cnt").desc, col("term"))))
+      .filter(col("__rank") <= 15)
+      .drop("__rank")
     graft.operators.CmsOps.cmsEstimate(cms, top, "term", cmsD, cmsW)
       .withColumn("over_bp",
         expr("(cms_cnt - exact_cnt) * 10000 div exact_cnt"))

@@ -1,13 +1,14 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry, Tables}
+import graft.{Bench, Sessions, SparkEntry, Tables}
 
 /** Dev timer for the inner perf loop: run ONLY the named registry
   * queries against a sf dir (args: sfDir reps name...), each rep
   * GC-separated, and print per-query min/median — the isolated-number
   * methodology of tools/duck_ratio.py without the DuckDB side or a
-  * full Verify run. Sinks through noop like Bench. Not part of the
-  * query surface. */
+  * full Verify run. Times the form Bench times ([[Bench.timedForm]]: no
+  * oracle-only root sort) into the noop sink. Not part of the query
+  * surface. */
 object TimeSome {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: TimeSome <sfDir> <reps> <name...>")
@@ -22,11 +23,13 @@ object TimeSome {
     graft.functions.TextFns.registerAll(spark)
     def once(name: String): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
+      Bench.timedForm(spark, sfDir, name)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    names.foreach(n => once(n)) // warm JIT + file listing
+    // Untimed warm-up: JIT and generated classes. The tables were
+    // resolved once by registerAll.
+    names.foreach(n => once(n))
     val ts = Array.fill(reps)(names.map { n =>
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc(); Thread.sleep(300)

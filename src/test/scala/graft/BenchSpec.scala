@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A query that throws is not a timing: Bench leaves it out of every
   * timed field and names it under `failed`, on both emitted lines. A
   * timed run that compiles generated classes is counted under
-  * `warm_compiles`. */
+  * `warm_compiles`, one that lists files under `warm_files_discovered`. */
 class BenchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -40,5 +40,25 @@ class BenchSpec extends AnyFunSuite {
     assert(total(full) == total(compact), full)
     val byQuery = """"warm_compiles_by_query":\{([^}]*)\}""".r.findFirstMatchIn(full).get.group(1)
     assert(byQuery == s""""fresh":${total(full)}""", full)
+  }
+
+  test("warm_files_discovered counts files listed by timed runs, per query") {
+    // `reread` resolves a parquet path outside Tables on every run, so each
+    // of its 3 timed runs lists the file again; `tables` reads through
+    // Tables, which resolved the table in its warm-up.
+    val root = java.nio.file.Files.createTempDirectory("bench_files").toString
+    spark.range(10).toDF("r_regionkey").coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/region.parquet")
+    val (compact, full) = Bench.run(spark, "unused", Seq("tables", "reread"), Nil) {
+      case "tables" => Tables.load(spark, root, "region")
+      case _ => spark.read.parquet(s"$root/region.parquet")
+    }
+    def total(line: String) =
+      """"warm_files_discovered":([0-9]+)""".r.findFirstMatchIn(line).get.group(1).toLong
+    assert(total(compact) >= 3, compact)
+    assert(total(full) == total(compact), full)
+    val byQuery = """"warm_files_discovered_by_query":\{([^}]*)\}""".r
+      .findFirstMatchIn(full).get.group(1)
+    assert(byQuery == s""""reread":${total(full)}""", full)
   }
 }

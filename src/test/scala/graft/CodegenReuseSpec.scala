@@ -101,7 +101,8 @@ class CodegenReuseSpec extends AnyFunSuite {
     // orders its four countDistinct groups by a hash of per-run
     // expression ids, so a warm run can plan them in a new order and
     // compile that order's classes.
-    val names = Seq("dedup_cc_best", "pipe_dedup_pass", "dedup_lsh_recall", "j2_zip_join")
+    val names = Seq("dedup_cc_best", "pipe_dedup_pass", "dedup_lsh_recall", "j2_zip_join",
+      "t_cms_heavy")
     // The form Bench times, written to the noop sink.
     def run(name: String): Unit =
       Bench.timedForm(spark, sfDir, name).write.format("noop").mode("overwrite").save()

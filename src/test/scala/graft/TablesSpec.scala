@@ -1,15 +1,25 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Tables.events must read the SAME (ts, ts_ns) values out of every ts
   * encoding the fixture generator has shipped: int64 nanos (legacy,
-  * via nanosAsLong), TIMESTAMP micros, and TIMESTAMP_NTZ micros (the
-  * round-6 regeneration that aborted the whole round before the NTZ
-  * branch existed). The loader seam is the one place that absorbs a
-  * fixture-schema change — pin all three paths. */
+  * via nanosAsLong), TIMESTAMP micros, and TIMESTAMP_NTZ micros. The
+  * loader seam is the one place that absorbs a fixture-schema change —
+  * pin all three paths.
+  *
+  * Tables resolves each table once per session: a later load lists no
+  * file and starts no job, hands out fresh expression ids, is bound to
+  * its own session, and re-resolves after `Tables.refresh`. */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -82,5 +92,105 @@ class TablesSpec extends AnyFunSuite {
     val wide = (1 to 100).toDF("x").repartition(p + 7)
     assert(Tables.fanOut(wide).rdd.getNumPartitions == p + 7,
       "fanOut narrowed an already-parallel input")
+  }
+
+  /** Jobs started and files discovered while `f` runs. Jobs are counted
+    * by a listener between two marker jobs: the listener bus delivers
+    * events in order, so the jobs it sees between the markers are f's. */
+  private def jobsAndFiles(f: => Unit): (Int, Long) = {
+    val marker = "graft.test.tablesScope"
+    val jobs = new AtomicInteger
+    @volatile var recording = false
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(marker))) match {
+          case Some("start") => recording = true
+          case Some("end") => recording = false; done.countDown()
+          case _ => if (recording) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    def markedJob(phase: String): Unit = {
+      sc.setLocalProperty(marker, phase)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      markedJob("start")
+      val f0 = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      f
+      val files = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - f0
+      markedJob("end")
+      assert(done.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (jobs.get, files)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A fresh directory holding a `nation.parquet` of `n` rows. */
+  private def nationDir(n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("tables_cache").toString
+    writeNation(dir, n)
+    dir
+  }
+
+  private def writeNation(dir: String, n: Int): Unit = {
+    import spark.implicits._
+    (0 until n).map(i => (i, s"n$i", i % 5)).toDF("n_nationkey", "n_name", "n_regionkey")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/nation.parquet")
+  }
+
+  private def relationOf(df: DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.get
+
+  test("a second load of a table starts no job and discovers no file") {
+    val dir = nationDir(25)
+    // Control: the first load lists the files and infers the schema.
+    val (firstJobs, firstFiles) = jobsAndFiles(Tables.load(spark, dir, "nation"))
+    assert(firstJobs >= 1 && firstFiles >= 1,
+      s"the first load ran $firstJobs jobs over $firstFiles files: the probe sees nothing")
+    val (jobs, files) = jobsAndFiles(Tables.load(spark, dir, "nation"))
+    assert((jobs, files) == ((0, 0L)), s"a second load ran $jobs jobs over $files files")
+    assert(Tables.load(spark, dir, "nation").count() == 25)
+  }
+
+  test("a self-join of two loads counts as the SQL self-join") {
+    val dir = nationDir(25)
+    val a = Tables.load(spark, dir, "nation")
+    val b = Tables.load(spark, dir, "nation")
+    val joined = a.join(b, a("n_regionkey") === b("n_regionkey")).count()
+    val path = s"$dir/nation.parquet"
+    val sql = spark.sql(
+      s"SELECT count(*) FROM parquet.`$path` a JOIN parquet.`$path` b " +
+        "ON a.n_regionkey = b.n_regionkey").head().getLong(0)
+    assert(sql == 125)
+    assert(joined == sql)
+  }
+
+  test("after refresh, a rewritten table loads with its new rows") {
+    val dir = nationDir(3)
+    assert(Tables.load(spark, dir, "nation").count() == 3)
+    Tables.refresh(spark)
+    writeNation(dir, 7)
+    assert(Tables.load(spark, dir, "nation").count() == 7)
+  }
+
+  test("a failed load caches nothing: the next load retries") {
+    val dir = java.nio.file.Files.createTempDirectory("tables_missing").toString
+    intercept[Exception](Tables.load(spark, dir, "nation"))
+    writeNation(dir, 4)
+    assert(Tables.load(spark, dir, "nation").count() == 4)
+  }
+
+  test("a sibling session's load is bound to the sibling session") {
+    val dir = nationDir(5)
+    val sibling: SparkSession = spark.newSession()
+    val mine = relationOf(Tables.load(spark, dir, "nation"))
+    val theirs = relationOf(Tables.load(sibling, dir, "nation"))
+    assert(mine.sparkSession eq spark)
+    assert(theirs.sparkSession eq sibling)
+    assert(Tables.load(sibling, dir, "nation").count() == 5)
   }
 }
