@@ -201,9 +201,11 @@ object AudioOps {
     * pre_processing/process_all.py:382-392.)
     *
     * Returns (mono samples — channel average, librosa mono=True
-    * semantics — and the sample rate). Throws IllegalArgumentException
-    * on malformed framing; callers that only gate on duration should
-    * use MultimodalOps.mp3Probe instead.
+    * semantics — and the sample rate). On any input it either returns
+    * or throws IllegalArgumentException (malformed framing) or
+    * UnsupportedOperationException (outside the native class), never
+    * an indexing error; `Mp3SpectralSpec` fuzzes this. Callers that
+    * only gate on duration should use MultimodalOps.mp3Probe instead.
     */
   def decodeMp3(bytes: Array[Byte]): (Array[Float], Int) = {
     require(bytes != null && bytes.length >= 4, "not an MPEG audio stream")
@@ -233,9 +235,12 @@ object AudioOps {
     // ever be addressed.
     var reservoir = new Array[Byte](0)
     // Per-channel decode state (lazily sized on the first audible frame)
-    var overlaps: Array[Array[Array[Float]]] = null
+    var overlaps: Array[Array[Float]] = null
     var synth: Array[SynthState] = null
     var prevSf: Array[Array[Int]] = null
+    var xrs: Array[Array[Float]] = null
+    val slots = new Array[Float](576) // one granule-channel's subband samples
+    val chanPcm = new Array[Float](576)
 
     def endsWithTag(off: Int): Boolean =
       (bytes.length - off == 128 && bytes(off) == 'T' && bytes(off + 1) == 'A' &&
@@ -306,17 +311,21 @@ object AudioOps {
         System.arraycopy(reservoir, reservoir.length - si.mainDataBegin, buf, 0, si.mainDataBegin)
         System.arraycopy(mainData, 0, buf, si.mainDataBegin, mainData.length)
         if (overlaps == null) {
-          overlaps = Array.fill(ch)(Array.fill(32)(new Array[Float](18)))
+          overlaps = Array.fill(ch)(new Array[Float](576))
           synth = Array.fill(ch)(new SynthState)
           prevSf = Array.fill(ch)(new Array[Int](21))
+          xrs = Array.fill(ch)(new Array[Float](576))
         }
         require(overlaps.length == ch, s"channel-count change mid-stream at offset $o")
         val frame = new Array[Float](spf)
         val r = new BitReader(buf, 0)
         var gr = 0
         while (gr < 2) {
-          val xrs = Array.tabulate(ch)(c =>
-            decodeSpectrum(r, si.granules(gr)(c), si.scfsi(c), gr, prevSf(c)))
+          var c = 0
+          while (c < ch) {
+            decodeSpectrum(r, si.granules(gr)(c), si.scfsi(c), gr, prevSf(c), xrs(c))
+            c += 1
+          }
           if (ch == 2 && modeExt == 2) { // M/S stereo: closed-form matrix
             val s2 = math.sqrt(2.0).toFloat
             var i = 0
@@ -327,16 +336,15 @@ object AudioOps {
               i += 1
             }
           }
-          var c = 0
+          c = 0
           while (c < ch) {
             val g = si.granules(gr)(c)
             if (!(g.windowSwitching && g.blockType == 2)) antialias(xrs(c))
-            val slots = imdctGranule(xrs(c),
-              if (g.windowSwitching) g.blockType else 0, overlaps(c))
-            val chanPcm = new Array[Float](576)
+            imdctGranule(xrs(c), if (g.windowSwitching) g.blockType else 0,
+              overlaps(c), slots)
             var t = 0
             while (t < 18) {
-              synthSlot(slots(t), synth(c), chanPcm, t * 32)
+              synthSlot(slots, t * 32, synth(c), chanPcm, t * 32)
               t += 1
             }
             // mono mixdown by channel average (librosa mono=True)
@@ -364,8 +372,4 @@ object AudioOps {
     pcmChunks.foreach { c => System.arraycopy(c, 0, out, off, c.length); off += c.length }
     (out, sr0)
   }
-
-  /** Historical name for [[decodeMp3]] (rounds 1-9 decoded only the
-    * zero-payload silent class); retained as an alias. */
-  def decodeMp3Silent(bytes: Array[Byte]): (Array[Float], Int) = decodeMp3(bytes)
 }

@@ -8,12 +8,14 @@ import javax.sound.sampled.{AudioFormat, AudioSystem}
   * `javax.sound.sampled` SPI chain (reference decodes mp3 via librosa,
   * pre_processing/process_all.py:382-392). Out of the box the JDK SPIs
   * cover wav/au/aiff in any PCM width plus ULAW/ALAW; MPEG audio routes
-  * to the native zero-payload Layer III decode
-  * ([[graft.operators.AudioOps.decodeMp3Silent]] — real framing/side
-  * info, spec-exact silence PCM) and spectral-payload streams raise a
-  * pointed error until an mp3/ogg SPI jar lands on the executor
-  * classpath, which extends coverage with no code change — the point of
-  * the trait boundary. Everything non-audio still delegates to
+  * to the native Layer III decode ([[graft.operators.AudioOps.decodeMp3]]:
+  * real framing, side info and bit reservoir; count1 spectral frames
+  * decode to audible PCM and zero-payload frames to spec-exact
+  * silence). Streams that need the spec's printed tables (big-value
+  * Huffman codes, scalefactor bands, short blocks, LSF) raise a pointed
+  * UnsupportedOperationException until an mp3/ogg SPI jar lands on the
+  * executor classpath, which extends coverage with no code change — the
+  * point of the trait boundary. Everything non-audio still delegates to
   * [[StubExternals]]' deterministic fakes.
   *
   * Decode path: container parse -> convert to 16-bit signed little-endian
@@ -27,19 +29,19 @@ object JavaSoundExternals extends Externals {
 
   /** Real PDFs (by the `%PDF-` magic, §7.5.2) route to the native
     * extractor ([[graft.operators.PdfText]] — linear object scan,
-    * Inflater-backed FlateDecode, BT/ET text operators; r13, the
-    * decodeAudio/Mp3Layer3 precedent). Non-PDF payloads keep the
-    * fixture stub semantics (the reference fixtures use ASCII
-    * payloads as stand-in "PDFs"). */
+    * Inflater-backed FlateDecode, BT/ET text operators), as real MPEG
+    * audio routes to the native decoder in [[decodeAudio]]. Non-PDF
+    * payloads keep the fixture stub semantics (the reference fixtures
+    * use ASCII payloads as stand-in "PDFs"). */
   override def extractPdfText(bytes: Array[Byte]): String =
     if (hasPdfMagic(bytes)) graft.operators.PdfText.extract(bytes)
     else StubExternals.extractPdfText(bytes)
 
   /** `%PDF-` anywhere in the first 1024 bytes — Acrobat's own
-    * tolerance (r13 review: crawled PDFs routinely carry HTTP/mail
-    * junk prefixes; missing the magic would dump the raw binary into
-    * the corpus through the ASCII stub). The extractor's object scan
-    * is offset-independent, so no trimming is needed. */
+    * tolerance: crawled PDFs routinely carry HTTP/mail junk prefixes,
+    * and missing the magic would dump the raw binary into the corpus
+    * through the ASCII stub. The extractor's object scan is
+    * offset-independent, so no trimming is needed. */
   private def hasPdfMagic(b: Array[Byte]): Boolean = {
     if (b == null || b.length < 5) return false
     val lim = math.min(b.length - 5, 1024)
@@ -57,8 +59,7 @@ object JavaSoundExternals extends Externals {
 
   /** Real image resize for the formats the STOCK JDK decodes
     * (javax.imageio ships png/jpeg/bmp/gif/wbmp readers and writers in
-    * the java.desktop module — the old "no image codec in this
-    * container" note was wrong for a full JDK; r13, verified headless).
+    * the java.desktop module, and they work headless).
     * Sniffs the container magic, decodes, area-averaging scales (the
     * anti-aliasing resample a thumbnail pipeline wants, deterministic
     * in-JVM), re-encodes in the SAME container. GIF re-encodes as PNG

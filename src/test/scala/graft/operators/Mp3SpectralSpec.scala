@@ -93,7 +93,38 @@ class Mp3SpectralSpec extends AnyFunSuite {
     }
   }
 
+  /** Overwrite `n` bits of a CRC-less frame's side info (which starts 4
+    * bytes into the frame at `frameOff`) with `v`, MSB first. */
+  private def setSideBits(buf: Array[Byte], frameOff: Int, startBit: Int,
+      v: Int, n: Int): Unit = {
+    var i = 0
+    while (i < n) {
+      val bit = (v >> (n - 1 - i)) & 1
+      val abs = (frameOff + 4) * 8 + startBit + i
+      val mask = 1 << (7 - (abs % 8))
+      if (bit == 1) buf(abs / 8) = (buf(abs / 8) | mask).toByte
+      else buf(abs / 8) = (buf(abs / 8) & ~mask).toByte
+      i += 1
+    }
+  }
+
   // -------------------------------- independent direct-form reference
+  /** The spec's IMDCT windows for block types 0 (normal), 1 (start) and
+    * 3 (stop), double precision. */
+  private def refWindow(blockType: Int, i: Int): Double = blockType match {
+    case 0 => math.sin(math.Pi / 36.0 * (i + 0.5))
+    case 1 =>
+      if (i < 18) math.sin(math.Pi / 36.0 * (i + 0.5))
+      else if (i < 24) 1.0
+      else if (i < 30) math.sin(math.Pi / 12.0 * (i - 18 + 0.5))
+      else 0.0
+    case 3 =>
+      if (i < 6) 0.0
+      else if (i < 12) math.sin(math.Pi / 12.0 * (i - 6 + 0.5))
+      else if (i < 18) 1.0
+      else math.sin(math.Pi / 36.0 * (i + 0.5))
+  }
+
   /** Full pipeline from known spectral lines, double precision, literal
     * ISO equations, no table/FIFO sharing with Mp3Layer3 beyond the
     * (data) synthesis prototype. One granule per call; caller threads
@@ -112,13 +143,16 @@ class Mp3SpectralSpec extends AnyFunSuite {
         xr(18 * sb - 1 - i) = a * cs - b * ca
         xr(18 * sb + i) = b * cs + a * ca
       }
-      // IMDCT 36, window type 0, overlap-add, frequency inversion
+      synth(imdct(xr, 0))
+    }
+    /** IMDCT 36, window, overlap-add, frequency inversion: (time)(subband). */
+    def imdct(xr: Array[Double], blockType: Int): Array[Array[Double]] = {
       val slots = Array.fill(18)(new Array[Double](32))
       for (sb <- 0 until 32) {
         val z = Array.tabulate(36) { i =>
           (0 until 18).map(k => xr(sb * 18 + k) *
             math.cos(math.Pi / 72.0 * (2 * i + 1 + 18) * (2 * k + 1))).sum *
-            math.sin(math.Pi / 36.0 * (i + 0.5))
+            refWindow(blockType, i)
         }
         for (i <- 0 until 18) {
           var v = z(i) + overlap(sb)(i)
@@ -127,9 +161,12 @@ class Mp3SpectralSpec extends AnyFunSuite {
           overlap(sb)(i) = z(18 + i)
         }
       }
-      // synthesis: literal x(j) = 32 sum_m sum_k S_{t-m}(k) g(32m+j) cos(...)
-      val out = new Array[Double](576)
-      for (t <- 0 until 18) {
+      slots
+    }
+    /** Synthesis: literal x(j) = 32 sum_m sum_k S_{t-m}(k) g(32m+j) cos(...). */
+    def synth(slots: Array[Array[Double]]): Array[Double] = {
+      val out = new Array[Double](32 * slots.length)
+      for (t <- slots.indices) {
         history += slots(t)
         for (j <- 0 until 32) {
           var acc = 0.0
@@ -310,23 +347,12 @@ class Mp3SpectralSpec extends AnyFunSuite {
     // side bits: mdb 9 + priv 5 + scfsi 4 = 18; gr0: p23(12) ends at 30,
     // big_values 9 ends at 39; gg 8 at 47; sfc 4 at 51; wsf 1 at 52;
     // tsel0 5 bits at 57.
-    def setBits(buf: Array[Byte], startBit: Int, v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        val bit = (v >> (n - 1 - i)) & 1
-        val abs = 4 * 8 + startBit + i // side info starts at byte 4
-        val mask = 1 << (7 - (abs % 8))
-        if (bit == 1) buf(abs / 8) = (buf(abs / 8) | mask).toByte
-        else buf(abs / 8) = (buf(abs / 8) & ~mask).toByte
-        i += 1
-      }
-    }
-    setBits(bv, 30, 2, 9); setBits(bv, 52, 1, 5)
+    setSideBits(bv, 0, 30, 2, 9); setSideBits(bv, 0, 52, 1, 5)
     val e1 = intercept[UnsupportedOperationException](AudioOps.decodeMp3(bv))
     assert(e1.getMessage.contains("Huffman tables"))
     // count1 table A
     val a = frame(210, Seq(Seq(1, 0, 0, 0)))
-    setBits(a, 18 + 58, 0, 1) // count1table_select bit (last of gr0's 59)
+    setSideBits(a, 0, 18 + 58, 0, 1) // count1table_select bit (last of gr0's 59)
     val e2 = intercept[UnsupportedOperationException](AudioOps.decodeMp3(a))
     assert(e2.getMessage.contains("table A"))
     // Layer II routes to the seam, not an IllegalArgumentException
@@ -370,5 +396,149 @@ class Mp3SpectralSpec extends AnyFunSuite {
     info(f"6-frame steady-state peak at gg=206: $peak6%.6f")
     assert(math.abs(peak6 - graft.queries.IoQueries.Mp3AudiblePeakGg206) < 1e-4,
       s"steady-state peak moved: $peak6 - re-freeze IoQueries.Mp3AudiblePeakGg206")
+  }
+
+  test("full-band IMDCT (block types 0, 1, 3) and synthesis match the direct form") {
+    // Granules 0-3 and 7 carry nonzero values in all 576 lines, so both
+    // halves of the synthesis butterflies and every branch of the DCT-IV
+    // unfold carry signal. Subbands 19 and 20 go nonzero -> zero (4) ->
+    // nonzero (5), and 31 is zero in 5 and 6: the zero-subband skip with
+    // a live overlap, on odd and even subbands. Subbands 2-15 are zero in
+    // 5 and 6, so granule 6's slots are zero there and nonzero above:
+    // the matrixing bound must come from the high side of each pair.
+    val rnd = new scala.util.Random(20261019L)
+    val runs = Seq(Seq.fill(8)(0), Seq.fill(8)(1), Seq.fill(8)(3), Seq(0, 1, 3, 0, 1, 3, 0, 1))
+    var worstImdct = 0.0
+    var worstPcm = 0.0
+    for (types <- runs) {
+      val ref = new RefPipeline
+      val overlap = new Array[Float](576)
+      val slots = new Array[Float](576)
+      val st = new Mp3Layer3.SynthState
+      val pcm = new Array[Float](576)
+      for ((bt, g) <- types.zipWithIndex) {
+        val xr = Array.fill(576) {
+          val m = (0.25f + rnd.nextFloat()) * 8.0f
+          if (rnd.nextBoolean()) m else -m
+        }
+        def zeroBands(from: Int, until: Int): Unit =
+          java.util.Arrays.fill(xr, 18 * from, 18 * until, 0.0f)
+        if (g == 4) zeroBands(19, 21)
+        if (g == 5 || g == 6) { zeroBands(31, 32); zeroBands(2, 16) }
+        Mp3Layer3.imdctGranule(xr, bt, overlap, slots)
+        val want = ref.imdct(xr.map(_.toDouble), bt)
+        val peak = want.flatten.map(math.abs).max
+        var diff = 0.0
+        for (t <- 0 until 18; sb <- 0 until 32)
+          diff = math.max(diff, math.abs(slots(32 * t + sb) - want(t)(sb)))
+        assert(diff <= 2e-6 * peak,
+          s"IMDCT diverged (types $types, granule $g): $diff at peak $peak")
+        worstImdct = math.max(worstImdct, diff / peak)
+        // synthesis of the kernel's own slots, against the literal sum
+        var t = 0
+        while (t < 18) { Mp3Layer3.synthSlot(slots, 32 * t, st, pcm, 32 * t); t += 1 }
+        val wantPcm = ref.synth(Array.tabulate(18, 32)((t, sb) => slots(32 * t + sb).toDouble))
+        val pcmPeak = wantPcm.map(math.abs).max
+        var pcmDiff = 0.0
+        for (i <- 0 until 576) pcmDiff = math.max(pcmDiff, math.abs(pcm(i) - wantPcm(i)))
+        assert(pcmDiff <= 2e-6 * pcmPeak,
+          s"synthesis diverged (types $types, granule $g): $pcmDiff at peak $pcmPeak")
+        worstPcm = math.max(worstPcm, pcmDiff / pcmPeak)
+      }
+    }
+    info(f"worst |diff| / peak: IMDCT $worstImdct%.2e, synthesis $worstPcm%.2e")
+  }
+
+  test("an all-zero short-block granule emits its overlap; a nonzero one is refused") {
+    val overlap = Array.tabulate(576)(i => (i % 7) - 3.0f)
+    val want = overlap.clone()
+    val slots = new Array[Float](576)
+    Mp3Layer3.imdctGranule(new Array[Float](576), 2, overlap, slots)
+    for (sb <- 0 until 32; t <- 0 until 18) {
+      val v = want(18 * sb + t)
+      assert(slots(32 * t + sb) == (if (sb % 2 == 1 && t % 2 == 1) -v else v))
+    }
+    assert(overlap.forall(_ == 0.0f))
+    val xr = new Array[Float](576); xr(40) = 1.0f
+    intercept[UnsupportedOperationException](
+      Mp3Layer3.imdctGranule(xr, 2, overlap, slots))
+  }
+
+  test("hostile bytes raise only IllegalArgumentException or UnsupportedOperationException") {
+    // Generator-style count1 streams, then one seeded mutation each: bit
+    // flips, truncation mid-frame, a foreign header spliced in, or an
+    // out-of-range side-info field (main_data_begin, part2_3_length,
+    // big_values, window switching / block type).
+    val rnd = new scala.util.Random(20261019L)
+    def quads(): Seq[Seq[Int]] = Seq.fill(rnd.nextInt(16))(Seq.fill(4)(rnd.nextInt(3) - 1))
+    def stream(): Array[Byte] = Array.concat(Seq.fill(2 + rnd.nextInt(3)) {
+      if (rnd.nextInt(4) == 0) frame(150 + rnd.nextInt(61), quads(), stereoDup = true)
+      else frame(150 + rnd.nextInt(61), quads(), quadsGr1 = quads())
+    }: _*)
+    val headers = Seq(
+      Array(0xff, 0xfb, 0x90, 0x00), // MPEG1 L3 stereo
+      Array(0xff, 0xfb, 0x90, 0x60), // joint stereo, M/S
+      Array(0xff, 0xfb, 0x90, 0x50), // joint stereo, intensity
+      Array(0xff, 0xfa, 0x90, 0xc0), // CRC-protected
+      Array(0xff, 0xfb, 0x92, 0xc0), // padded
+      Array(0xff, 0xfb, 0x10, 0xc0), // 32 kbit/s: short frame
+      Array(0xff, 0xf3, 0x90, 0xc0), // MPEG2 (LSF)
+      Array(0xff, 0xe3, 0x90, 0xc0), // MPEG2.5
+      Array(0xff, 0xfd, 0x90, 0xc0), // Layer II
+      Array(0xff, 0xf9, 0x90, 0xc0), // reserved layer
+      Array(0xff, 0xfb, 0x00, 0xc0), // free format
+      Array(0xff, 0xfb, 0xf0, 0xc0), // bad bitrate
+      Array(0xff, 0xfb, 0x9c, 0xc0), // reserved sample rate
+      Array(0xff, 0xeb, 0x90, 0xc0)  // reserved version
+    ).map(_.map(_.toByte))
+    var outcomes = Map.empty[String, Int]
+    for (iter <- 0 until 4000) {
+      val b = stream()
+      val nFrames = b.length / 417
+      val f = 417 * rnd.nextInt(nFrames)
+      val mono = (b(f + 3) & 0xc0) == 0xc0
+      val kind = iter % 4
+      val hostile = kind match {
+        case 0 => // bit flips
+          for (_ <- 0 until 1 + rnd.nextInt(16)) {
+            val bit = rnd.nextInt(b.length * 8)
+            b(bit / 8) = (b(bit / 8) ^ (1 << (7 - bit % 8))).toByte
+          }
+          b
+        case 1 => // truncation
+          b.take(4 + rnd.nextInt(b.length - 4))
+        case 2 => // a foreign header, or the tail of another stream, spliced in
+          if (rnd.nextBoolean()) {
+            val h = headers(rnd.nextInt(headers.length))
+            val at = if (rnd.nextBoolean()) f else rnd.nextInt(b.length - 4)
+            System.arraycopy(h, 0, b, at, 4)
+            b
+          } else {
+            val other = stream()
+            Array.concat(b.take(rnd.nextInt(b.length)), other.drop(rnd.nextInt(other.length)))
+          }
+        case _ => // one side-info field out of range
+          val grBits = if (mono) 18 else 20
+          val g = grBits + 59 * rnd.nextInt(if (mono) 2 else 4)
+          rnd.nextInt(4) match {
+            case 0 => setSideBits(b, f, 0, rnd.nextInt(512), 9)        // main_data_begin
+            case 1 => setSideBits(b, f, g, rnd.nextInt(4096), 12)      // part2_3_length
+            case 2 => setSideBits(b, f, g + 12, rnd.nextInt(512), 9)   // big_values
+            case _ => setSideBits(b, f, g + 33, rnd.nextInt(16), 4)    // switching, type, mixed
+          }
+          b
+      }
+      val outcome =
+        try { AudioOps.decodeMp3(hostile); "decoded" }
+        catch {
+          case _: IllegalArgumentException => "IllegalArgumentException"
+          case _: UnsupportedOperationException => "UnsupportedOperationException"
+          case e: Throwable =>
+            fail(s"mutation kind $kind (iteration $iter) raised ${e.getClass.getName}: ${e.getMessage}", e)
+        }
+      outcomes += outcome -> (outcomes.getOrElse(outcome, 0) + 1)
+    }
+    info(s"outcomes: $outcomes")
+    assert(outcomes.size == 3, s"the fuzz must reach every outcome: $outcomes")
   }
 }

@@ -630,30 +630,30 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out("junk")._1 == 0L && out("free")._1 == 0L)
   }
 
-  test("AudioOps.decodeMp3Silent: silence PCM for zero-payload frames; spectral payload refused") {
+  test("AudioOps.decodeMp3: silence PCM for zero-payload frames; spectral payload refused") {
     def frame(): Array[Byte] = {
       val f = new Array[Byte](417) // MPEG1 L3 @ 44100/128k, stereo, no CRC
       f(0) = 0xff.toByte; f(1) = 0xfb.toByte; f(2) = 0x90.toByte; f(3) = 0
       f
     }
     val clean = Array.concat(Seq.fill(5)(frame()): _*)
-    val (pcm, sr) = AudioOps.decodeMp3Silent(clean)
+    val (pcm, sr) = AudioOps.decodeMp3(clean)
     assert(sr == 44100 && pcm.length == 5 * 1152 && pcm.forall(_ == 0.0f))
     // ID3v2 prefix skipped, same result
     val id3 = { val t = new Array[Byte](30); t(0) = 'I'; t(1) = 'D'; t(2) = '3'
       t(3) = 4; t(9) = 20; Array.concat(t, clean) }
-    assert(AudioOps.decodeMp3Silent(id3)._1.length == 5 * 1152)
+    assert(AudioOps.decodeMp3(id3)._1.length == 5 * 1152)
     // ancillary bytes AFTER the 32-byte side info are spec-ignorable
     val anc = Array.concat(Seq.fill(3)(frame()): _*)
     anc(4 + 32 + 7) = 0x5a // inside frame 1 payload, beyond side info
-    assert(AudioOps.decodeMp3Silent(anc)._1.length == 3 * 1152)
+    assert(AudioOps.decodeMp3(anc)._1.length == 3 * 1152)
     // a non-zero SIDE INFO byte = real spectral bits -> refused toward SPI
     val hot = Array.concat(Seq.fill(2)(frame()): _*)
     hot(4 + 3) = 0x01 // part2_3_length bits
-    intercept[UnsupportedOperationException](AudioOps.decodeMp3Silent(hot))
+    intercept[UnsupportedOperationException](AudioOps.decodeMp3(hot))
     // truncated tail is an ERROR for decode (probe stops cleanly instead)
     intercept[IllegalArgumentException](
-      AudioOps.decodeMp3Silent(clean.take(417 * 2 + 50)))
+      AudioOps.decodeMp3(clean.take(417 * 2 + 50)))
     // the Externals seam routes MPEG sync here
     val viaSeam = graft.pipeline.JavaSoundExternals.decodeAudio(clean)
     assert(viaSeam._2 == 44100 && viaSeam._1.length == 5 * 1152)
