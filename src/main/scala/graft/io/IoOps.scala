@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim.onePartition
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** File sources and sinks (SURVEY §2.1 S1–S9 / K1–K8) as one thin module.
@@ -13,7 +14,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * filter-pushdown-capable out of the box. Single-file sinks
   * (`coalesce(1)`) exist ONLY for fixture/export parity with the
   * reference's one-file outputs; engine-internal stages persist
-  * partitioned Parquet.
+  * partitioned Parquet. A sink's input sorted at its root
+  * (`df.orderBy(...)`) is written in that order, and the sort runs inside
+  * the single writing task (see `Shim.onePartition`): no range exchange
+  * or bounds-sampling job for rows that end up in one file anyway.
   */
 object IoOps {
 
@@ -98,13 +102,14 @@ object IoOps {
 
   // ------------------------------------------------------------- sinks
 
-  /** K1: single-file header CSV (crawler/metadata.py:295). */
+  /** K1: single-file header CSV (crawler/metadata.py:295); a root
+    * `orderBy` of `df` is sorted inside the one writing task. */
   def writeCsv(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+    onePartition(df).write.mode("overwrite").option("header", "true").csv(dir)
 
   /** K2: headerless TSV (aeneas_batch_align.py:225). */
   def writeTsv(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite")
+    onePartition(df).write.mode("overwrite")
       .option("sep", "\t").option("header", "false").csv(dir)
 
   /** K3: one JSON file per row, named by `nameCol` (__init__.py:331-340).
@@ -130,9 +135,10 @@ object IoOps {
     }
   }
 
-  /** K4: JSONL sink, append mode (prepare_prompt_for_vnavc.py:120-136). */
+  /** K4: JSONL sink, append mode (prepare_prompt_for_vnavc.py:120-136);
+    * a root `orderBy` of `df` is sorted inside the one writing task. */
   def writeJsonl(df: DataFrame, dir: String, append: Boolean = false): Unit =
-    df.coalesce(1).write.mode(if (append) "append" else "overwrite").json(dir)
+    onePartition(df).write.mode(if (append) "append" else "overwrite").json(dir)
 
   /** K4 compressed: gzip JSONL sink. At corpus scale JSONL ships
     * compressed (5-10× on text); gzip specifically because every
@@ -141,17 +147,17 @@ object IoOps {
     * per-file row count upstream (repartition before write) rather than
     * fewer, bigger archives. */
   def writeJsonlGz(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite")
+    onePartition(df).write.mode("overwrite")
       .option("compression", "gzip").json(dir)
 
   /** K8: pipe-CSV sink (prepare_prompt_for_vnavc.py:219-224). */
   def writePipeCsv(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite")
+    onePartition(df).write.mode("overwrite")
       .option("sep", "|").option("header", "false").csv(dir)
 
   /** K5: text-lines sink, one column one line (process_all.py:351-356). */
   def writeTextLines(df: DataFrame, column: String, dir: String): Unit =
-    df.select(col(column)).coalesce(1).write.mode("overwrite").text(dir)
+    onePartition(df).select(col(column)).write.mode("overwrite").text(dir)
 
   /** Small-file compaction: rewrite a parquet directory into
     * ceil(bytes/target)-sized files. Streaming sinks and per-batch

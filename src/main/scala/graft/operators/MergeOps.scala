@@ -13,14 +13,22 @@ import org.apache.spark.sql.functions._
   * match indicator rather than `coalesce(u.c, b.c)` — with coalesce, a null
   * update would be indistinguishable from "not matched".
   *
-  * Scale shape: `updates` is broadcast and `base` is never shuffled — a
-  * broadcast left-outer join (update pass) unioned with a left-anti join
-  * (insert set). Contract: `updates` must fit a broadcast, the
+  * Scale shape: no shuffle, and `base` is never shuffled or broadcast.
+  * `updates` is broadcast once; that one broadcast serves both the
+  * left-outer update pass and an inner join that finds the update row
+  * behind each matched base row. Those matched rows are broadcast
+  * straight from that join, with no aggregate: one row per matched base
+  * row, so the second broadcast is at most |updates| rows when base keys
+  * are unique (every caller's case: catalog ids, the deduplicated CDC
+  * base, `customer` in j3_upsert) and |updates| × the largest key
+  * multiplicity otherwise. The insert set is the update rows that find
+  * none of them. Contract: `updates` must fit a broadcast, the
   * small-batch-into-large-table case every caller has.
   */
 object MergeOps {
 
-  private val uMark = "__u_present"
+  private val uRow = "__u"
+  private val mRow = "__m"
 
   /** @param base       existing table
     * @param updates    new rows, small enough to broadcast; must contain
@@ -37,36 +45,38 @@ object MergeOps {
       updateCols: Seq[String]): DataFrame = {
     require(updateCols.forall(updates.columns.contains),
       "updates must carry every updateCol")
-    val u = broadcast(updates.withColumn(uMark, lit(true))).alias("u")
-    val cond = keys.map(k => col(s"b.$k") <=> col(s"u.$k")).reduce(_ && _)
-    val matched = col(s"u.$uMark").isNotNull
+    // Each update row travels as ONE struct column, and every consumer of
+    // the broadcast reads that column whole (never only its key fields),
+    // so Catalyst cannot prune either join's build side down to the keys:
+    // both joins build the same exchange and Spark broadcasts it once.
+    val u = broadcast(updates.select(struct(updates.columns.toSeq.map(updates(_)): _*).as(uRow)))
+    def uCol(c: String) = col(uRow).getField(c)
+    val onU = keys.map(k => col(s"b.$k") <=> uCol(k)).reduce(_ && _)
     // Every base row survives the left-outer join once per match; a
-    // matched row takes the update's values, nulls included.
-    val updated = base.alias("b").join(u, cond, "left_outer").select(
+    // matched row takes the update's values, nulls included (the struct
+    // itself is null only where nothing matched).
+    val updated = base.alias("b").join(u, onU, "left_outer").select(
       base.columns.toSeq.map { c =>
         if (updateCols.contains(c) && !keys.contains(c))
-          when(matched, col(s"u.$c")).otherwise(col(s"b.$c")).as(c)
+          when(col(uRow).isNotNull, uCol(c)).otherwise(col(s"b.$c")).as(c)
         else col(s"b.$c").as(c)
       }: _*)
-    val insertCols = base.columns.toSeq.map { c =>
-      if (keys.contains(c) || updateCols.contains(c)) col(s"u.$c").as(c)
-      else lit(null).cast(base.schema(c).dataType).as(c)
-    }
-    // Insert set = update keys that match nothing in base. Never
-    // broadcast base (it is the 100 TB side): matchedKeys is computed by
-    // semi-joining base against broadcast(updates) — at most |updates|
-    // rows — and then anti-joined back against updates. The semi-join
-    // must be null-safe like every other key comparison here, or a
-    // null-key update row both updates its match and re-inserts.
-    val matchedKeys = base.select(keys.map(col): _*).alias("bk")
-      .join(broadcast(updates.select(keys.map(col): _*)).alias("uk"),
-        keys.map(k => col(s"bk.$k") <=> col(s"uk.$k")).reduce(_ && _),
-        "left_semi")
-      .distinct()
-    val inserts = updates.alias("u")
-      .join(broadcast(matchedKeys).alias("b"),
-        keys.map(k => col(s"u.$k") <=> col(s"b.$k")).reduce(_ && _), "left_anti")
-      .select(insertCols: _*)
+    // Insert set = update rows whose key matches nothing in base. The
+    // update row behind each matched base row comes straight from an
+    // inner join on the same broadcast; an update row that finds none of
+    // them (null-safely, or a null-key update row that updated its match
+    // would re-insert) is an insert. The outer join and null filter read
+    // the matched column whole, which keeps its lineage unpruned too.
+    val matched = base.select(keys.map(col): _*).alias("b").join(u, onU)
+      .select(col(uRow).as(mRow))
+    val inserts = updates.alias("i")
+      .join(broadcast(matched),
+        keys.map(k => col(s"i.$k") <=> col(mRow).getField(k)).reduce(_ && _), "left_outer")
+      .filter(col(mRow).isNull)
+      .select(base.columns.toSeq.map { c =>
+        if (keys.contains(c) || updateCols.contains(c)) col(s"i.$c").as(c)
+        else lit(null).cast(base.schema(c).dataType).as(c)
+      }: _*)
     updated.unionByName(inserts)
   }
 }

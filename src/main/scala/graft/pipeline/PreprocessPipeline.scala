@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,15 +19,15 @@ import graft.operators.{AudioOps, MergeOps, RegroupOps}
   *          concat (A10) -> metrics
   *   merge: J3 upsert of both metric sets into the book catalog.
   *
-  * Scale shape: one shuffle per phase — regroup shuffles on book id,
-  * audio concat shuffles on book id (the reference's process-pool
-  * granularity), upsert broadcasts the small metrics table. Audio bytes
-  * never leave the executor that read them except for the book-level
-  * regroup, mirroring repartition($"book_id") before per-book work.
+  * Scale shape: one shuffle per phase. The text regroup shuffles on book
+  * id. The audio phase shuffles once, the compressed parts on book id
+  * (the reference's process-pool granularity, repartition($"book_id")
+  * before per-book work); decoding, resampling and concatenation run in
+  * the task that receives the book, so no decoded sample leaves it. The
+  * upsert shuffles nothing: it broadcasts the small metrics tables.
   */
 object PreprocessPipeline {
 
-  final case class AudioPart(book_id: String, seq: Int, samples: Array[Float], sr: Int)
   final case class BookAudio(
     book_id: String, sample_rate: Int, n_samples: Long,
     audio_duration_s: Double, qualified: Boolean)
@@ -76,31 +78,40 @@ object PreprocessPipeline {
   }
 
   /** Audio phase: per-book decode -> gate -> resample -> normalize ->
-    * ordered concat -> metrics. */
+    * ordered concat -> metrics.
+    *
+    * One shuffle, of the compressed parts: they are repartitioned on
+    * book id and sorted by (book id, part index) inside each partition,
+    * so every book arrives as one run of adjacent rows in part order
+    * (W2/O5), and the task that decodes a book's parts also concatenates
+    * them. No decoded sample array is shuffled; a task holds one book's
+    * resampled parts at a time. */
   def processAudio(spark: SparkSession, wavGlob: String,
       ext: Externals = StubExternals): DataFrame = {
-    import spark.implicits._
-    val parts = IoOps.readBinaryTree(spark, wavGlob)
+    IoOps.readBinaryTree(spark, wavGlob)
       .select(col("book_id"), col("utt_idx"), col("content"))
       .repartition(col("book_id")) // one-book-per-task like the process pool
+      .sortWithinPartitions("book_id", "utt_idx")                            // W2/O5
       .mapPartitions { rows =>
-        rows.map { r =>
-          val (samples, sr) = ext.decodeAudio(r.getAs[Array[Byte]](2))       // S11
-          AudioPart(r.getString(0), r.getInt(1), samples, sr)
+        val it = rows.buffered
+        new Iterator[BookAudio] {
+          def hasNext: Boolean = it.hasNext
+          def next(): BookAudio = {
+            val book = it.head.getString(0)
+            val parts = ArrayBuffer.empty[(Array[Float], Int)]
+            while (it.hasNext && it.head.getString(0) == book) {
+              val (samples, sr) = ext.decodeAudio(it.next().getAs[Array[Byte]](2)) // S11
+              parts += ((AudioOps.linearResample(samples, sr, TargetSr), sr))
+            }
+            val qualified = parts.map(_._2).min >= MinSr                       // F5/A7
+            val normalized = AudioOps.peakNormalize(                           // A10
+              AudioOps.concatParts(parts.map(_._1).toSeq), 0.95f)
+            BookAudio(book, TargetSr, normalized.length.toLong,
+              AudioOps.durationSeconds(normalized.length, TargetSr), qualified)
+          }
         }
-      }(Encoders.product[AudioPart])
-
-    parts.groupByKey(_.book_id)
-      .mapGroups { (book, it) =>
-        val ps = it.toArray.sortBy(_.seq)                                    // W2/O5
-        val minSr = ps.map(_.sr).min
-        val qualified = minSr >= MinSr                                       // F5/A7
-        val concat = AudioOps.concatParts(ps.map(p =>                        // A10
-          AudioOps.linearResample(p.samples, p.sr, TargetSr)).toSeq)
-        val normalized = AudioOps.peakNormalize(concat, 0.95f)
-        BookAudio(book, TargetSr, normalized.length.toLong,
-          AudioOps.durationSeconds(normalized.length, TargetSr), qualified)
-      }.toDF()
+      }(Encoders.product[BookAudio])
+      .toDF()
   }
 
   /** J3: merge both metric sets into the catalog (process_all.py:770-844). */

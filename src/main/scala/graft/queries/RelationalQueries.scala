@@ -325,10 +325,11 @@ object RelationalQueries {
   /** J3 ★: upsert/MERGE — matched rows take the update value (nulls
     * included), unmatched update rows are inserted (process_all.py:797-839).
     * Base is never shuffled. A CDC batch arrives materialised in
-    * practice, and the upsert plan reads `updates` three times (merge
-    * side, matched-keys broadcast, insert anti-join), so the synthesised
-    * batch is checkpointed: its subtree runs once. Bounded by |updates|,
-    * the broadcast contract upsert already has. */
+    * practice, and the upsert plan reads `updates` twice (the broadcast
+    * both joins share, the insert pass), so the synthesised batch is
+    * checkpointed: its subtree runs once. Both broadcasts are bounded by
+    * |updates|: the batch itself, and one update row per matched
+    * `customer` row, whose key is unique. */
   private val j3: Q = (s, dir) =>
     MergeOps.upsert(
       t(s, dir, "customer").select("c_custkey", "c_name", "c_acctbal", "c_mktsegment"),

@@ -747,10 +747,15 @@ object SignalQueries {
     * ingest gate starts from (rows, nulls, exact distinct count, and a
     * min/max rendering per column). TWO scans, both hash-shaped, then a
     * 1-row-×-1-row cross join — never one job per column:
-    *   1. the exact-NDV pass: one agg holding ONLY the countDistincts
-    *      (Spark's multi-distinct Expand ×(k+1), partial HashAggregate
-    *      keyed by (gid, value) — map-side combine collapses each
-    *      partition to its distinct values before the shuffle);
+    *   1. the exact-NDV pass: each row exploded into one (column, value)
+    *      row per profiled column, nulls dropped, deduplicated by a
+    *      HashAggregate keyed by (column, value) — map-side combine
+    *      collapses each partition to its distinct values before the
+    *      shuffle — then counted per column. This is the plan Spark's
+    *      multi-distinct rewrite builds for k countDistincts, written out:
+    *      that rewrite orders its groups by a hash of per-run expression
+    *      ids, so a warm run could plan a new order and compile classes
+    *      for it, where this form generates the same code on every run;
     *   2. the stats pass: counts + min/max renderings, grouping-key-free
     *      so its SortAggregate (forced by min/max over STRING buffers,
     *      which hash agg can't mutate in place) never actually sorts.
@@ -787,9 +792,18 @@ object SignalQueries {
     ("l_shipdate", "CAST(CAST(%s(l_shipdate) AS DATE) AS STRING)", "l_shipdate"))
   private val a31: Q = (s, dir) => {
     val li = t(s, dir, "lineitem")
-    val ndvAggs = a31Cols.zipWithIndex.map { case ((c, _, _), i) =>
-      countDistinct(col(c)).as(s"d$i")
+    // Pass 1 as an explode: element i of each row carries column i's value
+    // in field v$i, every other field null.
+    val perCol = a31Cols.indices.map { i =>
+      struct(lit(i).as("g") +: a31Cols.indices.map { j =>
+        val c = a31Cols(j)._1
+        (if (j == i) col(c) else lit(null).cast(li.schema(c).dataType)).as(s"v$j")
+      }: _*)
     }
+    val ndv = li.select(explode(array(perCol: _*)).as("e")).select("e.*")
+      .filter(a31Cols.indices.map(j => col(s"v$j").isNotNull).reduce(_ || _))
+      .distinct()
+    val ndvAggs = a31Cols.indices.map(i => count(when(col("g") === i, true)).as(s"d$i"))
     val statAggs = Seq(count(lit(1)).as("n")) ++ a31Cols.zipWithIndex.flatMap {
       case ((c, render, _), i) => Seq(
         count(col(c)).as(s"c$i"),
@@ -800,7 +814,7 @@ object SignalQueries {
       s"'$label', n - c$i, d$i, mn$i, mx$i"
     }.mkString(", ")
     li.agg(statAggs.head, statAggs.tail: _*)
-      .crossJoin(li.agg(ndvAggs.head, ndvAggs.tail: _*))
+      .crossJoin(ndv.agg(ndvAggs.head, ndvAggs.tail: _*))
       .select(col("n").as("n_rows"), expr(
         s"stack(${a31Cols.size}, $stackArgs) AS (col_name, n_nulls, ndv, min_s, max_s)"))
       .select(col("col_name"), col("n_rows"), col("n_nulls"), col("ndv"),

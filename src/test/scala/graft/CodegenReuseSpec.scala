@@ -97,12 +97,8 @@ class CodegenReuseSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.001"
     Tables.registerAll(spark, sfDir)
     graft.functions.TextFns.registerAll(spark)
-    // a31_column_profile is left out: Spark's distinct-aggregate rewrite
-    // orders its four countDistinct groups by a hash of per-run
-    // expression ids, so a warm run can plan them in a new order and
-    // compile that order's classes.
     val names = Seq("dedup_cc_best", "pipe_dedup_pass", "dedup_lsh_recall", "j2_zip_join",
-      "t_cms_heavy")
+      "t_cms_heavy", "a31_column_profile")
     // The form Bench times, written to the noop sink.
     def run(name: String): Unit =
       Bench.timedForm(spark, sfDir, name).write.format("noop").mode("overwrite").save()

@@ -251,7 +251,9 @@ object PlanAuditSpec {
     * broadcasts), g2/g3 (degree tables behind triangleStats'
     * broadcastEdgeLimit guard), ann_recall, ann_trunc_recall and
     * dedup_lsh_recall (probe-bounded truth tables on an explicit
-    * broadcast), j3_upsert (bounded by |updates|), o13/t_pmi
+    * broadcast), j3_upsert (both broadcasts bounded by |updates|: the
+    * checkpointed batch, and the update row behind each matched
+    * `customer` row, whose key is unique), o13/t_pmi
     * (vocab-bounded LM count tables), the dedup_cc family,
     * dedup_containment and pipe_dedup (AQE's choice on sound
     * checkpointed estimates). A new query here without a boundedness

@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.{LocalTableScanExec, RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{PlanWalk, TestSpark}
 
 /** Spark-backed specs for the operator library: merge semantics, corpus
   * WER, dedup, similarity, regrouping — the SURVEY §5.2 risk list. */
@@ -62,6 +64,49 @@ class OperatorsSpec extends AnyFunSuite {
     val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"))
       .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq.sortBy(_.toString)
     assert(out == Seq((None, Some(9.0)), (Some("a"), Some(1.0))))
+  }
+
+  test("MergeOps.upsert: a key shared by two base rows updates both and inserts nothing") {
+    val base = Seq(("a", 1.0, "x"), ("a", 2.0, "y"), ("b", 3.0, "z")).toDF("k", "v", "o")
+    val upd = Seq(("a", 9.0)).toDF("k", "v")
+    val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"))
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getString(2))).toSeq.sorted
+    assert(out == Seq(("a", 9.0, "x"), ("a", 9.0, "y"), ("b", 3.0, "z")))
+  }
+
+  test("MergeOps.upsert: a two-column key with a null part matches null-safely") {
+    val base = Seq((Option("a"), None: Option[Int], 1.0), (Option("a"), Option(1), 2.0))
+      .toDF("k1", "k2", "v")
+    val upd = Seq((Option("a"), None: Option[Int], 9.0), (None: Option[String], Option(1), 7.0))
+      .toDF("k1", "k2", "v")
+    val out = MergeOps.upsert(base, upd, Seq("k1", "k2"), Seq("v"))
+      .collect().map(r => (Option(r.getString(0)), Option(r.get(1)), r.getDouble(2)))
+      .toSeq.sortBy(_.toString)
+    assert(out == Seq(
+      (None, Some(1), 7.0),       // (null, 1) matches nothing: inserted once
+      (Some("a"), None, 9.0),     // (a, null) matched null-safely: updated, not re-inserted
+      (Some("a"), Some(1), 2.0))) // untouched
+  }
+
+  test("MergeOps.upsert plan: no shuffle, and updates is broadcast once") {
+    // base is a range (RangeExec), updates a local table (LocalTableScanExec).
+    // The keys are unique, but not provably so (`% 100`): a distinct over
+    // them would still plan its shuffle.
+    val base = spark.range(50)
+      .select((col("id") % 100).as("k"), (col("id") * 2).as("v"), lit("o").as("o"))
+    val upd = Seq((1L, 5L), (7L, 9L), (500L, 1L)).toDF("k", "v")
+    val out = MergeOps.upsert(base, upd, Seq("k"), Seq("v"))
+    assert(out.collect().length == 51) // the adaptive plan below is the executed one
+    val nodes = PlanWalk.nodes(out.queryExecution.executedPlan)
+    val shuffles = nodes.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.isEmpty, shuffles.mkString("\n"))
+    def reads(p: SparkPlan, leaf: Class[_]) = PlanWalk.nodes(p).exists(leaf.isInstance)
+    val updateBroadcasts = nodes.collect {
+      case b: BroadcastExchangeExec
+          if reads(b.child, classOf[LocalTableScanExec]) && !reads(b.child, classOf[RangeExec]) =>
+        b.canonicalized
+    }.distinct
+    assert(updateBroadcasts.size == 1, updateBroadcasts.mkString("\n"))
   }
 
   // ---------------------------------------------------------- EncodeOps

@@ -7,8 +7,10 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ContextShim
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -371,6 +373,60 @@ class PipelineSpec extends AnyFunSuite {
       ContextShim.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq
+  }
+
+  test("processAudio shuffles once, the compressed parts, never decoded samples") {
+    val wavs = tmp("pp_wav1")
+    val d = Paths.get(wavs, "spk1"); Files.createDirectories(d)
+    for (b <- Seq("bookA", "bookB"); k <- 1 to 3)
+      writeWav(d.resolve(s"${b}_$k.wav"), 24000, Array.tabulate(240 * k)(i => (i % 100).toShort))
+    var out: Array[org.apache.spark.sql.Row] = null
+    val plans = plansOf { out = PreprocessPipeline.processAudio(spark, wavs + "/*/*.wav").collect() }
+    assert(out.map(r => r.getAs[String]("book_id") -> r.getAs[Long]("n_samples")).toMap ==
+      Map("bookA" -> 1440L, "bookB" -> 1440L))
+    val shuffles = plans.flatMap(PlanWalk.nodes).collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.length == 1, shuffles.mkString("\n"))
+    val input = shuffles.head.child.output.map(_.name)
+    assert(input.contains("content") && !input.contains("samples"), input)
+  }
+
+  test("the catalog CSV and the publish JSONL are one sorted file each, written without a range exchange") {
+    val root = Files.createTempDirectory("sorted_sinks")
+    def file(rel: String, lines: Seq[String]): Unit = {
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    }
+    // hash-derived stub names arrive in no particular order
+    file("urls/urls.txt", (1 to 12).map(i => s"http://a/b$i, http://t/b$i, thuviensach"))
+    // 11 utterances per book, books listed out of order: utt_idx 10 and 11
+    // sort after 9 only numerically
+    val books = Seq("bookC", "bookA", "bookB")
+    file("segments/seg.tsv", books.flatMap(b => (1 to 11).map(i =>
+      s"${(i - 1) * 4.0}\t${i * 4.0}\tf$i\t$b\tspk1")))
+    file("lines/lines.txt", books.flatMap(b => (0 until 11).map(i => s"$b|$i|a b c")))
+    val plans = plansOf {
+      CatalogPipeline.run(spark, s"$root/urls/*.txt", s"$root/catalog")
+      AlignPublishPipeline.run(spark, s"$root/segments/*.tsv", s"$root/lines/*.txt", s"$root/publish")
+    }
+    val writes = plans.filter(PlanWalk.nodes(_).exists(_.isInstanceOf[WriteFilesExec]))
+    assert(writes.length == 2, plans.mkString("\n"))
+    val ranged = writes.flatMap(PlanWalk.nodes).collect {
+      case s: ShuffleExchangeExec if s.outputPartitioning.isInstanceOf[RangePartitioning] => s
+    }
+    assert(ranged.isEmpty, ranged.mkString("\n"))
+    def onePart(dir: String, suffix: String): String = {
+      val parts = Files.list(root.resolve(dir)).iterator.asScala
+        .filter(_.getFileName.toString.endsWith(suffix)).toSeq
+      assert(parts.length == 1, parts)
+      parts.head.toString
+    }
+    val names = spark.read.option("header", "true").csv(onePart("catalog", ".csv"))
+      .select("name").as[String].collect().toSeq
+    assert(names.length == 12 && names == names.sorted, names)
+    val keys = spark.read.json(onePart("publish", ".json"))
+      .select("book_id", "utt_idx").as[(String, Long)].collect().toSeq
+    assert(keys.length == 33 && keys == keys.sorted, keys)
   }
 
   test("materializeUtterances never broadcasts the book audio") {
