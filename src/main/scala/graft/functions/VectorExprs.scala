@@ -81,8 +81,8 @@ object VectorKernels {
     * the md5 parity of "t_i_j" — independent draws, disjoint from the
     * single-table "i_j" family. Canonical here so the multi-table
     * expression ([[LshTableBucketsExpr]]), its spec reference, and any
-    * oracle recipe share ONE derivation (ADVICE r12: the verbatim
-    * duplication in expression + spec could silently drift). */
+    * oracle recipe share ONE derivation (a verbatim copy in
+    * expression + spec could silently drift). */
   def tablePlaneSign(t: Int, i: Int, j: Int): Int = mdParitySign(s"${t}_${i}_$j")
 
   private def mdParitySign(key: String): Int = {
@@ -324,7 +324,7 @@ case class RpProjectExpr(child: Expression, nOut: Int, dim: Int)
     // nullSafeCodeGen emits this snippet unwrapped at method scope, so
     // two calls in one generated method would redeclare the local and
     // janino would reject the stage (silent interpreted fallback — the
-    // sorted_intersect_count r11 defect class).
+    // defect class sorted_intersect_count also guards against).
     val r = ctx.freshName("rpRes")
     nullSafeCodeGen(ctx, ev, a => s"""
       Object $r = graft.functions.VectorKernels.matVec($a, $mat, $nOut, $dim, $aF);
@@ -340,7 +340,7 @@ case class RpProjectExpr(child: Expression, nOut: Int, dim: Int)
 /** `lsh_bucket(v, nPlanes, dim)` — the single-table hyperplane LSH
   * bucket over the md5-parity "i_j" sign family (the same matrix as
   * [[RpProjectExpr]]: sign(rp_project(v)[i]) IS bit i here). Replaces
-  * the SimilarityOps Scala UDF (r12): a fused COLUMN expression at
+  * a Scala UDF: a fused COLUMN expression at
   * 8×64 terms blows Janino's 64 KB method limit and silently degrades
   * the stage to interpreted eval (why the UDF existed), but a compiled
   * kernel behind one codegen call has no such cliff and skips the UDF's
@@ -382,8 +382,8 @@ case class LshBucketExpr(child: Expression, nPlanes: Int, dim: Int)
 /** `lsh_table_buckets(v, nTables, nPlanes, dim)` — all nTables E2LSH
   * bucket ids in one compiled pass; table t's planes are the md5-parity
   * family seeded "t_i_j" (independent draws, disjoint from the
-  * single-table "i_j" family). Replaces the multi-table Scala UDF
-  * (r12): the boxed round-trip measured 4.9 s of task time over 2,000
+  * single-table "i_j" family). Not a Scala UDF: its boxed
+  * round-trip measured 4.9 s of task time over 2,000
   * rows at 8 tables × 6 planes × 64 dims — the dominant stage of
   * ann_multitable_topk. Null/short vector → null array. */
 case class LshTableBucketsExpr(
@@ -475,8 +475,8 @@ object SortedIntersectKernel {
   * generator for co-occurrence/association queries: ONE primitive
   * long-array allocation per GROUP followed by the codegen'd `explode`
   * and a single-long-key hash aggregate — no per-pair objects, no
-  * interpreted higher-order lambdas (both measured to lose in the r10
-  * g7 bake-off). Bake-off honesty (r11): on the REGISTERED a19/g7
+  * interpreted higher-order lambdas (both measured to lose in the
+  * g7 bake-off). On the REGISTERED a19/g7
   * fixtures this form wins the isolated pair stage (0.77 vs 1.17 s)
   * but loses end-to-end, because those queries already
   * hold a distinct/checkpointed (key, item) table for their count
@@ -490,14 +490,14 @@ object SortedIntersectKernel {
   * Contract (loud, not silent): every id must lie in [0, 2^shift) —
   * out-of-range throws with the offending value, because a truncated
   * pack would MERGE distinct pairs into one count (the silent-wrong
-  * class ADVICE r10 flagged on getLong-over-null). shift ≤ 31 keeps
+  * class getLong-over-null belongs to). shift ≤ 31 keeps
   * lo's bits inside the positive BIGINT range for any in-range hi.
   * Elements must be DISTINCT (collect_list over a distinct-keyed
   * input); a duplicate x would emit the self-pair key (x<<shift)|x
   * with lo==hi — a key the a<b self-join can never produce, i.e. a
   * SILENTLY wrong count, not a doubled one. So duplicates throw: the
   * input is already sorted in-kernel, making the adjacent-equal check
-  * O(n) and free (ADVICE r11). Input arrays must be
+  * O(n) and free. Input arrays must be
   * typed containsNull=false (collect_list's type); enforced at
   * analysis, not silently read as zero. Null array → null. */
 object PackedPairsKernel {

@@ -25,8 +25,8 @@ object VectorFns {
   }
 
   /** Σ a[i]*b[i] over a known dimension, as the native vec_dot kernel
-    * (VectorKernels.dot — identical semantics to the flat element_at
-    * tree this built before round 5: per-element double cast, left-assoc
+    * (VectorKernels.dot — identical semantics to a flat element_at
+    * tree: per-element double cast, left-assoc
     * no-init accumulation, element_at null/OOB -> null). One static call
     * wherever the expression lands: the flat ~190-node tree was fine in
     * a Project but got pushed into pair-join residual CONDITIONS, where

@@ -139,7 +139,7 @@ object AudioOps {
     out
   }
 
-  def durationSeconds(nSamples: Int, sr: Int): Double =
+  def durationSeconds(nSamples: Long, sr: Int): Double =
     if (sr <= 0) 0.0 else nSamples.toDouble / sr
 
   /** Slice [startSec, endSec) — the ffmpeg `-ss/-t -c copy` segment cut

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * holds ≤ |V| rows per round. A short loop (quality signals use 2-5
   * hops) stays ONE lazy DAG — the PageRankOps measurement (eager
   * per-round checkpoints 11.9 s vs 4.9 s lazy at sf0.1) applies verbatim
-  * since the loop shape is identical, and so does its r13 JobCensus
-  * floor verdict: g4's 15 driver jobs are the base cut plus AQE
+  * since the loop shape is identical, and so does its JobCensus
+  * floor: g4's 15 driver jobs are the base cut plus AQE
   * stage / broadcast-build materializations of an already-single-DAG
   * loop — no round barrier exists to batch; `checkpointEvery` truncates
   * lineage on longer walks, through [[graft.Checkpoints]] — set
@@ -73,7 +73,7 @@ object BfsOps {
     // else-branch hints shuffle_hash: without it the caller's "nodes
     // are fact-scaled" declaration is advisory only — Spark's
     // under-10MB estimate would auto-broadcast the rank/frontier table
-    // at test SF anyway (the a19 class, r10 audit finding).
+    // at test SF anyway (the a19 class).
     def maybeB(df: DataFrame): DataFrame =
       if (dimensionNodes) broadcast(df) else df.hint("shuffle_hash")
     // nodes is read ONCE (the final left join) and derives from the

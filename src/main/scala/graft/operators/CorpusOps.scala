@@ -24,13 +24,6 @@ object CorpusOps {
       "+ CASE WHEN top_bigram_cnt * 5 <= n_bigrams THEN 0 ELSE 8 END " +
       "+ CASE WHEN alpha * 10 >= words * 8 THEN 0 ELSE 16 END AS INT)"
 
-  /** The Gopher-family quality gate as a pure per-row projection: emits
-    * the repetition/length facts, the per-rule fail bitmask, and the
-    * keep verdict. Zero shuffles, zero state — which is also why it
-    * drops into Structured Streaming unchanged (stateless transforms
-    * need no watermark and work under any trigger; pinned by
-    * FileStreamSpec's batch-parity case). Requires the graft kernel
-    * functions to be registered (TextFns.registerAll). */
   /** The mask's input facts + fail_mask as appended columns — the ONE
     * definition both [[gopherGate]] and [[gopherKeep]] build on (a rule
     * input edited in only one of two copies would let the gate and the
@@ -48,6 +41,15 @@ object CorpusOps {
       .withColumn("n_bigrams", col("__r.n_bigrams"))
       .withColumn("fail_mask", expr(gopherMaskSql))
 
+  /** The Gopher-family quality gate as a pure per-row projection: emits
+    * the repetition/length facts, the per-rule fail bitmask, and the
+    * keep verdict. Zero shuffles, zero state — which is also why it
+    * drops into Structured Streaming unchanged (stateless transforms
+    * need no watermark and work under any trigger; pinned by
+    * FileStreamSpec's batch-parity case). Requires the
+    * [[graft.GraftExtensions]] functions `ws_word_count`,
+    * `ascii_alpha_tokens` and `rep_stats`, which sessions built by
+    * [[graft.Sessions.builder]] have installed. */
   def gopherGate(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     withGopherFacts(docs, textCol)
       .withColumn("n_words", col("words"))

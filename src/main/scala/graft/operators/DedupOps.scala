@@ -56,14 +56,14 @@ object DedupOps {
     * engine with md5 + substring.
     *
     * Computed ROW-LOCALLY (TokenKernels.minhashLanes, one codegen'd
-    * call per document): lane minima are per-document facts, so the
-    * round-2..4 exploded form (one row per shingle, flat codegen'd md5
-    * columns, per-doc min(string) SortAggregate) shuffled ~shingle-count
+    * call per document): lane minima are per-document facts, so an
+    * exploded form (one row per shingle, flat codegen'd md5 columns,
+    * per-doc min(string) SortAggregate) would shuffle ~shingle-count
     * rows per doc through a variable-width sort aggregate for values the
-    * row already owned. History of the shapes tried, for the record:
-    * nested array lambdas (interpreted HOFs, ~100x too slow), exploded
-    * flat columns (the previous best), numeric mins via conv() (slower
-    * than the string sort). Docs with null text produce no signature row
+    * row already owns. The other shapes measured slower: nested array
+    * lambdas (interpreted HOFs, ~100x too slow), exploded flat columns,
+    * and numeric mins via conv() (slower than the string sort). Docs
+    * with null text produce no signature row
     * (the explode-form drop semantics, which the oracles replay). */
   def minHashSignatures(
       df: DataFrame, idCol: String, textCol: String,
@@ -74,7 +74,7 @@ object DedupOps {
   /** [[minHashSignatures]] over a SQL fragment producing the token
     * array directly — for callers that already materialized
     * `ascii_tokens` (e.g. a checkpointed token column shared with an
-    * exact-truth branch; the r14 dedup_lsh_recall probe). Same kernel,
+    * exact-truth branch, as in dedup_lsh_recall). Same kernel,
     * same values. */
   def minHashSignaturesExpr(
       df: DataFrame, idCol: String, toksExpr: String,
@@ -197,13 +197,13 @@ object DedupOps {
   /** SimHash fingerprints, ROW-LOCAL (TokenKernels.simHash): one
     * codegen'd kernel call per document — tokenize, one md5 per token,
     * per-bit hex-digit-parity votes, bit i set iff the vote sum >= 0.
-    * Same bit definition as the DuckDB oracle replays. This replaces the
-    * round-2 exploded form (one row per token, `bits` flat ±1 vote
-    * columns, per-doc sum aggregation): the votes are per-DOCUMENT facts
-    * and the document lives in one row, so the explode + bits-wide
-    * partial aggregation was a SHUFFLE of one row per token for values
-    * the row already owned. Zero-token (or null-text) docs keep the
-    * all-set hash the exploded form produced. Caps bits at 32 (md5 has
+    * Same bit definition as the DuckDB oracle replays. Not an exploded
+    * form (one row per token, `bits` flat ±1 vote columns, per-doc sum
+    * aggregation): the votes are per-DOCUMENT facts and the document
+    * lives in one row, so the explode + bits-wide partial aggregation
+    * would SHUFFLE one row per token for values the row already owns.
+    * Zero-token (or null-text) docs get the all-set hash: every vote
+    * sum is 0, and 0 >= 0. Caps bits at 32 (md5 has
     * 32 hex digits).
     *
     * Output is an INTEGER simhash (bit bits-1-i = vote i >= 0): a 4-byte
@@ -307,9 +307,9 @@ object DedupOps {
     // every posting re-executes per consumer — 4 df-agg passes in the
     // registered query's before-plan. The materialized table is the
     // NARROWEST projection in the operator (one string column, distinct
-    // grams only). Contrast the r10 rejection, which still stands:
-    // checkpointing the df-capped POSTINGS (`kept`, one row per
-    // (doc, gram)) lost (3.14 -> 3.53 s) — shingle-wide and much taller,
+    // grams only). Contrast the rejected cut: checkpointing the
+    // df-capped POSTINGS (`kept`, one row per (doc, gram)) lost
+    // (3.14 -> 3.53 s) — shingle-wide and much taller,
     // expensive to materialize while the gram kernel replays cheaply.
     val rare = grams.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
@@ -333,8 +333,7 @@ object DedupOps {
 
   /** Measured RECALL of the df-capped containment generator against
     * exact uncapped containment truth — the dedup_lsh_recall audit
-    * discipline applied to the last approximate candidate generator
-    * that had no measured number (r15, VERDICT directive 5). The df
+    * discipline applied to the df-capped containment generator. The df
     * cap in [[containmentPairs]] is what makes the operator scale (it
     * bounds the postings self-join fan-out), and what it silently
     * costs is pairs whose shared grams are ALL high-df — this audit
@@ -345,9 +344,9 @@ object DedupOps {
     * the probe slice (< probeBound). Same bounding argument as
     * dedup_lsh_recall's truth: at any corpus scale this is a
     * broadcast of the bounded probe gram sets against one corpus
-    * pass — never all-pairs. The gram sets are materialized ONCE
-    * (the r14 shared-checkpoint shape) and read by both the truth
-    * crossJoin and the candidate's postings explode.
+    * pass — never all-pairs. The gram sets are materialized ONCE (the
+    * dedup_lsh_recall shared-checkpoint shape) and read by both the
+    * truth crossJoin and the candidate's postings explode.
     *
     * Output mirrors the dedup_lsh_recall audit row: (method, n_truth,
     * n_hits, recall_bp), integer basis points, null when the probe

@@ -4,6 +4,7 @@ import graft.Checkpoints.CheckpointSyntax
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Distributed connected components over an edge list — the transitive-
   * closure step that turns near-duplicate PAIRS (what every detector in
@@ -43,17 +44,22 @@ object GraphOps {
     * contract (below).
     *
     * `assumeCanonical = true` skips that canonicalization (one |pairs|
-    * distinct shuffle plus a second |pairs| checkpoint — the r15
-    * optimization): the CALLER asserts the exact contract
-    * [[DedupOps.pairsWithinBuckets]] guarantees — rows are DISTINCT,
-    * both endpoints NON-NULL, STRICTLY src < dst (no loops, no reversed
-    * duplicates), and the id columns are INTEGRAL types whose native
-    * ordering equals their long-cast ordering (a string id column that
-    * sorts differently from its numeric value silently breaks the u < v
-    * invariant and yields non-min component ids). A violating input is
-    * OUT OF CONTRACT: the flag path may emit duplicate node rows,
-    * non-min components, or drop self-loop-only nodes, with no failure
-    * signal (pinned in GraphOpsSpec). When in doubt, leave the default.
+    * distinct shuffle plus a second |pairs| checkpoint). The CALLER
+    * asserts the exact contract [[DedupOps.pairsWithinBuckets]]
+    * guarantees:
+    *  - rows are DISTINCT;
+    *  - both endpoints are NON-NULL;
+    *  - STRICTLY src < dst (no loops, no reversed duplicates);
+    *  - both id columns have an INTEGRAL type (byte, short, int, long),
+    *    whose ordering equals the long-cast ordering the rounds use.
+    * The integral types are checked from the schema, which runs no job;
+    * any other id type (a string or double id can order differently
+    * from its long cast and yield non-min component ids) is refused.
+    * The other three would each cost a job and are not checked: an
+    * input that violates them is OUT OF CONTRACT, and the flag path may
+    * then emit duplicate node rows or non-min components, or drop
+    * self-loop-only nodes, with no failure signal (pinned in
+    * GraphOpsSpec). When in doubt, leave the default.
     *
     * Returns one row per distinct node: (node, component) where
     * `component` is the MINIMUM node id in the node's component —
@@ -64,6 +70,7 @@ object GraphOps {
       edges0: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 50, assumeCanonical: Boolean = false): DataFrame = {
     require(maxIter > 0, "maxIter must be positive")
+    if (assumeCanonical) requireIntegralIds(edges0, srcCol, dstCol)
 
     // Orientation (u < v) with and without the dedup shuffle: duplicate
     // edges are harmless INSIDE a round (both star ops only take mins
@@ -91,7 +98,7 @@ object GraphOps {
       .filter(col("n").isNotNull)
       .distinct()
 
-    // assumeCanonical (r15 optimization round): the caller asserts the
+    // assumeCanonical: the caller asserts the
     // input is ALREADY canonical — distinct pairs with src < dst
     // strictly, no nulls, integral ids (the scaladoc's contract). Every
     // LSH-style pair generator in DedupOps ends in pairsWithinBuckets,
@@ -101,7 +108,7 @@ object GraphOps {
     // plus a SECOND |pairs| checkpoint materialization per cc call for
     // nothing (guide §2.4: remove shuffles on data already partitioned/
     // deduplicated as needed). With the assertion, the raw checkpoint
-    // IS the round-0 edge set. Default false: arbitrary edge lists
+    // IS the initial edge set. Default false: arbitrary edge lists
     // (loops, reversed duplicates) still take the canon path.
     var edges = if (assumeCanonical) raw else canon(raw).checkpointed()
 
@@ -126,9 +133,9 @@ object GraphOps {
         .filter(col("nc") > 1 || (col("nc") === 1 && col("tot") > 1))
         .isEmpty
 
-    // The star-round min joins carry NO join hint, deliberately (r10
-    // bake-off): `mins` is per-node, but its lineage is a GROUP-BY over
-    // checkpointed edges, whose size estimate is SOUND — Spark's
+    // The star-round min joins carry NO join hint, deliberately: `mins` is
+    // per-node, but its lineage is a GROUP-BY over checkpointed edges,
+    // whose size estimate is SOUND — Spark's
     // adaptive broadcast is then the correct mechanism at every scale
     // (small rounds broadcast, big rounds flip to keyed joins as the
     // honest estimate crosses the threshold — and star rounds SHRINK,
@@ -201,7 +208,7 @@ object GraphOps {
     // component min): v's component is u, centers and isolated nodes
     // map to themselves.
     //
-    // assumeCanonical output (r15 opt), valid only under the scaladoc's
+    // assumeCanonical output, valid only under the scaladoc's
     // contract — distinct, non-null, integral ids with src < dst in their
     // long cast, so each star's center is its component minimum: with no
     // self-loops possible,
@@ -280,10 +287,9 @@ object GraphOps {
     def maybeB(df: DataFrame): DataFrame =
       if (small) broadcast(df) else df.hint("shuffle_hash")
 
-    // (r9 probe: dropping the deg/oriented/adj checkpoints to shorten
-    // the serialized-job chain measured NEUTRAL at sf0.1 — the cuts
-    // stay, since each guarantees its multi-consumer subtree runs once
-    // at any scale.)
+    // Each of the deg/oriented/adj checkpoints guarantees that its
+    // multi-consumer subtree runs once at any scale (dropping them to
+    // shorten the serialized-job chain measured neutral at sf0.1).
     val deg = e.select(col("a").as("v_")).union(e.select(col("b").as("v_")))
       .groupBy("v_").agg(count(lit(1)).as("d"))
       .checkpointed()
@@ -356,8 +362,9 @@ object GraphOps {
     *
     * `assumeCanonical = true` carries [[connectedComponents]]'s exact
     * caller contract — rows DISTINCT, both endpoints NON-NULL, STRICTLY
-    * src < dst, INTEGRAL id columns whose native ordering equals their
-    * long-cast ordering — plus one of its own: the edges are already
+    * src < dst, INTEGRAL id columns (byte, short, int, long: checked from
+    * the schema, with no job, and any other type refused; the other
+    * three are not checked) — plus one of its own: the edges are already
     * materialized or cheap to re-read. The contract additionally
     * LOAD-BEARS round 1's fused min-aggregate below: the fusion is only
     * valid because every (dst, label) count is exactly 1, which needs
@@ -370,6 +377,7 @@ object GraphOps {
       edges0: DataFrame, srcCol: String, dstCol: String,
       rounds: Int, dimensionNodes: Boolean = false,
       assumeCanonical: Boolean = false): DataFrame = {
+    if (assumeCanonical) requireIntegralIds(edges0, srcCol, dstCol)
     // dimensionNodes (the PageRankOps contract): caller asserts the
     // node universe is dimension-bounded, so the |V|-row label table
     // rides a BROADCAST join each round and the symmetric edge list is
@@ -378,12 +386,11 @@ object GraphOps {
     // PageRankOps.maybeB).
     def maybeB(df: DataFrame): DataFrame =
       if (dimensionNodes) broadcast(df) else df.hint("shuffle_hash")
-    // assumeCanonical (the connectedComponents contract, r15): caller
+    // assumeCanonical (the connectedComponents contract): caller
     // asserts distinct a < b edges, no nulls, integral ids, ALREADY
-    // materialized (checkpointed or similarly cheap to re-read) — g8_modularity
-    // checkpoints the canonical co-purchase edges itself and then fed
-    // them through this canon path a second time, paying a redundant
-    // |E| distinct shuffle + |E| checkpoint per call.
+    // materialized (checkpointed or similarly cheap to re-read), so the
+    // canon path's |E| distinct shuffle + |E| checkpoint would be
+    // redundant (g8_modularity checkpoints its canonical edges itself).
     val e =
       if (assumeCanonical)
         edges0.select(col(srcCol).cast("long").as("a"),
@@ -400,8 +407,8 @@ object GraphOps {
         .checkpointed()
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
-    // Round 1 is DEGENERATE and fuses to one aggregate (r10): the seed
-    // labels are the identity map over the node universe, so the round-1
+    // Round 1 is DEGENERATE and fuses to one aggregate: the seed
+    // labels are the identity map over the node universe, so the first round's
     // join matches every mirrored edge exactly once and — the edge list
     // being distinct by construction above, or by CALLER ASSERTION under
     // assumeCanonical — every (dst, label=src) count is exactly 1. This
@@ -431,10 +438,10 @@ object GraphOps {
       // deterministic majority rule, with map-side partial combine and
       // no per-round sort of the (v, label) count table.
       //
-      // One-exchange variant measured and correctly NOT wired (r11):
-      // repartition(v) before the count satisfies BOTH aggregates'
-      // distributions (hash on a grouping-key subset), collapsing the
-      // round to one exchange — 1.13 -> 0.88 s at sf0.1, parity exact.
+      // A one-exchange variant is deliberately not used: repartition(v)
+      // before the count satisfies BOTH aggregates' distributions (hash
+      // on a grouping-key subset), collapsing the round to one exchange
+      // — 1.13 -> 0.88 s at sf0.1, parity exact.
       // But it ships the RAW join output (|E| rows per round) where
       // this form ships map-side-COMBINED (v,label) partials, bounded
       // by P x |V| x labels under the dimensionNodes contract — at
@@ -446,4 +453,13 @@ object GraphOps {
     }
     labels
   }
+
+  /** The free half of the `assumeCanonical` contract: both id columns
+    * are integral. Resolving the projection reads the schema only. */
+  private def requireIntegralIds(edges: DataFrame, cols: String*): Unit =
+    cols.foreach { c =>
+      val t = edges.select(col(c)).schema.head.dataType
+      require(t == LongType || t == IntegerType || t == ShortType || t == ByteType,
+        s"assumeCanonical needs integral id columns; $c is ${t.simpleString}")
+    }
 }

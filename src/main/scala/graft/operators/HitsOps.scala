@@ -62,7 +62,7 @@ object HitsOps {
     // else-branch hints shuffle_hash: without it the caller's "nodes
     // are fact-scaled" declaration is advisory only — Spark's
     // under-10MB estimate would auto-broadcast the rank/frontier table
-    // at test SF anyway (the a19 class, r10 audit finding).
+    // at test SF anyway (the a19 class).
     def maybeB(df: DataFrame): DataFrame =
       if (dimensionNodes) broadcast(df) else df.hint("shuffle_hash")
 
@@ -98,9 +98,9 @@ object HitsOps {
     }
 
     // The first half-round is DEGENERATE and fuses to one aggregate
-    // (the labelPropagation r10 treatment): seed hubs are 1e6 for every
+    // (the labelPropagation treatment): seed hubs are 1e6 for every
     // source, so auth_raw(p) = Σ_s∈in(p) 1e6 = 1e6 · indegree(p) over
-    // the distinct edge list — no seed-distinct shuffle, no round-1
+    // the distinct edge list — no seed-distinct shuffle, no first-round
     // hub join. The hub universe is unchanged (every source reappears
     // in the first real hub half-round's groupBy); value-identity is
     // pinned in PageRankOpsSpec against the generic replay.

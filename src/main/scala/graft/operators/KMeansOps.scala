@@ -49,7 +49,7 @@ object KMeansOps {
     // + re-decoding vectors each time — the same input caching MLlib's
     // KMeans performs before Lloyd's loop. MEMORY_AND_DISK: spills
     // instead of recomputing when the vector set outgrows executor
-    // memory at scale (round-7 review: ann_kmeans_cells re-scanned its
+    // memory at scale (without it ann_kmeans_cells re-scans its
     // source 4x for a 3-iteration fit). Measured honestly: at sf0.1 this
     // is a wash (2.23 s vs 2.25 s median of 5 — the 5k-row parquet is OS
     // page-cached and per-iteration cost is job overhead + the assign

@@ -293,7 +293,7 @@ object MultimodalOps {
     * stays the deterministic stub (the registered query's oracle
     * replays it); pass [[graft.pipeline.JavaSoundExternals]] for the
     * REAL JDK codec path (ImageIO decode + area-averaging scale,
-    * r13 — png/jpeg/bmp/gif). Dataflow is identical either way: blobs
+    * png/jpeg/bmp/gif). Dataflow is identical either way: blobs
     * never leave their executor, output schema carries typed dims. */
   def resizeImages(df: DataFrame, pathCol: String, contentCol: String,
       w: Int, h: Int,

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * (convergence to 1e-3 relative takes ~O(log n / (1-d)) rounds; corpus
   * weighting uses the coarse ordering, which stabilizes in 3-5).
   *
-  * Job-count floor verdict (r13, JobCensus on g1 at sf0.1): the short
+  * Job-count floor (JobCensus on g1 at sf0.1): the short
   * loop is ALREADY one lazy DAG — there is no per-round barrier left
   * to batch. Its 19 driver jobs are the base checkpoints (~3) plus
   * AQE stage materializations and the two broadcast builds each round
@@ -179,7 +179,7 @@ object PageRankOps {
     // else-branch hints shuffle_hash: without it the caller's "nodes
     // are fact-scaled" declaration is advisory only — Spark's
     // under-10MB estimate would auto-broadcast the rank/frontier table
-    // at test SF anyway (the a19 class, r10 audit finding).
+    // at test SF anyway (the a19 class).
     def maybeB(df: DataFrame): DataFrame =
       if (dimensionNodes) broadcast(df) else df.hint("shuffle_hash")
 
@@ -220,11 +220,11 @@ object PageRankOps {
         // dense — the per-round shape is contribution join + keyed sum,
         // then a left join back onto the node table.
         //
-        // Degree fold (r11): under dimensionNodes the dense node table
+        // Degree fold: under dimensionNodes the dense node table
         // carries out_deg from round 0, so each round's rank table
         // ALREADY holds the divisor and roundContribs drops its
-        // ranks⋈degrees join from the contribution side. Honest
-        // accounting (r11 review): the plan is LAZY, so the
+        // ranks⋈degrees join from the contribution side. The plan is
+        // LAZY, so the
         // nodes⋈degrees fold itself still unrolls inside every round's
         // update join — the fold RELOCATES the per-round degree join
         // from the contribution path to the update path rather than
@@ -232,7 +232,7 @@ object PageRankOps {
         // 3.04 -> 2.95 s same-session, i.e. neutral). Kept for
         // semantics, not speed: pure sinks carry an explicit null
         // out_deg (hold rank, contribute nothing — the non-null filter
-        // in roundContribs makes the old inner-join behavior visible),
+        // in roundContribs gives them inner-join behavior),
         // and both rank-table shapes are pinned by tests including the
         // mid-loop checkpoint of the 3-column table. Shuffle mode is
         // untouched: it folds the degree onto the EDGE side (outEdges)
@@ -250,7 +250,7 @@ object PageRankOps {
             // is LAZY it unrolls inside EVERY round's update join;
             // binding the strategy by hint (like maybeB does for the
             // rank-side joins) stops a size-estimate miss from planning
-            // a per-round |V|⋈|V| shuffle at real scale (ADVICE r11).
+            // a per-round |V|⋈|V| shuffle at real scale.
             val deg = broadcast(
               degrees.select(col("src").as("__dnode"), col("out_deg")))
             flagged0.join(deg, flagged0("node") === deg("__dnode"), "left")

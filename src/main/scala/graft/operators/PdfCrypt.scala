@@ -13,7 +13,7 @@ import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
   * Supported: /Filter /Standard with V 1/2 (RC4, 40..128-bit), V 4
   * crypt filters /V2 (RC4) or /AESV2 (AES-128-CBC, 16-byte IV
   * prefix) — R 2/3/4 — and V 5 /AESV3 (AES-256-CBC, R 5 legacy and
-  * R 6 with the ISO 32000-2 Algorithm 2.B hardened hash; r15). NOT
+  * R 6 with the ISO 32000-2 Algorithm 2.B hardened hash). NOT
   * handled (documented seam): documents with a real (non-empty) user
   * password — the /U gate fails them closed before any ciphertext
   * could flow.
@@ -22,7 +22,7 @@ import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
   * fixture generator exists in this offline container, so the spec
   * tests build their fixtures with an ENCRYPTION-side implementation
   * of the same published algorithms. The transcription
-  * self-consistency risk that left is retired as of r14 by
+  * self-consistency risk that leaves is retired by
   * `PdfCryptSpec`'s known-answer vectors — file keys, /U values, and
   * per-object keys for R2/R3/R4 pinned to hex computed independently
   * of this code (Python hashlib + from-scratch RC4, Algorithms 1/2/4/5
@@ -56,7 +56,7 @@ private[operators] object PdfCrypt {
   /** Algorithm 2 with the empty user password: the padded (empty)
     * password, the 32 /O bytes, /P as a 4-byte little-endian SIGNED
     * int, the first file identifier, and — when R >= 4 declares
-    * /EncryptMetadata false — four 0xFF bytes (r13 review: omitting
+    * /EncryptMetadata false — four 0xFF bytes (omitting
     * that step derives a wrong key for every metadata-unencrypted R4
     * document); R >= 3 re-hashes the first keyBytes 50 times. */
   def fileKey(o: Array[Byte], p: Int, fileId: Array[Byte],
@@ -85,7 +85,7 @@ private[operators] object PdfCrypt {
     * compares this against the stored /U — a mismatch means the
     * document has a REAL user password (or we mis-derived the key) and
     * extraction must fail closed BEFORE any ciphertext could flow
-    * through an unfiltered stream as fake text (r13 review). */
+    * through an unfiltered stream as fake text. */
   def emptyUserU(fileKey: Array[Byte], fileId: Array[Byte], r: Int): Array[Byte] =
     if (r == 2) rc4(fileKey, Pad)
     else {
@@ -106,7 +106,7 @@ private[operators] object PdfCrypt {
         java.util.Arrays.equals(want.take(n), uStored.take(n))
     } catch { case _: Exception => false }
 
-  // ------------------------------------ AES-256 (/V 5, R5/R6 — r15)
+  // ------------------------------------------ AES-256 (/V 5, R5/R6)
 
   /** ISO 32000-2 §7.6.4.3.3/.4: the R6 hardened hash (Algorithm 2.B)
     * or the single SHA-256 of the retired R5 scheme (Acrobat 9's

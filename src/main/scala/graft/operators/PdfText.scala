@@ -29,7 +29,7 @@ import java.nio.charset.StandardCharsets
   * DICTS, however, routinely do hide there — catalog/pages/font/
   * encoding objects of every pdftex/FO document since ~2005 live
   * compressed in /ObjStm objects — so those are expanded into the map
-  * after crypt detection (r14; without it the page tree never
+  * after crypt detection (without it the page tree never
   * resolves and extraction silently degrades to the no-font-context
   * raw scan). Pages come from the catalog's /Pages /Kids tree walk
   * (reading order); each page's /Contents streams concatenate and its
@@ -40,7 +40,7 @@ import java.nio.charset.StandardCharsets
   * string bytes are opaque glyph codes — decodes through the CMap
   * (codespacerange width, bfchar and both bfrange forms, UTF-16BE
   * targets). A font without one but WITH an /Encoding decodes through
-  * the resolved byte table (r14): Annex D's StandardEncoding /
+  * the resolved byte table: Annex D's StandardEncoding /
   * WinAnsiEncoding / MacRomanEncoding as the base, /Differences names
   * remapped through the AGL subset ([[PdfEncodings]]) — the WinAnsi
   * 0x80-0x9F punctuation and TeX-era /Differences fonts that Latin-1
@@ -54,14 +54,14 @@ import java.nio.charset.StandardCharsets
   *     honoring per-filter /DecodeParms: PNG row predictors 10-15 and
   *     TIFF predictor 2 on Flate/LZW streams (§7.4.4.4 — generators
   *     that predictor-compress object streams, and pre-1.5 LZW
-  *     archives; r15) and LZW /EarlyChange. Streams under image/other
+  *     archives) and LZW /EarlyChange. Streams under image/other
   *     filters (DCTDecode etc.) are skipped — they carry no text
   *     operators.
   *   - ENCRYPTED documents with the standard security handler and an
   *     EMPTY user password — the "owner-locked but freely openable"
   *     class crawls meet — decrypt natively ([[PdfCrypt]]: RC4 V1/V2,
   *     AES-128 /AESV2 with per-object keys, and AES-256 /AESV3 V5
-  *     R5/R6 with the direct file key (r15), decrypt-then-filter).
+  *     R5/R6 with the direct file key, decrypt-then-filter).
   *   - CID fonts WITHOUT /ToUnicode (no text mapping exists in the
   *     file at all — PyMuPDF emits garbage there too) and real user
   *     passwords stay at the [[graft.pipeline.Externals]] seam; they
@@ -75,7 +75,7 @@ import java.nio.charset.StandardCharsets
   * pages in file order, blank-line separated — then the pipeline's
   * sentence tokenizer re-segments anyway (PreprocessPipeline).
   *
-  * Form XObjects (§8.10, r14): the `Do` operator recurses into
+  * Form XObjects (§8.10): the `Do` operator recurses into
   * /Subtype /Form streams with the form's own /Resources (inheriting
   * the caller's when absent), cycle-proof — headers, watermarks, and
   * template-generator body text live there, invisible to a
@@ -101,7 +101,7 @@ object PdfText {
     // user password, caught by the /U check): proceeding would pass
     // raw ciphertext through no-/Filter streams, and multi-KB
     // ciphertext contains "BT" and '(' runs often enough to emit
-    // random bytes as page text (r13 review).
+    // random bytes as page text.
     if (crypt == UnsupportedCrypt) return ""
     val ctxOpt = crypt match {
       case WithCrypt(c) => Some(c)
@@ -111,8 +111,8 @@ object PdfText {
     // DICTS routinely live compressed inside /ObjStm objects (every
     // pdftex/FO-processor document since ~2005) — without expanding
     // them the page tree never resolves and extraction degrades to the
-    // raw no-font-context scan (r14: both real-world validation PDFs
-    // hit exactly this). Expansion happens AFTER crypt detection
+    // raw no-font-context scan (both real-world PDFs that PdfTextSpec
+    // reads depend on it). Expansion happens AFTER crypt detection
     // because ObjStm data is encrypted like any stream; the /Encrypt
     // dict itself is spec-barred from living in one (§7.5.8.2).
     val allObjs =
@@ -121,7 +121,7 @@ object PdfText {
     val pageTexts =
       try {
         // one ToUnicode parse per font OBJECT per document, not per
-        // page referencing it (r13 review: a 500-page book re-inflated
+        // page referencing it (a 500-page book would otherwise re-inflate
         // its 10 shared CMaps ~5000 times)
         val cmapCache = scala.collection.mutable.Map[Int, Option[CMap]]()
         pagesInOrder(allObjs).map { pageDict =>
@@ -139,7 +139,7 @@ object PdfText {
           // text operators, so image-only pages (scanned books: one
           // /Image per page, no BT anywhere) keep the cheap
           // short-circuit instead of paying a full content scan per
-          // page (r14 ADVICE); the dict text is already in hand.
+          // page; the dict text is already in hand.
           if (!containsTextOps(content) && !hasFormXObject(allObjs, ctx)) ""
           else contentText(content, ctx)
         }
@@ -155,8 +155,8 @@ object PdfText {
         // Raw fallback shares extract()'s never-throws contract — it
         // re-parses the same untrusted bytes the graph path failed on.
         // It runs off the OBJECT map first (per-object numbers keep
-        // decryption working — r13 review: the old any-stream scan
-        // could not decrypt, silently emptying encrypted docs with a
+        // decryption working — a blind any-stream scan cannot
+        // decrypt, and would silently empty encrypted docs with a
         // broken page tree), with the blind stream scan last for
         // fragments parseObjects missed entirely.
         try {
@@ -192,15 +192,15 @@ object PdfText {
     * /Length values). */
   /** Also returns the file text with stream extents BLANKED — the only
     * safe haystack for whole-file regex scans like /Encrypt and /ID
-    * detection (r13 review: an uncompressed embedded attachment could
-    * otherwise plant a phantom trailer). */
+    * detection (an uncompressed embedded attachment could otherwise
+    * plant a phantom trailer). */
   private def parseObjects(b: Array[Byte]): (Map[Int, PObj], String) = {
     val s = new String(b, StandardCharsets.ISO_8859_1)
     val extents = scala.collection.mutable.Buffer[(Int, Int)]()
     val out = scala.collection.mutable.LinkedHashMap[Int, PObj]()
     val objRe = """(\d{1,9})\s+(\d{1,5})\s+obj\b""".r
     // matches starting INSIDE a previously-delimited stream extent are
-    // phantom objects (r13 review: an embedded uncompressed PDF/XML
+    // phantom objects (an embedded uncompressed PDF/XML
     // attachment containing "3 0 obj" text would otherwise clobber the
     // host's real object 3 under the later-definition-wins rule)
     var skipUntil = 0
@@ -257,7 +257,7 @@ object PdfText {
     * bodies — dicts (catalog, pages, fonts, encodings) and small
     * non-dict values; contained objects are never themselves streams
     * (§7.5.7 forbids it), so `data` is always None. Merge precedence is
-    * FILE POSITION, not container kind (r14 ADVICE): an incremental
+    * FILE POSITION, not container kind: an incremental
     * update appends plain `N 0 obj` redefinitions after the original
     * ObjStm (top-level wins), but a full-save rewriter (qpdf
     * --object-streams, Acrobat save-as) recompresses the live
@@ -314,7 +314,7 @@ object PdfText {
   }
 
   /** End index (exclusive) of the balanced `<< ... >>` starting at i.
-    * STRING-AWARE (r13 ADVICE): literal `(...)` and hex `<...>` string
+    * STRING-AWARE: literal `(...)` and hex `<...>` string
     * values are skipped whole — the 32 random-ish bytes of /O and /U in
     * Encrypt dicts contain '>>' or '<<' in ~0.1% of encrypted
     * documents, and counting those would truncate/extend the dict
@@ -406,8 +406,8 @@ object PdfText {
       } else RefRe.findPrefixMatchOf(
         pageDict.substring(j, math.min(pageDict.length, j + 24)))
         .map(m => Seq(m.group(1).toInt)).getOrElse(Seq.empty)
-    // /Contents may point INDIRECTLY at an array object (§7.7.3.3,
-    // r13 review): a resolved non-stream object whose body is an
+    // /Contents may point INDIRECTLY at an array object (§7.7.3.3):
+    // a resolved non-stream object whose body is an
     // array expands one level into its stream refs.
     val refs = refs0.flatMap { r =>
       objs.get(r) match {
@@ -426,14 +426,14 @@ object PdfText {
   /** How a font's string bytes become text (§9.10 priority order):
     * a /ToUnicode CMap when present (authoritative), else the font's
     * /Encoding resolved to a 256-entry byte table (Annex D base
-    * encodings + /Differences remap — [[PdfEncodings]], r14); fonts
+    * encodings + /Differences remap — [[PdfEncodings]]); fonts
     * with NEITHER stay unbound and fall back to Latin-1 byte decode. */
   private sealed trait FontDec
   private final case class CMapDec(cm: CMap) extends FontDec
   private final case class ByteDec(table: Array[String]) extends FontDec
 
   /** Everything the content-stream scanner needs to decode text and to
-    * follow `Do` into Form XObjects (§8.10, r14): the object map, the
+    * follow `Do` into Form XObjects (§8.10): the object map, the
     * crypt context, the active resource bindings, the shared CMap
     * cache, and the recursion guards (a visited set so sibling Do
     * references still both render while reference CYCLES terminate,
@@ -448,7 +448,7 @@ object PdfText {
       depth: Int)
 
   /** The page's /Resources dict text, walking the /Parent chain
-    * (§7.7.3.4 inheritance, r13 review: pages that omit /Resources and
+    * (§7.7.3.4 inheritance: pages that omit /Resources and
     * inherit the font map from their /Pages node would otherwise
     * decode CID text as Latin-1 garbage). */
   private def resourcesOf(objs: Map[Int, PObj], pageDict0: String)
@@ -528,9 +528,9 @@ object PdfText {
   private def encodingOf(objs: Map[Int, PObj], fontDict: String)
       : Option[Array[String]] = {
     // Key lookup runs on the TOP-LEVEL-blanked text with a delimiter
-    // required after the key (r14 ADVICE: a raw indexOf could bind a
-    // match inside a nested dict value or a string, and /EncodingX-
-    // style longer keys failed safe only by value-shape accident).
+    // required after the key (a raw indexOf could bind a match inside
+    // a nested dict value or a string, and would bind /EncodingX-style
+    // longer keys, which would then fail safe only by value-shape accident).
     // topLevel() blanks in place, so offsets transfer to fontDict —
     // the VALUE (possibly an inline nested dict, which topLevel
     // blanked) is read from the original text.
@@ -562,7 +562,7 @@ object PdfText {
         // a Type0 font's embedded CMap (not a simple-font encoding) —
         // building a byte table from its stream dict would decode
         // 2-byte CID text through StandardEncoding garbage; leave those
-        // to the ToUnicode/Latin-1 paths (r14 review).
+        // to the ToUnicode/Latin-1 paths.
         RefRe.findPrefixMatchOf(
             fontDict.substring(j, math.min(fontDict.length, j + 24)))
           .flatMap(m => objs.get(m.group(1).toInt))
@@ -612,7 +612,7 @@ object PdfText {
     RefRe.findFirstMatchIn(fontDict.substring(i)).flatMap { m =>
       val num = m.group(1).toInt
       cmapCache.getOrElseUpdate(num,
-        // per-font isolation (r13 review): one unparseable CMap must
+        // per-font isolation: one unparseable CMap must
         // not discard the whole document's font-aware extraction
         try for {
           o <- objs.get(num) if o.data.isDefined
@@ -662,8 +662,8 @@ object PdfText {
           d = enc.dict
           // nested sub-dicts (the /CF crypt-filter map) carry their own
           // /Length IN BYTES — scanning the whole dict would pick it up
-          // over the top-level bit length (r13 review: Acrobat orders
-          // keys alphabetically, /CF before /Length)
+          // over the top-level bit length (Acrobat orders keys
+          // alphabetically, /CF before /Length)
           top = topLevel(d)
           if d.contains("/Standard")
           v <- intVal(top, "/V").orElse(Some(1)) if v >= 1 && v <= 4
@@ -718,9 +718,9 @@ object PdfText {
   }
 
   /** The dict text with every NESTED `<< >>` body blanked, so regex
-    * lookups hit top-level keys only. STRING-AWARE like dictEnd (r14
-    * review): it runs on Encrypt dicts, whose /O and /U values are 32
-    * random-ish bytes — a literal string containing '<<' would push
+    * lookups hit top-level keys only. STRING-AWARE like dictEnd: it runs on
+    * Encrypt dicts, whose /O and /U values are 32 random-ish bytes — a
+    * literal string containing '<<' would push
     * the depth count and blank every key after it (e.g. /V), silently
     * demoting a supported scheme to fail-closed. */
   private def topLevel(dict: String): String = {
@@ -761,7 +761,7 @@ object PdfText {
       .flatMap(m => m.group(1).toLongOption)
       // TRUNCATE to the low 32 bits instead of rejecting: real
       // producers write /P as the unsigned equivalent of the negative
-      // permissions int (r13 review; the PDFBox/pdf.js behavior)
+      // permissions int (the PDFBox/pdf.js behavior)
       .map(_.toInt)
 
   /** The raw bytes of the string value at /Key (literal or hex). */
@@ -839,8 +839,8 @@ object PdfText {
       sb.toString
     }
     // total hex parse: codes past Int range (4-byte CMaps beyond
-    // <7FFFFFFF>) drop the ENTRY, not the document (r13 review: an
-    // Integer.parseInt throw here used to discard every page's
+    // <7FFFFFFF>) drop the ENTRY, not the document (an
+    // Integer.parseInt throw here would discard every page's
     // font-aware extraction through the outer catch)
     def hexCode(h: String): Option[Int] =
       if (h.length > 8) None
@@ -914,8 +914,8 @@ object PdfText {
     while (i >= 0 && i < b.length) {
       i = indexOf(b, "<<", i)
       if (i >= 0) {
-        // balance << against >>, skipping string spans (r13 ADVICE:
-        // same string-awareness as dictEnd — see there)
+        // balance << against >>, skipping string spans (the same
+        // string-awareness as dictEnd — see there)
         val LT = '<'.toByte; val GT = '>'.toByte
         val OP = '('.toByte; val CP = ')'.toByte; val BS = '\\'.toByte
         var depth = 0
@@ -975,7 +975,7 @@ object PdfText {
   // backtracks `/Length 12 0 R` to capture "1" just to satisfy the
   // indirect-reference lookahead; with both, an indirect /Length finds
   // no match and the endstream-keyword fallback sizes the data. The
-  // 1-9 digit bound keeps toInt total (r13 review: a corrupt
+  // 1-9 digit bound keeps toInt total (a corrupt
   // `/Length 99999999999999` must fall to the endstream fallback, not
   // throw through extract()'s never-throws contract).
   private val LenRe = """/Length\s+(\d{1,9})(?!\d)(?!\s*\d+\s+R)""".r
@@ -1003,14 +1003,14 @@ object PdfText {
     * decode failure) → empty. LZW matters for real corpora: pre-2000
     * Acrobat compressed CONTENT streams with it (Flate arrived in
     * PDF 1.2), so an LZW-era scan of a book archive hits it on the
-    * exact documents OCR'd least recently (r14). */
+    * exact documents OCR'd least recently. */
   private def decode(s: (String, Array[Byte])): Array[Byte] = {
     val (dict, data) = s
     if (!dict.contains("/Filter")) return data
     val names = "/(FlateDecode|ASCIIHexDecode|ASCII85Decode|DCTDecode|JPXDecode|CCITTFaxDecode|RunLengthDecode|LZWDecode)".r
       .findAllMatchIn(filterSpec(dict)).map(_.group(1)).toSeq
     // /Filter present but NO recognized filter name parsed (abbreviated
-    // names, /JBIG2Decode, /Crypt, a typo): fail CLOSED (r13 ADVICE) —
+    // names, /JBIG2Decode, /Crypt, a typo): fail CLOSED —
     // returning the raw encoded bytes here would let multi-KB
     // compressed/encrypted data (which contains "BT" often enough) flow
     // into the raw fallback scan as fake text, the exact failure
@@ -1020,7 +1020,7 @@ object PdfText {
     names.zipWithIndex.foldLeft(data) { case (acc, (f, ix)) =>
       if (acc.isEmpty) acc
       else f match {
-        // Flate/LZW honor /DecodeParms (r14 VERDICT #1): PNG row
+        // Flate/LZW honor /DecodeParms: PNG row
         // predictors (some generators predictor-compress OBJECT
         // streams; pre-1.5 archives carry predictor'd LZW) and TIFF
         // horizontal differencing decode; an UNREADABLE parm slot
@@ -1233,8 +1233,8 @@ object PdfText {
     * from 258; the code width bumps one code EARLY when
     * /EarlyChange = 1 (the spec default and what nearly every producer
     * writes), or exactly at the table-full boundary when a
-    * /DecodeParms declares /EarlyChange 0 (r15: honored now that parm
-    * dicts are parsed for the predictor pass). Corrupt input (an
+    * /DecodeParms declares /EarlyChange 0 (parm dicts are parsed for
+    * the predictor pass, so the declared value is honored). Corrupt input (an
     * out-of-range code, no EOD) degrades to empty — the never-throws
     * contract. */
   private def lzw(data: Array[Byte], earlyChange: Int): Array[Byte] =
@@ -1394,7 +1394,7 @@ object PdfText {
 
   /** Decompression ceiling: real content/CMap streams are KBs to a few
     * MBs; a small deflate stream expanding past this is a flate bomb
-    * and the whole stream is dropped (r13 review — the ingest gate's
+    * and the whole stream is dropped (the ingest gate's
     * "best text or empty" contract covers resource exhaustion too). */
   private val MaxInflateBytes = 64 << 20
 
@@ -1430,8 +1430,8 @@ object PdfText {
     * a WORD BREAK, not letter kerning: TeX-family PDFs carry no space
     * glyphs at all — interword glue arrives as kerns of ~-250 to -350
     * milli-em, while letter-pair kerning stays above ~-100 (the
-    * pdftotext/PyMuPDF word-assembly heuristic; validated r13 on the
-    * container's two real TeX/DocBook PDFs, which were unreadable
+    * pdftotext/PyMuPDF word-assembly heuristic; validated on the two
+    * real TeX/DocBook PDFs PdfTextSpec reads, which are unreadable
     * word-soup without it). */
   private val WordGapKern = -180
 
@@ -1522,7 +1522,7 @@ object PdfText {
           s.substring(i, j) match {
             case "BT" => inText = true; pending.clear()
             case "ET" =>
-              // block boundary breaks the line (r13 review: generators
+              // block boundary breaks the line (generators
               // that emit one BT..ET per line — Chrome, Ghostscript —
               // would otherwise fuse whole pages into one token)
               inText = false; pending.clear(); newline()

@@ -106,9 +106,9 @@ object PowerIterOps {
       // The iterate is bounded model state (dim longs) — the
       // KMeansOps/PqOps collect contract. Batching two rounds per
       // collect (round B consuming round A's iterate as a broadcast
-      // 1-row side instead of a collected literal) was bake-offed in
-      // r14 and LOST: 7/8 alternating same-JVM reps slower (median
-      // 1.38 -> 1.53 s at sf0.1), driver jobs 10 -> 11 — the broadcast
+      // 1-row side instead of a collected literal) LOST the bake-off: 7/8
+      // alternating same-JVM reps slower (median 1.38 -> 1.53 s at sf0.1),
+      // driver jobs 10 -> 11 — the broadcast
       // materialization of the intermediate costs more than the one
       // driver round-trip it saves, the HitsOps round-batching result
       // again.

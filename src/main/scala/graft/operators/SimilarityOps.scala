@@ -24,8 +24,8 @@ import graft.functions.VectorFns
   *     within buckets: one shuffle on the bucket key, no cross product.
   *   - every per-query top-k is the bounded TopKOps aggregator (k-entry
   *     buffers, map-side combine) over the sortable_bits-encoded cosine
-  *     — round 8 replaced the row_number window tails, which shuffled
-  *     and SORTED the full scored pair table per query to keep k rows.
+  *     — not a row_number window tail, which would shuffle and SORT
+  *     the full scored pair table per query to keep k rows.
   */
 object SimilarityOps {
 
@@ -62,7 +62,7 @@ object SimilarityOps {
     * silently falls back to interpretation, so this was first a Scala
     * UDF over the precomputed sign matrix — but the UDF pays a boxed
     * Seq[java.lang.Double] round-trip per row (the multi-table variant
-    * measured ~2.5 ms/row of boxing at 8×6×64, JobCensus r12). The
+    * measured ~2.5 ms/row of boxing at 8×6×64 in JobCensus). The
     * native expression is one compiled-kernel call inside codegen:
     * no Janino cliff, no boxing. Arithmetic is the UDF's exactly
     * (acc from 0.0, left-assoc — 0.0 + x == x so the oracle's no-init
@@ -71,7 +71,7 @@ object SimilarityOps {
     * oracle's semantics exactly (its fold reads elements 1..dim only).
     * The retired UDF's v.contains(null) additionally nulled rows whose
     * only null sat PAST dim — an oracle DEVIATION on longer-than-dim
-    * vectors that the kernel deliberately drops (r12 review). */
+    * vectors that the kernel deliberately drops. */
   def lshBucket(vecCol: String, nPlanes: Int = 8, dim: Int = 64): Column = {
     require(nPlanes <= 31, "int bucket holds at most 31 plane bits")
     call_function("lsh_bucket", col(vecCol), lit(nPlanes), lit(dim))
@@ -100,7 +100,7 @@ object SimilarityOps {
     * audit: bucketed + multiprobe share one plane family by design)
     * materializes this once and feeds the `*OnSignatures` variants —
     * one corpus signature pass instead of one per lane (guide §1.2
-    * recompute removal; r16). Exposed rather than inlined so the shared
+    * recompute removal). Exposed rather than inlined so the shared
     * table is the operator's own projection, not a caller re-derivation
     * that could drift from it. */
   def lshCandidateSignatures(
@@ -205,9 +205,9 @@ object SimilarityOps {
     * planes are seeded "t_i_j" (independent of the single-table "i_j"
     * family), so tables are genuinely independent hash functions. One
     * kernel call does nTables×nPlanes×dim multiply-adds; a per-table
-    * column would re-read the vector nTables times. Native codegen'd
-    * expression since r12: the former Scala UDF's boxed round-trip was
-    * THE dominant stage of ann_multitable_topk — 4.9 s task-time over
+    * column would re-read the vector nTables times. A native codegen'd
+    * expression, not a Scala UDF: a UDF's boxed round-trip was THE
+    * dominant stage of ann_multitable_topk — 4.9 s task-time over
     * 2,000 rows (JobCensus), ~2.5 ms/row for ~3k multiply-adds. */
   private[operators] def lshTableBuckets(
       vecCol: String, nTables: Int, nPlanes: Int, dim: Int): Column = {

@@ -13,8 +13,8 @@ import graft.functions.TextFns
   * landing in ≥ 2 distinct documents is an exactly-repeated span.
   *
   * `capChars` bounds how much of each document participates. It is a
-  * FIXTURE/BUDGET parameter, not an operator constant (round-7 review:
-  * a hard-coded 300 silently ignored 99% of a real document): the
+  * FIXTURE/BUDGET parameter, not an operator constant (a hard-coded
+  * 300 would silently ignore 99% of a real document): the
   * registered oracle queries pass 300 to keep the gate fixtures small;
   * a production caller passes None and every window of every document
   * participates. All arithmetic is exact at full document length — the
@@ -93,8 +93,8 @@ object SpanDedupOps {
     // No join hints: the duplicate-hash set and the per-doc position
     // table are fact-scaled, but both are post-AGGREGATE with sound
     // size estimates — AQE broadcasts them while genuinely small and
-    // flips keyed as the corpus grows (the r10 estimate-soundness
-    // doctrine; hinting measured flat-to-slower at sf0.1).
+    // flips keyed as the corpus grows (the estimate-soundness
+    // doctrine, ARCHITECTURE.md; hinting measured flat-to-slower at sf0.1).
     val dupPos = w.join(dup, Seq("h"))
       .groupBy(idCol)
       .agg(sort_array(collect_list(col("pos"))).as("pos"))

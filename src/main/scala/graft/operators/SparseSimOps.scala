@@ -39,9 +39,8 @@ object SparseSimOps {
     * filtered vocabulary. Output: (id_a, id_b, cosine), id_a < id_b.
     * Tokens are the `[a-z0-9]+` runs of the lowercased text.
     *
-    * Measured-first note (r10 bake-off, sf0.1, TimeSome min of 3 —
-    * supersedes the r8 "recompute-simple" note, which had only tried
-    * checkpointing the norm-JOINED split input): the tokenize kernel
+    * Measured (sf0.1, TimeSome min of 3; a checkpoint of the
+    * norm-JOINED split input is no better than recompute): the tokenize kernel
     * sat under FOUR consumers (df head, norms, and both split sides),
     * and the winning cut is the checkpoint at `kept` — tokenize runs
     * twice (head pass + kept build), then norms/a/b read the

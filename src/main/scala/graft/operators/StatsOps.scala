@@ -82,7 +82,7 @@ object StatsOps {
     */
   def momentsFp(
       df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame = {
-    // Two-stage VALUE-HISTOGRAM form (round-8 rewrite). DECIMAL(38,0)
+    // Two-stage VALUE-HISTOGRAM form. DECIMAL(38,0)
     // aggregation buffers are not UnsafeRow-mutable, so a direct
     // decimal-sum agg silently plans SortAggregate and SORTS EVERY DATA
     // ROW by the group key (the a31_column_profile trap — measured

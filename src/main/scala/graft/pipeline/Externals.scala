@@ -10,7 +10,7 @@ package graft.pipeline
   * available in a stock JDK: audio through the javax.sound SPI chain
   * (wav/au/aiff/ULAW out of the box; mp3 with an SPI jar on the
   * executor classpath) and PDF text through the native
-  * [[graft.operators.PdfText]] extractor (r13).
+  * [[graft.operators.PdfText]] extractor.
   */
 trait Externals extends Serializable {
   /** Crawler metadata fetch (crawler/metadata.py:94-180). */
@@ -26,8 +26,8 @@ trait Externals extends Serializable {
     * [[StubExternals]] binds a deterministic content-keyed fake (the
     * registered query's oracle replays it); [[JavaSoundExternals]]
     * binds the REAL JDK codec path (javax.imageio decode +
-    * area-averaging scale + re-encode) for png/jpeg/bmp/gif payloads
-    * (r13). The Spark-side plumbing (batching, partitioning,
+    * area-averaging scale + re-encode) for png/jpeg/bmp/gif payloads.
+    * The Spark-side plumbing (batching, partitioning,
     * binary->binary schema) is identical either way. */
   def resizeImage(bytes: Array[Byte], w: Int, h: Int): Array[Byte]
 }

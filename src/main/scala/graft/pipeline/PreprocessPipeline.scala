@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,15 +13,15 @@ import graft.operators.{AudioOps, MergeOps, RegroupOps}
   *          (F10) -> normalize (F7) -> >=3-word filter (F6) -> stateful
   *          regroup (W3) -> per-book text lines + metrics
   *   audio: part tree (S9) -> decode (S11) -> min-sample-rate gate
-  *          (F5/A7) -> resample 24k -> peak-normalize 0.95 -> ordered
-  *          concat (A10) -> metrics
+  *          (F5/A7) -> resample 24k -> book length over the ordered
+  *          parts (A10) -> metrics
   *   merge: J3 upsert of both metric sets into the book catalog.
   *
   * Scale shape: one shuffle per phase. The text regroup shuffles on book
   * id. The audio phase shuffles once, the compressed parts on book id
   * (the reference's process-pool granularity, repartition($"book_id")
-  * before per-book work); decoding, resampling and concatenation run in
-  * the task that receives the book, so no decoded sample leaves it. The
+  * before per-book work); decoding and resampling run in the task that
+  * receives the book, so no decoded sample leaves it. The
   * upsert shuffles nothing: it broadcasts the small metrics tables.
   */
 object PreprocessPipeline {
@@ -77,15 +75,16 @@ object PreprocessPipeline {
     (grouped, metrics)
   }
 
-  /** Audio phase: per-book decode -> gate -> resample -> normalize ->
-    * ordered concat -> metrics.
+  /** Audio phase: per-book decode -> gate -> resample -> metrics.
     *
     * One shuffle, of the compressed parts: they are repartitioned on
     * book id and sorted by (book id, part index) inside each partition,
     * so every book arrives as one run of adjacent rows in part order
-    * (W2/O5), and the task that decodes a book's parts also concatenates
-    * them. No decoded sample array is shuffled; a task holds one book's
-    * resampled parts at a time. */
+    * (W2/O5). No decoded sample array is shuffled, and a task holds one
+    * resampled part at a time: the metrics need only the book's length,
+    * which is the sum of its resampled part lengths (the ordered concat
+    * and the peak normalisation keep the length), and its lowest part
+    * rate. */
   def processAudio(spark: SparkSession, wavGlob: String,
       ext: Externals = StubExternals): DataFrame = {
     IoOps.readBinaryTree(spark, wavGlob)
@@ -98,16 +97,15 @@ object PreprocessPipeline {
           def hasNext: Boolean = it.hasNext
           def next(): BookAudio = {
             val book = it.head.getString(0)
-            val parts = ArrayBuffer.empty[(Array[Float], Int)]
+            var nSamples = 0L
+            var minSr = Int.MaxValue
             while (it.hasNext && it.head.getString(0) == book) {
               val (samples, sr) = ext.decodeAudio(it.next().getAs[Array[Byte]](2)) // S11
-              parts += ((AudioOps.linearResample(samples, sr, TargetSr), sr))
+              nSamples += AudioOps.linearResample(samples, sr, TargetSr).length
+              minSr = math.min(minSr, sr)
             }
-            val qualified = parts.map(_._2).min >= MinSr                       // F5/A7
-            val normalized = AudioOps.peakNormalize(                           // A10
-              AudioOps.concatParts(parts.map(_._1).toSeq), 0.95f)
-            BookAudio(book, TargetSr, normalized.length.toLong,
-              AudioOps.durationSeconds(normalized.length, TargetSr), qualified)
+            BookAudio(book, TargetSr, nSamples,
+              AudioOps.durationSeconds(nSamples, TargetSr), minSr >= MinSr)  // F5/A7
           }
         }
       }(Encoders.product[BookAudio])

@@ -10,7 +10,7 @@ import graft.Tables
 import graft.operators.BfsOps
 import graft.streaming.StreamingRateLimit
 
-/** Round-8 beyond-reference operators (SURVEY §2.11), association /
+/** Beyond-reference operators (SURVEY §2.11), association /
   * drift / graph-reach family: PMI collocation mining, exact two-sample
   * Kolmogorov–Smirnov drift, and bounded-hop multi-source BFS. Every
   * oracle replays the operator's exact integer arithmetic (house lnq /
@@ -55,11 +55,11 @@ object AssocQueries {
   private val pmiK = 20
   private val pmi: Q = (s, dir) => {
     val docs = Tables.fanOut(t(s, dir, "documents"))
-    // ONE tokenize pass for BOTH count tables (r12, JobCensus): the
-    // former two-pass form ran the tokenizer twice — 13.98 s task-time
-    // for the bigram pass + 9.84 s for the unigram pass over the same
-    // 5,000 docs. Unigrams and bigrams ride one exploded column (a
-    // bigram always contains the separator space, a [a-z]{3,} token
+    // ONE tokenize pass for BOTH count tables: a two-pass form runs the
+    // tokenizer twice — 13.98 s task-time for the bigram pass + 9.84 s
+    // for the unigram pass over the same 5,000 docs (JobCensus). Unigrams
+    // and bigrams ride one exploded column (a bigram always contains the
+    // separator space, a [a-z]{3,} token
     // never can — the kind discriminator is free) and ONE shuffled
     // count + checkpoint replaces two. Both tables stay vocab-bounded
     // MODEL STATE consumed multiple times (c12 by its total and the
@@ -285,8 +285,8 @@ object AssocQueries {
     for (i <- 1 to kcoreRounds) {
       val keep = edges.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= kcoreK).select(col("src").as("node"))
-      // No join hint on the survivor semi-joins, deliberately (r10
-      // bake-off, the connectedComponents rationale): `keep` is
+      // No join hint on the survivor semi-joins, deliberately (the
+      // connectedComponents rationale): `keep` is
       // per-node but post-AGGREGATE over checkpointed edges, so its
       // size estimate is sound and Spark's adaptive broadcast flips to
       // keyed joins exactly when real sizes demand it — while peel
@@ -603,10 +603,8 @@ object AssocQueries {
     // the distinct once (three consumers) plus broadcasting only the
     // part-vocab-sized weight table and merging the pair join won it.
     // Broadcast is for DIM-sized sides; a same-sized self-join wants
-    // the keyed merge. Re-pinned r9: isolation median 3.1 s (the r7
-    // 2.2-2.6 s pin predates the VM's slower steal-heavy baseline;
-    // plan shape unchanged — merge join + one broadcast). Re-bake-off
-    // (min of 4 GC'd reps):
+    // the keyed merge (isolation median 3.1 s: merge join + one
+    // broadcast). Bake-off (min of 4 GC'd reps):
     // this merge form 3.88 s; shuffle_hash pair join 4.14 s (a wash —
     // no sort, but the hash build over 590k rows costs the same);
     // collect_set-per-part + in-row combination explode 6.1-13.9 s
@@ -615,7 +613,7 @@ object AssocQueries {
     // the 30-long array through 9M slice allocations). The cost here
     // is the genuine ~9M-pair volume, not the join strategy.
     //
-    // CONSTANT-FACTOR FLOOR (r11, closing the bake-off): two more
+    // CONSTANT-FACTOR FLOOR: two more
     // forms measured (4 GC'd reps each) — the native
     // packed_pairs kernel over per-part supplier lists (the form that
     // wins a19: no interpreted lambdas, one primitive array per part,

@@ -323,9 +323,9 @@ object CurationQueries {
     // general LM: counts over the WHOLE corpus; target LM: src0 only
     // the LM count table is vocab-bounded model state consumed by its
     // totals AND the scoring join — checkpoint so the tokenize+shuffle
-    // under it runs once per pass, not per consumer (the pmi/zipf r10
-    // treatment; fixture-size gain is floor-bound, the cut is the
-    // corpus-scaled replay)
+    // under it runs once per pass, not per consumer (the pmi/zipf
+    // treatment; the fixture-size gain is floor-bound, the cut removes
+    // a corpus-scaled replay)
     val cnt = tf.groupBy("term").agg(
       sum("tf").as("cg"),
       sum(when(col("source") === dsirTarget, col("tf")).otherwise(0L)).as("ct"))
@@ -412,7 +412,7 @@ object CurationQueries {
     * partition), so the shuffle carries ~1 row per vector; the per-label
     * top-5 is TopKOps' bounded-buffer aggregator, never a window sort.
     *
-    * Floor verdict (r13 JobCensus): 8 driver jobs, Σ task-time ~0.6 s
+    * Cost (JobCensus, sf0.1): 8 driver jobs, Σ task-time ~0.6 s
     * of a 1.37 s wall, heaviest stage 0.18 s over 10 rows — pure
     * job-count × host planning floor; shape already minimal. */
   private val embOutK = 5
@@ -458,7 +458,7 @@ object CurationQueries {
 
   // ----------------------------------------------- pipe_curation_pass
 
-  /** Flagship composition #2 — the round-6/7 curation family as ONE
+  /** Flagship composition #2 — the curation family as ONE
     * declarative plan: Gopher-rule quality gate (row-local integer
     * mask) → √-temperature language rebalancing over the SURVIVORS
     * (quotas from post-gate counts, rank-by-hash) → sequence packing at
@@ -476,7 +476,7 @@ object CurationQueries {
     // then the rank window) — each pass would re-run the gopher stats
     // kernels over the full corpus. Materialize the survivors once;
     // the checkpoint is post-gate (survivor-sized), and the quota/rank/
-    // pack stages all read it. r10 measured (TimeSome, min of 3):
+    // pack stages all read it. Measured (TimeSome, min of 3):
     // 2.68 -> 1.98 s. The operator itself stays recompute-simple —
     // at corpus scale materializing is the CALLER's call, made here
     // where the upstream is a measured-expensive kernel chain.

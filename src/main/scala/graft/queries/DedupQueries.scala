@@ -98,11 +98,12 @@ object DedupQueries {
   private val dedupCc: Q = (s, dir) => {
     val pairs = DedupOps.minHashLshPairs(corpus(s, dir), "doc_id", "t",
       shingleK = 3, numHashes = 8, bands = 2)
-    // assumeCanonical (r15 opt): pairsWithinBuckets emits distinct
-    // id_a < id_b pairs, so cc's re-canonicalization distinct shuffle +
-    // second |pairs| checkpoint is dead work (same-JVM A/B: min 3.65 vs
-    // 4.43 s, jobs 21 -> 19, parity checksummed; same for the three
-    // sibling cc queries below and pipe_dedup_pass).
+    // assumeCanonical: pairsWithinBuckets emits distinct id_a < id_b
+    // pairs of the integral doc_id, so cc's re-canonicalization distinct
+    // shuffle + second |pairs| checkpoint would be dead work (same-JVM
+    // A/B: min 3.65 vs 4.43 s, jobs 21 -> 19, parity checksummed; the
+    // same holds for the three sibling cc queries below and
+    // pipe_dedup_pass).
     graft.operators.GraphOps.connectedComponents(pairs, "id_a", "id_b",
         assumeCanonical = true)
       .select(col("node").as("doc_id"), col("component").as("cluster_id"),
@@ -177,8 +178,8 @@ object DedupQueries {
 
     // No hint: the corpus scan's size estimate is sound, so AQE's
     // broadcast choice flips to a keyed join exactly when real corpus
-    // sizes demand it (the r10 estimate-soundness doctrine; hinting
-    // measured +1.4 s here).
+    // sizes demand it (the estimate-soundness doctrine, ARCHITECTURE.md;
+    // hinting measured +1.4 s here).
     val members = cc.join(corpus(s, dir), cc("node") === col("doc_id"))
       .select(col("component").as("cluster_id"), col("doc_id"),
         length(col("t")).cast("long").as("n_chars_t"))
@@ -221,7 +222,7 @@ object DedupQueries {
     * is either exact integer math or a correctly-rounded IEEE op, so
     * the cosine DOUBLE itself hash-compares across engines.
     *
-    * Kernel verdict (r13 JobCensus): the three dominant stages carry
+    * Cost (JobCensus, sf0.1): the three dominant stages carry
     * 9.9/9.6/7.4 s of task-time over 3-5k posting-pair rows (~2-3
     * ms/row of exact-integer dot accumulation), fully parallel across
     * 32 tasks — the wall is kernel/32 plus 14 jobs × host floor. The
@@ -292,8 +293,7 @@ object DedupQueries {
     * band is the standard candidate filter; Jaccard inside the block is
     * the exact verify step.
     *
-    * Kernel+floor verdict (r15 JobCensus, boundary weak-list entry at
-    * iso 1.27 s / 2.1×): one dominant stage — 9.04 s task-time over
+    * Cost (JobCensus, sf0.1): one dominant stage — 9.04 s task-time over
     * 5250 docs, the shingle+minhash lane kernel, ~0.28 s wall at 32
     * threads — plus 7 jobs × degraded floor. The kernel is evaluated
     * once per row (the withMinHashBlock one-evaluation contract); the
@@ -519,8 +519,7 @@ object DedupQueries {
     * contract); the verify join touches only candidate pairs; the
     * classify fold is map-side-combined min per inc doc.
     *
-    * Mixed verdict (r15 JobCensus, first weak-list entry at iso
-    * 2.77 s / 2.9×): 19 jobs (the base/increment/verify chain is
+    * Cost (JobCensus, sf0.1): 19 jobs (the base/increment/verify chain is
     * multi-job by construction) at ~1.7 s of degraded floor, plus the
     * verify kernels — 7.4/4.5/2.8 s task-time over the 500-row
     * increment (minhash + token-jaccard verification, fully parallel,
@@ -548,7 +547,7 @@ object DedupQueries {
     def toksOf(df: DataFrame, idName: String): DataFrame =
       df.select(col("doc_id").as(idName),
         array_distinct(expr("ascii_alpha_tokens(t)")).as(s"toks_$idName"))
-    // No join hints, deliberately (r10 bake-off): the band explode is a
+    // No join hints, deliberately (measured): the band explode is a
     // CONSTANT 4x (array of 4 band columns), so Spark's size estimate
     // is sound up to that constant and its adaptive broadcast flips to
     // keyed joins as real corpus sizes grow — unlike j13's
@@ -1132,7 +1131,7 @@ object DedupQueries {
       |FROM k ORDER BY p_partkey""".stripMargin
 
   private val dedupSemantic: Q = (s, dir) => {
-    // Remaining-cost audit (r11): warm stage split at sf0.1 is fit
+    // Remaining cost: the warm stage split at sf0.1 is fit
     // 0.35 s (init collect + one sequential Lloyd collect per
     // iteration — model-state round trips that cannot fuse), assign+
     // checkpoint 0.27 s, pairs+anti 1.1 s (~270k within-cell candidate
@@ -1231,11 +1230,10 @@ object DedupQueries {
     * slice(embedding, 1, d), so the oracle replays it by bounding the
     * fold range at d. */
   private val annTruncDims = Seq(8, 16, 32)
-  /** One-pass fold (r12, closing the VERDICT-r11 sequential-pass
-    * suspicion with a measurement): the former form ran FOUR separate
-    * brute passes (truth at 64 + one per truncation dim), visible in
-    * JobCensus as 26 jobs with four ~2-6 s task-time crossJoin stages
-    * re-reading the same pair space. A truncated cosine is a PREFIX
+  /** One-pass fold: one brute pass per audit dim (truth at 64 + one
+    * per truncation dim) would re-read the same pair space four times
+    * (26 jobs with four ~2-6 s task-time crossJoin stages in
+    * JobCensus). A truncated cosine is a PREFIX
     * dot/norm of the full vector (slice(1,d) prefixes the same
     * elements), so ONE crossJoin pass emits the cosine at every audit
     * dim from the same pair row (4 codegen'd vec_dot/vec_sqnorm calls,
@@ -1248,7 +1246,7 @@ object DedupQueries {
     val allDims = annTruncDims :+ 64
     // Per-vector prefix norms are computed ONCE per row BEFORE the
     // crossJoin (the cosineWithNorms contract: at scale a norm is per
-    // vector, not per pair — r12 review caught the in-pair form paying
+    // vector, not per pair — the in-pair form would pay
     // 2×(8+16+32+64) extra multiplies + 8 sqrts per PAIR).
     def withNorms(df: DataFrame, p: String): DataFrame =
       allDims.foldLeft(df)((d, dim) => d.withColumn(s"${p}_n$dim",
@@ -1276,11 +1274,9 @@ object DedupQueries {
     // truth is ≤ |q|·k = 100 rows BY the TopK construction and already
     // checkpointed — ride an explicit broadcast so the hit count never
     // plans a SortMergeJoin that shuffles+sorts both tiny sides (the
-    // r16 ann_recall/dedup_lsh_recall tail fold; registry-wide plan
-    // sweep found this as the last BOUNDED-side SMJ LeftSemi. The other
-    // survivor, emb_mutual_nn, joins a |V|-scaled reversed nn table —
-    // NOT bounded, broadcast there would be the a19 defect class, its
-    // SMJ is the honest shape AQE flips locally).
+    // ann_recall/dedup_lsh_recall tail fold. emb_mutual_nn keeps its
+    // SMJ: it joins a |V|-scaled reversed nn table — NOT bounded, so a
+    // broadcast there would be the a19 defect class).
     val hits = topk.filter(col("dim") =!= 64)
       .join(broadcast(truth), Seq("q_id", "c_id"), "left_semi")
       .groupBy("dim").agg(count(lit(1)).as("n_hits"))
@@ -1389,22 +1385,22 @@ object DedupQueries {
     // bounded, so this is model-state caching, not row-data caching.
     val brute = SimilarityOps.bruteTopK(q20, e, "vec_id", "embedding", 5)
       .select("q_id", "c_id").checkpointed()
-    // r16 folds (VERDICT r15 directive 1 — fewer duplicated subtrees
-    // WITHOUT weakening the audit; truth stays independently computed):
+    // Folds that remove duplicated subtrees WITHOUT weakening the
+    // audit (truth stays independently computed):
     //  - ONE candidate hyperplane-signature pass feeds BOTH single-table
     //    lanes: bucketed and multiprobe share one plane family by
     //    design, yet each lane recomputed the identical (bucket, norm)
     //    projection over the full corpus (guide §1.2).
     //  - Each lane's hit count semi-joins the lane's BOUNDED output
     //    (≤ |q|·k rows by the TopK construction) against the
-    //    checkpointed brute truth riding an explicit broadcast — the
-    //    before-plan ran five SortMergeJoin LeftSemi, shuffling and
-    //    sorting BOTH tiny sides per lane (10 exchanges for ≤200-row
-    //    joins); both sides are distinct on (q_id, c_id), so
+    //    checkpointed brute truth riding an explicit broadcast — a
+    //    SortMergeJoin LeftSemi per lane would shuffle and sort BOTH
+    //    tiny sides (10 exchanges for ≤200-row joins); both sides are
+    //    distinct on (q_id, c_id), so
     //    |truth ⋉ m| = |m ⋉ truth| = |truth ∩ m| exactly.
-    //  - n_brute is one scalar, not five: the per-lane rec() each ran
-    //    its own count aggregate over the same checkpoint; one fold
-    //    crossJoins the single 1-row count into the unioned lane rows.
+    //  - n_brute is one scalar, not five count aggregates over the
+    //    same checkpoint; one fold crossJoins the single 1-row count
+    //    into the unioned lane rows.
     val sigs = SimilarityOps.lshCandidateSignatures(
       e, "vec_id", "embedding", nPlanes = 8, dim = 64).checkpointed()
     def rec(name: String, m: DataFrame): DataFrame =
@@ -1578,17 +1574,13 @@ object DedupQueries {
   private val recallProbe = 50
   private val dedupRecall: Q = (s, dir) => {
     // ONE checkpoint carries (doc_id, t, tokens) and every branch reads
-    // it (closing a degraded+retried watch item): the previous form
-    // re-derived the corpus subtree per
-    // branch, so the three heavy fingerprint kernels (r14 JobCensus:
-    // 16.9/16.4/11.4 s task-time at sf0.1) contended to recompute the
-    // same scan+union, the signature behind the in-suite<isolated
-    // inversion. Sharing the materialized tokens cut jobs 27 -> 20 and
-    // won every alternating same-JVM rep in BOTH probe sessions
-    // (medians 3.41 -> 3.06 healthy-ish host, 6.00 -> 4.26 degraded
-    // host), with tighter spread. Values identical (parity
-    // checksummed; tokenization is the same ascii_tokens kernel,
-    // materialized instead of refused). This query is a bounded-probe
+    // it: re-deriving the corpus subtree per branch makes the three
+    // heavy fingerprint kernels (JobCensus: 16.9/16.4/11.4 s task-time
+    // at sf0.1) contend to recompute the same scan+union. Sharing the
+    // materialized tokens takes jobs 27 -> 20 and won every alternating
+    // same-JVM rep (medians 3.41 -> 3.06 s), with identical values
+    // (tokenization is the same ascii_tokens kernel, materialized
+    // instead of recomputed). This query is a bounded-probe
     // recall AUDIT — at corpus scale the checkpoint is one extra
     // materialization of the 200-char fingerprint projection, the same
     // order as any one of the three branch shuffles it deduplicates.
@@ -1616,11 +1608,11 @@ object DedupQueries {
     val sh = DedupOps.simHashPairs(ct, "doc_id", "t",
         bits = 16, prefixBits = 8, maxHamming = 3)
       .filter(col("id_a") < recallProbe).select("id_a", "id_b")
-    // r16 tail fold (VERDICT r15 directive 1): each method's hit count
-    // semi-joins the candidate pairs against the PROBE-BOUNDED,
-    // checkpointed truth riding an explicit broadcast — the before-plan
-    // left the simhash lane on a SortMergeJoin LeftSemi that shuffled
-    // and sorted both sides of a ≤100-row join. Both sides are distinct
+    // Tail fold: each method's hit count semi-joins the candidate pairs
+    // against the PROBE-BOUNDED, checkpointed truth riding an explicit
+    // broadcast — without it the simhash lane plans a SortMergeJoin
+    // LeftSemi that shuffles and sorts both sides of a ≤100-row join.
+    // Both sides are distinct
     // on (id_a, id_b) (pairsWithinBuckets dedups; a simhash pair meets
     // in exactly one prefix block), so |truth ⋉ cand| = |cand ⋉ truth|.
     // n_truth is likewise ONE scalar, not one count aggregate per lane.
@@ -1919,20 +1911,19 @@ object DedupQueries {
   private val contDfCap = 50
   private val contMinPpm = 600000L
   private val dedupContainment: Q = (s, dir) => {
-    // r16 (VERDICT r15 directive 4): materialize the per-doc gram ARRAYS
-    // once — the containmentRecall operator's shape (DedupOps.scala) —
-    // and feed containmentPairs the checkpointed column. The
-    // recompute-simple form re-ran the documents scan + the
-    // distinct_kgrams(ascii_tokens) kernel EIGHT times (4 kept-instances
-    // × (grams + rare) in plans/r16/dedup_containment_before.txt). The
-    // standing r10 rejection inside containmentPairs was of checkpointing
-    // the EXPLODED df-capped postings (shingle-wide, one row per gram);
+    // Materialize the per-doc gram ARRAYS once — the containmentRecall
+    // operator's shape (DedupOps.scala) — and feed containmentPairs the
+    // checkpointed column. Without it the documents scan + the
+    // distinct_kgrams(ascii_tokens) kernel run EIGHT times (4
+    // kept-instances × (grams + rare)). The checkpoint that
+    // containmentPairs rejects is of the EXPLODED df-capped postings
+    // (shingle-wide, one row per gram);
     // this cut materializes one ARRAY row per doc — ~|docs| rows, not
     // ~Σ|grams| — and the 8 downstream reads re-explode from the
     // checkpoint instead of re-tokenizing (guide §1.2).
     // Measured (same-JVM alternating, parity checksummed):
     // the tok checkpoint ALONE is locally neutral (2/4 pairs — the
-    // kernel replays cheaply at sf0.1, the r10 observation again); the
+    // kernel replays cheaply at sf0.1); the
     // winning shape is tok + the rare-gram checkpoint now inside
     // containmentPairs (4/4 pairs vs recompute, 2.63-2.75 vs
     // 2.68-3.11 s) — kernel passes 8 -> 1 and df-aggregate passes

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{EvalOps, PageRankOps, RankOps, SketchOps}
 
-/** Round-8 beyond-reference operators (SURVEY §2.11): link-graph
+/** Beyond-reference operators (SURVEY §2.11): link-graph
   * PageRank, portable HyperLogLog distinct sketch, histogram ROC-AUC,
   * and size-balanced round-robin sharding over a distributed global
   * rank. Every oracle replays the operator's exact integer arithmetic —
@@ -200,10 +200,9 @@ object MetricsQueries {
     * both engines' integer division truncates toward zero, so the
     * negative slope divides identically.
     *
-    * Floor verdict (r15 JobCensus, first weak-list entry at iso
-    * 1.66 s on the 133 ms-floor run; r14 read 0.89 s — under the
-    * bar): 11 driver jobs, max job wall 0.21 s, sum 0.58 s of a
-    * 1.14 s census wall. The only real kernel is the shared tokenize
+    * Cost (JobCensus, sf0.1): 11 driver jobs, max job wall 0.21 s,
+    * sum 0.58 s of a 1.14 s census wall. The only real kernel is the shared
+    * tokenize
     * pass (4.91 s task-time over 5000 docs ≈ 0.15 s wall at 32
     * threads); the rank/fit chain runs on ≤ vocab rows. Pure jobs ×
     * floor — the multi-job shape is RankOps' distributed row number,
@@ -476,9 +475,9 @@ object MetricsQueries {
   // LOST 3/4 alternating pairs (4.44-4.75 vs 4.19-4.75 s, jobs 21->22).
   // The generator's single consumer is triangleStats' own
   // distinct+checkpoint, so the extra cut is a pure second
-  // materialization barrier of the multi-edge pair stream — the same
-  // single-consumer rule the g5 last-round cut rejection (r13)
-  // established. REJECTED; the in-operator canonical checkpoint stands.
+  // materialization barrier of the multi-edge pair stream — the
+  // single-consumer rule g5's peel loop follows for its last round.
+  // The in-operator canonical checkpoint is the only cut.
   private val g2: Q = (s, dir) =>
     graft.operators.GraphOps.triangleStats(coEdges(s, dir), "p1", "p2")
   private val g2Sql =
@@ -698,7 +697,7 @@ object MetricsQueries {
     * Sums lift to DECIMAL(38,0) (HUGEINT oracle-side); one degree
     * aggregate, two keyed joins, one fold. */
   private val g3: Q = (s, dir) => {
-    // FLOOR, closed with its own profile (r12, JobCensus at sf0.1): of
+    // FLOOR, by its own profile (JobCensus at sf0.1): of
     // ~18 s total task-time, 15.6 s is coEdges generation + distinct +
     // checkpoint + degree (6.76 s self-join over 2.39M pair rows,
     // 3.22 s distinct, 2.55 s checkpoint of 1.2M edges, 3.07 s degree
@@ -723,8 +722,8 @@ object MetricsQueries {
     val deg = e.select(col("p1").as("v")).union(e.select(col("p2").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
       .checkpointed()
-    // Row-count guard (triangleStats' broadcastEdgeLimit treatment, r9
-    // advice): |deg| is bounded by |parts| here, but the bound is a
+    // Row-count guard (triangleStats' broadcastEdgeLimit treatment):
+    // |deg| is bounded by |parts| here, but the bound is a
     // property of THIS graph, not of the operator shape — a fact-scaled
     // vertex set must fall back to keyed joins, not OOM the driver.
     // deg.count() is free (just checkpointed).
@@ -823,9 +822,9 @@ object MetricsQueries {
     // simple graph, so collapse to distinct pairs (already p1 < p2) —
     // triangleStats does the same internally.
     val e = coEdges(s, dir).distinct().checkpointed()
-    // assumeCanonical (r15 opt): e is distinct p1 < p2 and checkpointed
-    // RIGHT HERE — the LPA-internal canon path re-paid a |E| distinct
-    // shuffle + |E| checkpoint per call for nothing.
+    // assumeCanonical: e is distinct p1 < p2 of the integral part keys
+    // and checkpointed RIGHT HERE — the LPA-internal canon path would
+    // re-pay a |E| distinct shuffle + |E| checkpoint for nothing.
     val labels = graft.operators.GraphOps
       .labelPropagation(e, "p1", "p2", rounds = 2, assumeCanonical = true)
       .checkpointed()
@@ -966,8 +965,7 @@ object MetricsQueries {
     * Every per-row touch is the one bucket pass; everything after runs
     * on ≤ 10 rows.
     *
-    * Floor verdict (r15 JobCensus, first weak-list entry at iso
-    * 1.16 s on the 133 ms-floor run): 9 driver jobs whose walls sum to
+    * Cost (JobCensus, sf0.1): 9 driver jobs whose walls sum to
     * 0.49 s of a 1.31 s census wall; heaviest stage 3.05 s task-time
     * over 10 records (thread-scheduling overhead on the ≤10-row tail,
     * ~0.1 s wall at 32 threads). Two-pass bounds + dense-spine joins
@@ -1122,7 +1120,7 @@ object MetricsQueries {
     // real SF and measured 1.23 vs 0.75 s here; the hinted plan keys
     // both sides on `o` and reuses one exchange.
     //
-    // A-priori prefilter audit (r9 directive): pair support is bounded
+    // No a-priori prefilter, by measurement: pair support is bounded
     // by min(c(p1), c(p2)), so items with c(p) below the top-k support
     // bar could be dropped before the pair join. MEASURED at sf0.1:
     // the 20th-best support is 2 while min c(p) = 11 — a correct
@@ -1134,9 +1132,9 @@ object MetricsQueries {
     // baskets would take a basket-size cap + the c(p) prefilter, both
     // expressible on this shape.
     //
-    // Basket-form audit (r11 directive, measured and correctly NOT
-    // wired): generating pairs with the native packed_pairs kernel
-    // (collect per-order baskets, one codegen'd C(n,2) packed-long
+    // No basket form, by measurement: generating pairs with the native
+    // packed_pairs kernel (collect per-order baskets, one codegen'd C(n,2)
+    // packed-long
     // array per basket, built-in explode, single-long-key count) wins
     // the ISOLATED pair stage (0.77 s vs 1.17 s hinted self-join) —
     // but LOSES the full query every way tried, same
@@ -1236,7 +1234,7 @@ object MetricsQueries {
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
     // The seed set "node ≡ 0 mod 97" is a pure predicate on the node id,
     // so it rides restartWhere — no seed-derivation scan over lineitem,
-    // no membership join (0.3 s of g10's r9 plan). sourcesSpanNodes by
+    // no membership join (which cost 0.3 s of g10). sourcesSpanNodes by
     // the mirror construction (the g1 argument).
     PageRankOps.pageRank(edges, "src", "dst", iters = 3,
         assumeDistinct = true, dimensionNodes = true,

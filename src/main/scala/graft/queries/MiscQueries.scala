@@ -122,8 +122,8 @@ object MiscQueries {
   /** J8 + F15: one text task + N audio tasks per row via array explode,
     * filenames composed `{book}_{idx}{ext}` (crawler/download.py:119-151).
     *
-    * Kernel verdict (r15 JobCensus, first weak-list entry at iso
-    * 1.09 s / 5.2×): 5 jobs whose walls sum 2.2 s of the census wall;
+    * Cost (JobCensus, sf0.1): 5 jobs whose walls sum 2.2 s of the
+    * census wall;
     * the two ~1 s jobs are the explode fan-out stages themselves
     * (1.2 + 1.0 s task-time over 300k generated rows). The fan-out IS
     * the query; the remainder is jobs × floor. */

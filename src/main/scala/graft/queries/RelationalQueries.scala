@@ -225,11 +225,10 @@ object RelationalQueries {
   /** A8 ★: corpus WER per group — Σedits/Σref-words ×100, NOT mean of
     * per-row WERs (whisper_qc.py:322-329).
     *
-    * Kernel verdict (r15 JobCensus, first weak-list entry at iso
-    * 1.16 s / 4.2×): one 1.03 s job carrying 1.01 s task-time over the
-    * 5000-doc WER aggregation — the Levenshtein edit-distance kernel
-    * IS the query (the f7_wer_threshold verdict's sibling); the other
-    * four jobs are sub-0.05 s floor. */
+    * Cost (JobCensus, sf0.1): one 1.03 s job carrying 1.01 s
+    * task-time over the 5000-doc WER aggregation — the Levenshtein
+    * edit-distance kernel IS the query (as in f7_wer_threshold); the
+    * other four jobs are sub-0.05 s floor. */
   private val a8: Q = (s, dir) => {
     val wer = WerAgg.asUdaf
     werPrep(s, dir).groupBy("lang")
@@ -242,7 +241,7 @@ object RelationalQueries {
 
   /** 2.2-F7: WER-threshold disqualification filter (whisper_qc.py:150-157).
     *
-    * Weak-list census verdict (r14 JobCensus): 5 driver jobs, ONE
+    * Cost (JobCensus, sf0.1): 5 driver jobs, ONE
     * 5000-record Levenshtein stage of 0.70 s task time (fully
     * parallel) against a 1.05 s isolated wall — KERNEL + floor; the
     * edit-distance work IS the query, duck pays the same kernel in
@@ -367,8 +366,8 @@ object RelationalQueries {
   // the probe keyset is fact-derived, but its lineage is a plain SCAN
   // whose size estimate is sound — Spark's adaptive broadcast therefore
   // flips to a keyed semi-join exactly when real sizes cross the
-  // threshold, which is the scale mechanism, not a defect (the r10
-  // estimate-soundness doctrine; contrast RangeJoinOps, where a
+  // threshold, which is the scale mechanism, not a defect (the
+  // estimate-soundness doctrine, ARCHITECTURE.md; contrast RangeJoinOps, where a
   // data-dependent explode makes the estimate structurally wrong and
   // the hint is load-bearing). Hinting these measured +0.15-0.2 s each
   // at sf0.1 for no scale benefit.
@@ -516,8 +515,8 @@ object RelationalQueries {
 
   /** A1 ★: group by derived key + sorted collect_list (crawler/utils.py:85-122).
     * Verify surface serializes the array to a comma-joined string — the
-    * driver's pandas canonicalizer cannot sort ndarray cells (round-2
-    * postmortem); the array-returning shape stays available pre-concat. */
+    * gate's pandas canonicalizer cannot sort ndarray cells; the
+    * array-returning shape stays available pre-concat. */
   private val a1: Q = (s, dir) =>
     t(s, dir, "orders").filter(col("o_orderkey") % 100 === 0)
       .groupBy(col("o_orderpriority"))
@@ -820,10 +819,8 @@ object RelationalQueries {
     * grouping-key subset satisfies the agg's clustering). The ~2.9 s
     * task-time per 600k-row window stage is WindowExec's per-row frame
     * machinery — the duck gap is window-kernel throughput on an
-    * already-minimal shape. Re-censused r15 on its first weak-list
-    * entry (iso 1.48 s, 133 ms floor): same shape — 5 jobs, the two
-    * window stages at 2.5/2.3 s task-time over 600k rows; verdict
-    * unchanged. */
+    * already-minimal shape: 5 jobs, the two window stages at 2.5/2.3 s
+    * task-time over 600k rows. */
   private val w10: Q = (s, dir) => {
     val iv = t(s, dir, "lineitem")
       .select(col("l_orderkey").as("okey"),
@@ -985,7 +982,7 @@ object RelationalQueries {
     * cutoff keeps h <= floor(M * 11/256), the same ~4.3% margin the md5
     * 2-hex-prefix test gave.
     *
-    * Weak-list census verdict (r14 JobCensus): 7 driver jobs, two
+    * Cost (JobCensus, sf0.1): 7 driver jobs, two
     * 600k-record lineitem scans of 0.42/0.33 s task time (the count
     * pass + the survivor pass groupFractionalSample is built from)
     * against a 1.18 s isolated wall — FLOOR + two fixed scans; no

@@ -78,8 +78,8 @@ object RetrievalQueries {
     * tokenize pass) — but the pruned table is ≤|qterms| map entries per
     * doc, so materializing it is ~free while the tokenize kernel was
     * re-running 3x in bm25 (stats, dft, scored) and 5x in ndcg (those
-    * plus rel feeding both DCG branches). Measured r10 (TimeSome, min
-    * of 3 on the same slow-VM session): bm25 2.69→2.16 s, ndcg
+    * plus rel feeding both DCG branches). Measured (TimeSome, min
+    * of 3, one session): bm25 2.69→2.16 s, ndcg
     * 3.33→2.96 s, rrf 2.06→2.17 s (a wash at fixture size — but it
     * retires ranker A's doc_id-keyed dl join, the right trade at
     * corpus scale); the residue is the family's sequential small-job
@@ -181,8 +181,7 @@ object RetrievalQueries {
     * both rankings are bounded-buffer top-k (TopKOps) — never a global
     * or per-group sort; the final fold is 5 rows per query.
     *
-    * One-aggregate fold (r12, profiled on ndcg ITSELF — the prior
-    * "family small-job floor" claim was inherited, VERDICT r11 item 1):
+    * One-aggregate fold (profiled on ndcg itself):
     * rel (count of matched terms) and score_fp (sum of per-term BM25)
     * are the SAME (q_id, doc_id) grain over the same posted rows, so
     * ONE groupBy emits both and is checkpointed; the ranked⋈rel join
@@ -204,7 +203,7 @@ object RetrievalQueries {
     import s.implicits._
     val qdf = bm25Queries.toDF("q_id", "term")
     // ONE tokenizer pass feeds BOTH the BM25 ranking and the relevance
-    // labels (the round-7 tf-sharing finding: the tokenize kernel is
+    // labels (the tf-sharing rule: the tokenize kernel is
     // the dominant per-row cost in this family — rebuilding postings
     // for rel would double it). tf_map emits each term once per doc,
     // so the posted rows per (q, doc) COUNT the distinct matched
@@ -443,10 +442,10 @@ object RetrievalQueries {
     * argument) and re-aggregates per doc map-side. */
   private val bigramNll: Q = (s, dir) => {
     val docs = Tables.fanOut(t(s, dir, "documents"))
-    // ONE tokenize pass (r12, JobCensus): the former form ran the
-    // tokenizer twice — 10.25 s task-time for the bigram pass and a
-    // SECOND 7.94 s pass just to count the distinct unigram vocabulary
-    // for the +V smoothing term. Unigram rows now ride the bigram
+    // ONE tokenize pass: a two-pass form runs the tokenizer twice —
+    // 10.25 s task-time for the bigram pass and a SECOND 7.94 s pass
+    // just to count the distinct unigram vocabulary for the +V
+    // smoothing term (JobCensus). Unigram rows now ride the bigram
     // explode with a NULL doc_id, so the one (doc_id, gram) groupBy
     // collapses them to GLOBAL vocab rows (the checkpoint grows by
     // |vocab| only, not |tokens|) and V is a plain count of the

@@ -10,7 +10,7 @@ import graft.Tables
 import graft.functions.TextFns
 import graft.operators.{PackOps, QuotaOps, RangeJoinOps, SketchOps}
 
-/** Round-5 beyond-reference scale operators (SURVEY §2.11): sequence
+/** Beyond-reference scale operators (SURVEY §2.11): sequence
   * packing, binned range join, portable KMV distinct sketch, quota
   * sampling to a target mix. Each oracle replays the operator's exact
   * arithmetic — including the sketch ESTIMATE, which is why the sketches
@@ -520,11 +520,11 @@ object ScaleQueries {
     * join, so it is checkpointed once (scan + tokenize run once, not
     * per branch). */
   private val tSplitContam: Q = (s, dir) => {
-    // One-shuffle fold (r12, JobCensus): the former shape checkpointed
-    // the gram table (4.35 s materialize task-time) and then read it
-    // TWICE (12.56 + 6.33 s stages) to build a distinct train set and
-    // left-join the test side against it — two exchanges on `ng` plus
-    // the hashed-relation build. A window MAX over the ng partition
+    // One-shuffle fold. Checkpointing the gram table (4.35 s
+    // materialize task-time in JobCensus) and reading it TWICE
+    // (12.56 + 6.33 s stages) to build a distinct train set and
+    // left-join the test side against it costs two exchanges on `ng`
+    // plus the hashed-relation build. A window MAX over the ng partition
     // computes the same train-hit flag in ONE exchange (duplicates in
     // train collapse under max exactly as distinct+join matched them),
     // the test filter prunes after, and nothing is materialized because
@@ -893,9 +893,9 @@ object ScaleQueries {
     * inside the dedup's scan, the pack window reads the sample's
     * shuffle), and the oracle replays the identical composition in SQL.
     *
-    * Profiled, CLOSED as kernel-bound (r13 JobCensus, the
-    * never-profiled audit): 7 jobs, ONE dominant stage — 16.5 s
-    * task-time over 5,000 docs (~3.3 ms/row) is the scan-fused regex
+    * Profiled, CLOSED as kernel-bound (JobCensus, sf0.1): 7 jobs, ONE
+    * dominant stage — 16.5 s task-time over 5,000 docs (~3.3 ms/row) is the
+    * scan-fused regex
     * work (three PII redaction passes + the dedup canonical-form
     * normalize, all native codegen'd regexp_replace — no boxing),
     * fully parallel across the fanned scan and executed exactly ONCE:

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{PowerIterOps, RankOps}
 
-/** Round-8 beyond-reference operators (SURVEY §2.11), signal/shape
+/** Beyond-reference operators (SURVEY §2.11), signal/shape
   * family: dominant-direction power iteration over embeddings, CUSUM
   * change detection over event streams, the Gini concentration
   * coefficient, and Jensen–Shannon drift — each oracle replaying the
@@ -33,11 +33,11 @@ object SignalQueries {
     * integer dot/component sums in HUGEINT, ascending-dimension
     * left-fold for the norm, floor(x / nrm * 1e6).
     *
-    * Floor verdict (r13 JobCensus): 11 driver jobs, Σ task-time
-    * ~0.7 s of a 1.56 s wall — the per-round collect is dim-bounded
-    * model state (64 longs, the KMeansOps contract) and every stage is
-    * small; the weak-list ratio is jobs × the host's planning floor on
-    * an iterative driver-model loop, not plan shape. */
+    * Cost (JobCensus, sf0.1): 11 driver jobs, Σ task-time ~0.7 s of
+    * a 1.56 s wall — the per-round collect is dim-bounded model state
+    * (64 longs, the KMeansOps contract) and every stage is small; the
+    * wall is jobs × the host's planning floor on an iterative
+    * driver-model loop, not plan shape. */
   private val piDim = 64
   private val piIters = 2
   private val pi: Q = (s, dir) =>
@@ -256,7 +256,7 @@ object SignalQueries {
     * parallel to v reports ~0; anisotropy shows up as the gap between
     * res_fp and the vector's own norm.
     *
-    * Weak-list census verdict (r14 JobCensus): ~13 driver jobs, total
+    * Cost (JobCensus, sf0.1): ~13 driver jobs, total
     * task-time ~0.8 s of a 1.24 s isolated wall — the jobs are
     * dominantVector's per-round collects (whose round-batching
     * alternative measurably LOSES, PowerIterOps.scala) plus the row
@@ -315,7 +315,7 @@ object SignalQueries {
     * single-task window): one for the median, one over |x − med| with
     * the 1-row median riding a broadcast. */
   private val a23: Q = (s, dir) => {
-    // Histogram form (round-8 rewrite of the two global rank passes):
+    // Histogram form, not two global rank passes:
     // the lower median of n_chars is a VALUE statistic, so the rank in
     // the oracle's (n_chars, doc_id) order only ever selects which
     // VALUE crosses (n+1) div 2 — the doc_id tiebreak orders equal
@@ -696,11 +696,11 @@ object SignalQueries {
     * product lifts to DECIMAL(38,0) before the mod so the product
     * itself can never overflow.
     *
-    * Weak-list census verdict (r14 JobCensus): 17 driver jobs — the
+    * Cost (JobCensus, sf0.1): 17 driver jobs — the
     * per-epoch range-exchange ranks are multi-job by construction —
     * with ~8 s of fully parallel task time (~0.25 s wall on 32
-    * threads) against a 1.17 s isolated wall; FLOOR (jobs × the
-    * degraded ~90 ms planning floor), not plan shape. */
+    * threads) against a 1.17 s isolated wall; FLOOR (jobs × a
+    * ~90 ms planning floor), not plan shape. */
   private val o18Epochs = 2
   private val o18Shards = 8
   private val o18: Q = (s, dir) => {
@@ -1219,8 +1219,8 @@ object SignalQueries {
         .agg(sum(col("c") - 1L).as("n_violations")))
     // No hint on the FK parent keyset: a plain-scan side with a sound
     // size estimate — AQE's broadcast choice flips to a keyed anti-join
-    // exactly when real parent sizes demand it (the r10
-    // estimate-soundness doctrine).
+    // exactly when real parent sizes demand it (the
+    // estimate-soundness doctrine, ARCHITECTURE.md).
     val fk = row("lineitem_orderkey_fk",
       li.select(col("l_orderkey"))
         .join(o.select(col("o_orderkey").as("l_orderkey")),

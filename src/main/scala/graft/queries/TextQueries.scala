@@ -624,9 +624,9 @@ object TextQueries {
       .orderBy("doc_id")
   }
   // DuckDB SUM(BIGINT) widens to HUGEINT (int128), which normalizes
-  // differently from Spark's int64 in arrow/pandas readers and broke the
-  // driver's value hash in round 5 (the only non-green row) even though
-  // every value was equal — hence the CAST(... AS BIGINT) on each SUM.
+  // differently from Spark's int64 in arrow/pandas readers and breaks
+  // the correctness gate's value hash even when every value is equal —
+  // hence the CAST(... AS BIGINT) on each SUM.
   // No `--` comments in oracle SQL: GenOracleBody flattens to one line.
   private val tRepetitionSql =
     """WITH raw AS (

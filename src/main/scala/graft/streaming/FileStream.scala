@@ -84,7 +84,7 @@ object FileStream {
   }
 
   /** Gap-based sessionization on an unbounded stream: the same session
-    * semantics as the batch w6 query (which, since r13, runs the
+    * semantics as the batch w6 query (which runs the
     * gaps-and-islands window form — measured faster where a sorted
     * batch partition never needs out-of-order merging), expressed here
     * through `session_window` plus a watermark so the engine can close

@@ -6,10 +6,10 @@ import graft.queries._
 
 /** Regenerates the literal oracle-SQL body spliced into SparkEntry.scala.
   *
-  * The driver's correctness gate may statically parse SparkEntry.scala for
-  * literal `"name" -> "SQL"` entries (round-2 postmortem: a programmatic
-  * `oracleSql` produced `no_oracle` for all 91 queries), so the map there
-  * must stay literal. The per-file maps in the queries package remain the
+  * The external correctness gate may statically parse SparkEntry.scala
+  * for literal `"name" -> "SQL"` entries (a programmatic `oracleSql`
+  * map read as `no_oracle` for every query), so the map there must
+  * stay literal. The per-file maps in the queries package remain the
   * editing source; this main collapses each SQL to a single line, escapes
   * it, and writes `tools/oracle_map_body.scala.txt` for
   * `python3 tools/splice_oracle.py` to splice between the ORACLE-BODY

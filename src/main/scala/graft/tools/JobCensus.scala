@@ -4,12 +4,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 
 import graft.{Sessions, SparkEntry, Tables}
 
-/** Dev probe (r12): per-job + per-stage census of any registry query —
+/** Dev probe: per-job + per-stage census of any registry query —
   * args: sfDir name... For each named query, runs it once warm then
   * once instrumented, printing every Spark job's wall time, stage
   * count, and the heaviest stages' task-time/record counts. This is
   * the "is it a sequential small-job chain or one heavy stage?"
-  * discriminator the r11 verdict asked for before any rewrite. */
+  * discriminator to run before any perf rewrite. */
 object JobCensus {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JobCensus <sfDir> <name...>")

@@ -35,7 +35,7 @@ class CheckpointsSpec extends AnyFunSuite {
     spark.conf.unset(Checkpoints.ModeKey)
     val out = df.checkpointed()
     assert(truncated(out), out.queryExecution.analyzed.toString)
-    assert(out.agg(sum("y")).head.getLong(0) == 10100L)
+    assert(out.agg(sum("y")).head().getLong(0) == 10100L)
     out.unpersist()
   }
 
@@ -52,7 +52,7 @@ class CheckpointsSpec extends AnyFunSuite {
       // checked while `out` is still used below: the cleaner may delete
       // the files of a checkpoint whose RDD is unreachable
       assert(anyFile(new java.io.File(dir)), s"no checkpoint files written under $dir")
-      assert(out.agg(sum("y")).head.getLong(0) == 10100L)
+      assert(out.agg(sum("y")).head().getLong(0) == 10100L)
     }
   }
 
@@ -69,7 +69,7 @@ class CheckpointsSpec extends AnyFunSuite {
       assert(sc.getCheckpointDir.get == resolved, "the sibling's cp() moved the dir")
       assert(anyFile(new java.io.File(new java.net.URI(resolved))),
         s"the sibling's checkpoint is not under $resolved")
-      assert(out.agg(sum("x")).head.getLong(0) == 55L)
+      assert(out.agg(sum("x")).head().getLong(0) == 55L)
       df.checkpointed().count()
       assert(sc.getCheckpointDir.get == resolved, "the parent's cp() moved the dir")
     }

@@ -1175,7 +1175,7 @@ class PdfTextSpec extends AnyFunSuite {
         PdfFixtures.streamObj(4,
           "BT (predstm) Tj ET".getBytes(StandardCharsets.ISO_8859_1),
           compress = true))))
-    for (iter <- 1 to 1500) {
+    for (_ <- 1 to 1500) {
       val base = bases(rnd.nextInt(bases.size))
       val b = java.util.Arrays.copyOf(base, base.length)
       rnd.nextInt(3) match {
@@ -1219,5 +1219,27 @@ class PdfTextSpec extends AnyFunSuite {
     val bigLen = ("%PDF-1.4\n1 0 obj\n<</Length 99999999999999>>\nstream\n" +
       "BT (ok) Tj ET\nendstream\nendobj\n").getBytes(StandardCharsets.ISO_8859_1)
     assert(PdfText.extract(bigLen) == "ok")
+  }
+
+  test("real-world PDFs: a TeX manual and a DocBook/FO spec extract as readable text") {
+    // Two producer families the synthetic fixtures only imitate, as the
+    // libtasn1-doc and shared-mime-info packages install them: the TeX
+    // manual carries word-gap kerns and /Differences encodings. A C1
+    // control character (0x80-0x9F) in the output is a byte that an
+    // encoding failed to map.
+    val docs = Seq(
+      "/usr/share/doc/libtasn1-doc/libtasn1.pdf" ->
+        ("Abstract Syntax Notation One (ASN.1) library", 36, 60000),
+      "/usr/share/doc/shared-mime-info/shared-mime-info-spec.pdf" ->
+        ("Shared MIME-info Database", 17, 30000))
+    for ((path, (title, pages, minChars)) <- docs) {
+      val file = java.nio.file.Paths.get(path)
+      assume(java.nio.file.Files.exists(file), s"$path is not installed")
+      val text = PdfText.extract(java.nio.file.Files.readAllBytes(file))
+      assert(text.contains(title), path)
+      assert(text.length >= minChars, s"$path: ${text.length} chars")
+      assert(text.split("\n\n").length == pages, path)
+      assert(!text.exists(c => c >= 0x80 && c <= 0x9F), s"$path: C1 control characters")
+    }
   }
 }

@@ -28,7 +28,6 @@ class RankOpsSpec extends AnyFunSuite {
       val byRank = got.sortBy(_._2).map(_._1)
       assert(got.map(_._2).sorted == (1L to 500L), s"parts=$parts: not a permutation")
       // reconstruct the expected order from the data itself
-      import spark.implicits._
       val rnd = new scala.util.Random(500 * 31 + parts)
       val rows = rnd.shuffle((1L to 500L).map(i => (i, rnd.nextInt(50).toLong)))
       val expected = rows.sortBy { case (id, size) => (-size, id) }.map(_._1)

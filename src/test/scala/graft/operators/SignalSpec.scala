@@ -276,7 +276,7 @@ class SignalSpec extends AnyFunSuite {
     }
     // independent: every (lang, source) cell has the same count
     val indep = for {
-      l <- Seq("en", "vi"); s <- Seq("a", "b"); i <- 0 until 5
+      l <- Seq("en", "vi"); s <- Seq("a", "b"); _ <- 0 until 5
     } yield (0L, l, s)
     val (chiI, vI) = run(indep.zipWithIndex.map { case ((_, l, s), i) => (i.toLong, l, s) })
     assert(chiI == 0L && vI == 0L, "uniform grid must be an exact integer zero")

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
+import javax.sound.sampled.{AudioFileFormat, AudioSystem}
 
 import org.scalatest.funsuite.AnyFunSuite
 

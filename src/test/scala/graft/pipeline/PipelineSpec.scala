@@ -43,6 +43,7 @@ object CountingExternals extends Externals {
 /** End-to-end golden tests for the three §3 pipelines over FIXTURES.md
   * shapes, externals stubbed deterministically. */
 class PipelineSpec extends AnyFunSuite {
+  import PipelineSpec.PassOut
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -152,6 +153,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(!b.getAs[Boolean]("qualified"))     // 8k < 16k min
     assert(b.getAs[Long]("n_samples") == 2400) // 800 upsampled 8k -> 24k
     assert(math.abs(a.getAs[Double]("audio_duration_s") - 0.15) < 1e-9)
+  }
+
+  test("processAudio: a mixed-rate book's row equals the concatenated, normalised book's") {
+    val wavs = tmp("pp_wav_mixed")
+    val d = Paths.get(wavs, "spk1"); Files.createDirectories(d)
+    val parts = Map(
+      "bookM" -> Seq(24000 -> 2400, 22050 -> 1777, 16000 -> 1001),
+      "bookN" -> Seq(44100 -> 4411, 8000 -> 803, 24000 -> 240))
+    for ((b, ps) <- parts; ((sr, n), k) <- ps.zipWithIndex)
+      writeWav(d.resolve(s"${b}_${k + 1}.wav"), sr,
+        Array.tabulate(n)(i => ((i * 37 + k * 11) % 2000 - 1000).toShort))
+    // the reference: the whole book concatenated and peak-normalised
+    import graft.operators.AudioOps._
+    val expected = parts.map { case (b, ps) =>
+      val decoded = ps.indices.map(k => StubExternals.decodeAudio(
+        Files.readAllBytes(d.resolve(s"${b}_${k + 1}.wav"))))
+      val book = peakNormalize(concatParts(
+        decoded.map { case (s, sr) => linearResample(s, sr, 24000) }))
+      PreprocessPipeline.BookAudio(b, 24000, book.length.toLong,
+        book.length.toDouble / 24000, decoded.map(_._2).min >= PreprocessPipeline.MinSr)
+    }.toSet
+    val got = PreprocessPipeline.processAudio(spark, wavs + "/*/*.wav")
+      .as[PreprocessPipeline.BookAudio].collect().toSet
+    assert(got == expected)
+    assert(got.map(r => r.book_id -> r.qualified).toMap == Map("bookM" -> true, "bookN" -> false))
   }
 
   test("PreprocessPipeline merge: metrics upsert into catalog (J3)") {
@@ -272,11 +298,6 @@ class PipelineSpec extends AnyFunSuite {
     file("segments/seg.tsv", passBooks.flatMap(b => (1 to passSegments).map(i =>
       s"${(i - 1) * 4.0}\t${i * 4.0}\tf$i\t$b\tspk1")).mkString("", "\n", "\n"))
   }
-
-  /** What a pass returned and wrote, comparable by value across passes. */
-  private final case class PassOut(
-      returned: Map[String, Seq[String]], corpusHours: Double, pairs: Long,
-      written: Map[String, Seq[String]])
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -457,4 +478,11 @@ class PipelineSpec extends AnyFunSuite {
     }
     assert(audioBroadcasts.isEmpty, audioBroadcasts.mkString("\n"))
   }
+}
+
+object PipelineSpec {
+  /** What a pass returned and wrote, comparable by value across passes. */
+  private final case class PassOut(
+      returned: Map[String, Seq[String]], corpusHours: Double, pairs: Long,
+      written: Map[String, Seq[String]])
 }
