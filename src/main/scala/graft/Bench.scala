@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.obs.Tally
+
 /** Benchmark main: times registered queries against `SPARK_GRAFT_SF_DIR`
   * and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`;
@@ -22,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the median is recorded. `warm_compiles` counts classes the timed
   *    runs still compiled ([[Sessions.builder]] sizes the codegen cache
   *    so the warm-up absorbs it), and `warm_files_discovered` files they
-  *    still listed ([[Tables]] resolves each table once per session).
+  *    still listed ([[Tables]] resolves each table once per session),
+  *    both from a [[Tally]] of the timed runs.
   *  - Cooldown between queries: cached blocks unpersisted and two GC
   *    passes, so no query pays for an earlier one's storage or GC debt.
   *  - Retry: a warm run faster than the timed median by > 50 ms is
@@ -39,8 +42,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - Floor-robust comparators: `sql_floor_ms` (the host's per-execution
   *    planning floor, min of a pre- and a post-suite sample; compare
   *    sessions by total / sql_floor_ms, as tools/duck_ratio.py prints)
-  *    and `task_total`/`task_time` (executor run time, which driver-side
-  *    floor drift never enters).
+  *    and `task_total`/`task_time` (executor run time per run, from a
+  *    [[Tally]] of the warm and timed runs, which driver-side floor drift
+  *    never enters).
   *  - `failed` names queries that threw; they leave every timed field.
   */
 object Bench {
@@ -78,10 +82,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val skippedTables = Tables.registerAll(spark, sfDir)
-    graft.functions.TextFns.registerAll(spark)
+    val (spark, skippedTables) = Sessions.registry(sfDir)
     // Optional args = the subset of query names to time; no args = every
     // registered query, headline first.
     val all = headline.filter(SparkEntry.queries.contains) ++
@@ -109,39 +110,14 @@ object Bench {
     * line and the full bench.json record. */
   private[graft] def run(spark: SparkSession, sfDir: String, qs: Seq[String],
       skippedTables: Seq[String])(query: String => DataFrame): (String, String) = {
-    // Executor task time per query: executorRunTime summed over the kept
-    // warm+timed block, divided by its run count. Driver-side planning-floor
-    // drift never enters it, so a plan change shows here when wall time is
-    // noisy. Listener events drain asynchronously; each block's start
-    // snapshot is taken after cooldown()'s sleeps, so a previous block's
-    // stragglers can only undercount their own query.
-    val taskMsCounter = new java.util.concurrent.atomic.AtomicLong
-    val taskListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          taskMsCounter.addAndGet(te.taskMetrics.executorRunTime); ()
-        }
-    }
-    spark.sparkContext.addSparkListener(taskListener)
     // Queries that threw in any run. A failed run's elapsed time is not
     // a measurement (a query that fails fast would LOWER the total), so
     // these are dropped from every timed field and named under `failed`.
     val failedNames = scala.collection.mutable.LinkedHashSet[String]()
-    // Generated classes compiled during a query's kept block of timed
-    // runs (after its warm-up). Spark counts every class it compiles in
-    // one JVM-wide histogram; a warm run that compiles anything pays
-    // codegen inside its timing.
-    def compiledClasses(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
+    // Per query, the classes compiled and the files listed by its kept
+    // block's timed runs (after its warm-up): a timed run that compiles
+    // or lists a table pays for it inside its timing.
     val warmCompiles = scala.collection.mutable.Map[String, Long]()
-    // Files listed during the same block, from Spark's JVM-wide counter of
-    // files a file index discovered: a timed run that lists a table pays
-    // the listing (and its schema-inference job) inside its timing.
-    def discoveredFiles(): Long =
-      org.apache.spark.metrics.source.HiveCatalogMetrics
-        .METRIC_FILES_DISCOVERED.getCount
     val warmFiles = scala.collection.mutable.Map[String, Long]()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
@@ -204,15 +180,18 @@ object Bench {
     val retriedNames = scala.collection.mutable.Buffer[String]()
     val resultsPass1 = qs.map { name =>
       spark.sparkContext.setJobDescription(s"bench:$name")
+      // Task time: executorRunTime over the warm and timed runs, divided
+      // by their count. Driver-side planning-floor drift never enters it,
+      // so a plan change shows here when wall time is noisy. Compiles and
+      // files come from a tally nested around the timed runs alone.
       def attempt(): (Double, Seq[Double], Double, Long, Long) = {
         cooldown()
-        val tk0 = taskMsCounter.get()
-        val warm = once(name)
-        val cg0 = compiledClasses()
-        val fd0 = discoveredFiles()
-        val timed = Seq.fill(Runs)(once(name)).sorted
-        (warm, timed, (taskMsCounter.get() - tk0) / 1e3 / (Runs + 1),
-          compiledClasses() - cg0, discoveredFiles() - fd0)
+        val ((warm, (timed, timedTally)), block) = Tally.of(spark) {
+          val warm = once(name)
+          (warm, Tally.of(spark)(Seq.fill(Runs)(once(name)).sorted))
+        }
+        (warm, timed, block.runMs / 1e3 / (Runs + 1),
+          timedTally.compiles, timedTally.filesDiscovered)
       }
       var (warm, timed, taskSec, compiles, files) = attempt()
       var median = timed(timed.size / 2)
@@ -357,7 +336,6 @@ object Bench {
       .mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","warm_ge_median":$warmGeMedian,"warm_ge_median_50ms":$warmGeMedian50,"sql_floor_ms":$sqlFloorMs,"sql_floor_pre_ms":$sqlFloorPre,"sql_floor_post_ms":$sqlFloorPost,"task_total":$taskTotal,"warm_compiles":$warmCompilesTotal,"warm_files_discovered":$warmFilesTotal,"degraded":$degradedJson,"retried":$retriedJson,"revised":$revisedJson,"failed":$failedJson$skippedField,"queries":${qJson(results)(_.toString)},"sf":"$sfDir","isolated":$isolatedJson,"runs":$runsJson,"task_time":$taskJson,"warm_compiles_by_query":$warmCompilesJson,"warm_files_discovered_by_query":$warmFilesJson}"""
-    spark.sparkContext.removeSparkListener(taskListener)
     (compact, full)
   }
 }

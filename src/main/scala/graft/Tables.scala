@@ -197,4 +197,19 @@ object Sessions {
       // the plan's `*(N)` markers and in the generated code's comments.
       .config("spark.sql.codegen.useIdInClassName", "false")
   }
+
+  /** The session of the registry's mains (Bench, Verify and the tools):
+    * `names` checked against [[SparkEntry.queries]], a [[builder]]
+    * session logging at WARN, every table under `sfDir` registered as a
+    * view ([[Tables.registerAll]]) and the text functions registered.
+    * Returns the session and the tables that failed to register. */
+  def registry(sfDir: String, names: Seq[String] = Nil): (SparkSession, Seq[String]) = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = builder().getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val skippedTables = Tables.registerAll(spark, sfDir)
+    graft.functions.TextFns.registerAll(spark)
+    (spark, skippedTables)
+  }
 }

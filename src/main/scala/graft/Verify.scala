@@ -5,17 +5,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Built via [[Sessions.builder]] so `spark.sql.legacy.parquet.nanosAsLong`
+  * Built via [[Sessions.registry]] so `spark.sql.legacy.parquet.nanosAsLong`
   * is set (events.parquet carries TIMESTAMP_NS) and all tables + UDFs are
   * registered for SQL-path queries.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Sessions.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val skippedTables = Tables.registerAll(spark, sfDir)
-    graft.functions.TextFns.registerAll(spark)
+    val (spark, skippedTables) = Sessions.registry(sfDir)
     new java.io.File(outDir).mkdirs()
     // A skipped table means the fixture dir is broken — surface it in an
     // artifact (not just stderr) so artifact-only automation can't miss

@@ -30,19 +30,28 @@ object MergeOps {
   private val uRow = "__u"
   private val mRow = "__m"
 
-  /** @param base       existing table
+  /** The output has `base`'s columns. The schema contract is checked up
+    * front, with no job.
+    *
+    * @param base       existing table
     * @param updates    new rows, small enough to broadcast; must contain
     *                   `keys` and `updateCols`
-    * @param keys       equality merge key column names (matched null-safely)
-    * @param updateCols columns taken from `updates` when matched (and used
-    *                   for inserts); any base column absent from `updates`
-    *                   is null on inserted rows
+    * @param keys       equality merge key column names (matched null-safely);
+    *                   at least one, each in both frames
+    * @param updateCols columns of `base` taken from `updates` when matched
+    *                   (and used for inserts); any base column absent from
+    *                   `updates` is null on inserted rows
     */
   def upsert(
       base: DataFrame,
       updates: DataFrame,
       keys: Seq[String],
       updateCols: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "upsert needs at least one key")
+    require(keys.forall(k => base.columns.contains(k) && updates.columns.contains(k)),
+      "base and updates must both carry every key")
+    require(updateCols.forall(base.columns.contains),
+      "every updateCol must be a base column")
     require(updateCols.forall(updates.columns.contains),
       "updates must carry every updateCol")
     // Each update row travels as ONE struct column, and every consumer of

@@ -2,7 +2,7 @@ package graft.operators
 
 /** Simple-font byte encodings for PDF text extraction (ISO 32000-1:2008
   * Annex D; reference behavior:
-  * `/root/reference/tts_data_pipeline/pre_processing/process_all.py:265-279`,
+  * `tts_data_pipeline/pre_processing/process_all.py:265-279`,
   * PyMuPDF's simple-font decode): fonts WITHOUT a /ToUnicode CMap
   * decode through these tables, not a Latin-1 byte fallback, which
   * would mangle WinAnsi 0x80-0x9F (curly quotes, dashes, €, ™) and

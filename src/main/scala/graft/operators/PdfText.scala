@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 
 /** Native PDF text extraction (SURVEY §2 S10; reference:
-  * `/root/reference/tts_data_pipeline/pre_processing/process_all.py:265-279`,
+  * `tts_data_pipeline/pre_processing/process_all.py:265-279`,
   * PyMuPDF per-page `get_text` concat) — pure JDK, no PDF library in
   * this offline container (the S11/Mp3Layer3 precedent: implement the
   * published format directly rather than leave a stub standing).

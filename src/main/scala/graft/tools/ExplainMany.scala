@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.{Sessions, SparkEntry, Tables}
+import graft.{Sessions, SparkEntry}
 
 /** Batch plan capture for the optimization-round evidence trail: write
   * the `.explain("formatted")` output of each named registered query to
@@ -17,12 +17,7 @@ object ExplainMany {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Sessions.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.registerAll(spark, sfDir)
-    graft.functions.TextFns.registerAll(spark)
+    val (spark, _) = Sessions.registry(sfDir, names)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

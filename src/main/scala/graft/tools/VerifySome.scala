@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry, Tables, Verify}
+import graft.{Sessions, SparkEntry, Verify}
 
 /** Selective Verify for the inner dev loop: run ONLY the named queries
   * (args: sfDir outDir name...) and write their parquet + a matching
@@ -16,12 +16,7 @@ object VerifySome {
     val outDir = args(1)
     val names = args.drop(2).toSeq
     require(names.nonEmpty, "usage: VerifySome <sfDir> <outDir> <name...>")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Sessions.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.registerAll(spark, sfDir)
-    graft.functions.TextFns.registerAll(spark)
+    val (spark, _) = Sessions.registry(sfDir, names)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)

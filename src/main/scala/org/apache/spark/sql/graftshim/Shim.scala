@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, DataFrame, classic}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -11,6 +12,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *   - Column <-> catalyst Expression: Spark 4's unified Column wraps a
   *     ColumnNode, and the converters live in `classic.ExpressionUtils`.
   *   - [[onePartition]]: builds a logical plan through `Dataset.ofRows`.
+  *   - The listener bus (`private[spark]`), for `graft.obs.Tally`.
   */
 object Shim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -27,4 +29,14 @@ object Shim {
         Sort(s.order, global = false, Repartition(1, shuffle = false, s.child)))
     case _ => df.coalesce(1)
   }
+
+  /** Returns once the listener bus has delivered every event posted so
+    * far to every listener, query-execution listeners included. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The listeners attached to `spark`'s bus and to its session's
+    * query-execution listener manager. */
+  def listenerCount(spark: SparkSession): Int =
+    spark.sparkContext.listenerBus.listeners.size +
+      spark.listenerManager.listListeners().length
 }

@@ -3,10 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.{col, concat_ws, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Tally
 import graft.pipeline.{AlignPublishPipeline, CatalogPipeline, PreprocessPipeline}
 
 /** A warm run reuses the classes its first run compiled: Spark's
@@ -18,11 +18,7 @@ class CodegenReuseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def compilesOf(run: => Unit): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    run
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-  }
+  private def compilesOf(run: => Unit): Long = Tally.of(spark)(run)._2.compiles
 
   test("Sessions.builder sets the codegen cache size and id-free class names") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==

@@ -1,15 +1,12 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.metrics.source.HiveCatalogMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.Tally
 
 /** Tables.events must read the SAME (ts, ts_ns) values out of every ts
   * encoding the fixture generator has shipped: int64 nanos (legacy,
@@ -94,39 +91,6 @@ class TablesSpec extends AnyFunSuite {
       "fanOut narrowed an already-parallel input")
   }
 
-  /** Jobs started and files discovered while `f` runs. Jobs are counted
-    * by a listener between two marker jobs: the listener bus delivers
-    * events in order, so the jobs it sees between the markers are f's. */
-  private def jobsAndFiles(f: => Unit): (Int, Long) = {
-    val marker = "graft.test.tablesScope"
-    val jobs = new AtomicInteger
-    @volatile var recording = false
-    val done = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty(marker))) match {
-          case Some("start") => recording = true
-          case Some("end") => recording = false; done.countDown()
-          case _ => if (recording) jobs.incrementAndGet()
-        }
-    }
-    val sc = spark.sparkContext
-    def markedJob(phase: String): Unit = {
-      sc.setLocalProperty(marker, phase)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      markedJob("start")
-      val f0 = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
-      f
-      val files = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - f0
-      markedJob("end")
-      assert(done.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (jobs.get, files)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** A fresh directory holding a `nation.parquet` of `n` rows. */
   private def nationDir(n: Int): String = {
     val dir = java.nio.file.Files.createTempDirectory("tables_cache").toString
@@ -148,11 +112,12 @@ class TablesSpec extends AnyFunSuite {
   test("a second load of a table starts no job and discovers no file") {
     val dir = nationDir(25)
     // Control: the first load lists the files and infers the schema.
-    val (firstJobs, firstFiles) = jobsAndFiles(Tables.load(spark, dir, "nation"))
-    assert(firstJobs >= 1 && firstFiles >= 1,
-      s"the first load ran $firstJobs jobs over $firstFiles files: the probe sees nothing")
-    val (jobs, files) = jobsAndFiles(Tables.load(spark, dir, "nation"))
-    assert((jobs, files) == ((0, 0L)), s"a second load ran $jobs jobs over $files files")
+    val first = Tally.of(spark)(Tables.load(spark, dir, "nation"))._2
+    assert(first.jobs.size >= 1 && first.filesDiscovered >= 1,
+      s"the first load ran ${first.jobs} over ${first.filesDiscovered} files: the probe sees nothing")
+    val again = Tally.of(spark)(Tables.load(spark, dir, "nation"))._2
+    assert((again.jobs.size, again.filesDiscovered) == ((0, 0L)),
+      s"a second load ran ${again.jobs} over ${again.filesDiscovered} files")
     assert(Tables.load(spark, dir, "nation").count() == 25)
   }
 

@@ -260,23 +260,15 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("assumeCanonical refuses a non-integral id column, without running a job") {
     val df = Seq((1.0, 2.0), (2.0, 3.0)).toDF("a", "b")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
+    val jobs = graft.obs.Tally.of(spark) {
       val cc = intercept[IllegalArgumentException](
         GraphOps.connectedComponents(df, "a", "b", assumeCanonical = true))
       assert(cc.getMessage.contains("a is double"), cc.getMessage)
       val lp = intercept[IllegalArgumentException](
         GraphOps.labelPropagation(df, "a", "b", rounds = 1, assumeCanonical = true))
       assert(lp.getMessage.contains("a is double"), lp.getMessage)
-      org.apache.spark.ContextShim.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0)
+    }._2.jobs
+    assert(jobs.isEmpty, jobs)
     // the default path still canonicalises (casts) the same input
     assert(GraphOps.connectedComponents(df, "a", "b").count() == 3)
   }

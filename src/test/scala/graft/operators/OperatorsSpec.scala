@@ -109,6 +109,20 @@ class OperatorsSpec extends AnyFunSuite {
     assert(updateBroadcasts.size == 1, updateBroadcasts.mkString("\n"))
   }
 
+  test("MergeOps.upsert refuses a schema outside its contract, without running a job") {
+    val base = Seq((1L, 10L)).toDF("id", "a")
+    val upd = Seq((1L, 11L, 12L)).toDF("id", "a", "b")
+    def refused(why: String)(call: => Any): Unit =
+      assert(intercept[IllegalArgumentException](call).getMessage.endsWith(why))
+    val t = graft.obs.Tally.of(spark) {
+      refused("at least one key")(MergeOps.upsert(base, upd, Nil, Seq("a")))
+      refused("carry every key")(MergeOps.upsert(base, upd.drop("id"), Seq("id"), Seq("a")))
+      refused("carry every key")(MergeOps.upsert(base.drop("id"), upd, Seq("id"), Seq("a")))
+      refused("a base column")(MergeOps.upsert(base, upd, Seq("id"), Seq("a", "b")))
+    }._2
+    assert(t.jobs.isEmpty, t.jobs)
+  }
+
   // ---------------------------------------------------------- EncodeOps
   test("EncodeOps.dictEncode: dense labels in value order, join preserves rows") {
     val df = Seq(("r1", "b"), ("r2", "a"), ("r3", "b")).toDF("id", "seg")

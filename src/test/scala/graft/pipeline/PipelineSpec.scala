@@ -6,16 +6,15 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ContextShim
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.WriteFilesExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{PlanWalk, TestSpark}
+import graft.obs.Tally
 import graft.io.IoOps
 
 /** [[StubExternals]] with a count of each expensive per-row call. Spark
@@ -380,21 +379,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   /** The executed plans of the queries `f` runs. */
-  private def plansOf(f: => Unit): Seq[SparkPlan] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    ContextShim.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      f
-      ContextShim.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toSeq
-  }
+  private def plansOf(f: => Unit): Seq[SparkPlan] = Tally.of(spark)(f)._2.plans
 
   test("processAudio shuffles once, the compressed parts, never decoded samples") {
     val wavs = tmp("pp_wav1")

@@ -423,7 +423,6 @@ class FileStreamSpec extends AnyFunSuite {
   }
 
   test("streaming upsert: a one-key batch on a 64-bucket base runs no stage as wide as the base") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -439,39 +438,12 @@ class FileStreamSpec extends AnyFunSuite {
     val q = FileStream.streamingUpsert(
       mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
       orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = nB)
-    // The listener bus delivers events in order, so stages seen between
-    // two marked jobs are exactly the stages run between them.
-    val marker = "graft.test.listingScope"
-    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    @volatile var recording = false
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty(marker))) match {
-          case Some("start") => recording = true
-          case Some("end") => recording = false; done.countDown()
-          case _ =>
-        }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        if (recording) widths.add(s.stageInfo.numTasks)
-    }
-    val sc = spark.sparkContext
-    def markedJob(phase: String): Unit = {
-      sc.setLocalProperty(marker, phase)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      markedJob("start")
+    val seen = graft.obs.Tally.of(spark) {
       try {
         mem.addData((7, "updated", 1L))
         q.processAllAvailable()
       } finally q.stop()
-      markedJob("end")
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val seen = widths.asScala.toSeq
+    }._2.stages.map(_.tasks)
     assert(seen.size > 1, s"the batch ran no stages: $seen")
     assert(seen.forall(_ < nB), s"a stage as wide as the base ran: task counts $seen")
     val rows = spark.read.parquet(base).select("k", "v").as[(Int, String)].collect().toMap

@@ -20,8 +20,4 @@ object ContextShim {
     sc.setCheckpointDir(dir)
     try f finally sc.checkpointDir = saved
   }
-
-  /** Returns once the listener bus has delivered every event posted so
-    * far, query-execution listener callbacks included. */
-  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
