@@ -130,7 +130,15 @@ object Tables {
   * Two codegen settings make a warm run reuse the classes its first run
   * compiled instead of compiling them again ([[CodegenCacheEntries]] and
   * `useIdInClassName`, below). Deployers who embed the library in their
-  * own session must set both themselves, as for `cleanCheckpoints`. */
+  * own session must set both themselves, as for `cleanCheckpoints`.
+  *
+  * The `file:` scheme resolves to [[graft.io.LocalFiles]]'s classes
+  * (`fs.file.impl` and `fs.AbstractFileSystem.file.impl`): Hadoop's local
+  * filesystem, checksums and modes unchanged, without a `chmod` or
+  * `readlink` process per file. Deployers who embed the library must set
+  * both confs themselves. Hadoop caches the first `file:` FileSystem of a
+  * JVM: a JVM that used `file:` before its first builder session keeps
+  * the stock class, which is slower but gives the same results. */
 object Sessions {
   private val defaultCpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -196,6 +204,13 @@ object Sessions {
       // the next): the same body then misses the cache. The id stays in
       // the plan's `*(N)` markers and in the generated code's comments.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // Invariant: writing, renaming and committing a `file:` path starts
+      // no process. Reason: without Hadoop's native library the stock
+      // local filesystem forks `chmod` for every file and directory it
+      // creates and `readlink` for every FileContext rename, 65-92 forks
+      // per CDC micro-batch; graft.io.LocalFiles does both in-process.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFiles.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.LocalFiles.Fs].getName)
   }
 
   /** The session of the registry's mains (Bench, Verify and the tools):

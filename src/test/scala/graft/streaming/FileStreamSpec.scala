@@ -333,6 +333,27 @@ class FileStreamSpec extends AnyFunSuite {
     assert(rows(7) == "updated" && rows.size == 400 && rows(8) == "v8")
   }
 
+  test("streaming upsert: a micro-batch starts no process") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val (root, base) = base400("supsert_forks")
+    val mem = MemoryStream[(Int, String, Long)]
+    val q = FileStream.streamingUpsert(
+      mem.toDS().toDF("k", "v", "seq"), base, Seq("k"), Seq("v", "seq"),
+      orderCol = "seq", checkpoint = s"$root/ckpt", nBuckets = 8)
+    // the batch writes its offset and commit logs (FileContext renames),
+    // the merged buckets under `.base.next` and swaps them into the base
+    val starts = try graft.io.ProcessStarts.during {
+      mem.addData((7, "updated", 1L), (401, "new", 1L))
+      q.processAllAvailable()
+    }._2 finally q.stop()
+    assert(starts.isEmpty, starts)
+    assert(Files.exists(java.nio.file.Paths.get(root, "ckpt", "commits", "0")))
+    val rows = spark.read.parquet(base).select("k", "v").as[(Int, String)].collect().toMap
+    assert(rows.size == 401 && rows(7) == "updated" && rows(401) == "new")
+  }
+
   /** Bucket of each Int key under `FileStream.bucketExpr`. */
   private def bucketsOf(keys: Seq[Int], nB: Int): Map[Int, Int] = {
     import spark.implicits._
