@@ -2,36 +2,29 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** Lineage-truncation with a FAULT-TOLERANCE MODE SWITCH for the
-  * iterative family (PageRank/CC/BFS/HITS/label-prop/k-core, the
-  * LSH/winnow/k-means dedup pipelines, the corpus pipeline stages, and
-  * every multi-consumer materialization in the query layer).
+/** Lineage truncation for the iterative family (PageRank/CC/BFS/HITS/
+  * label-prop/k-core, the LSH/winnow/k-means dedup pipelines, the corpus
+  * pipeline stages, and every multi-consumer materialization in the
+  * query layer). Durability follows the SparkContext's checkpoint
+  * directory, as in Spark's own `PeriodicCheckpointer` (GraphX, MLlib):
   *
-  * Why a switch exists: `localCheckpoint` truncates lineage by storing
-  * the blocks ONLY on executors. In one JVM that is free and invisible;
-  * on a multi-executor cluster, one lost executor mid-iteration destroys
-  * blocks that no lineage can rebuild — the job dies unrecoverably,
-  * hours in. `df.checkpoint()` against a durable checkpoint directory
-  * (HDFS/S3) survives executor loss at the cost of a write + re-read per
-  * checkpoint. Neither default is right for both worlds, so the mode is
-  * a session conf:
+  *   - no checkpoint directory: eager `localCheckpoint`. The blocks live
+  *     only on executors, which is free in one JVM; on a multi-executor
+  *     cluster one lost executor mid-iteration destroys blocks no
+  *     lineage can rebuild, and the job dies.
+  *   - a checkpoint directory (`spark.checkpoint.dir` at context start,
+  *     or `SparkContext.setCheckpointDir`): eager `checkpoint()`, written
+  *     under it and re-read, so the cut survives executor loss when the
+  *     directory is on storage that does (HDFS/S3; a local path on one
+  *     node does not). The directory is context-global: every session of
+  *     one context checkpoints under it, and a context whose directory
+  *     is set for any reason gets durable checkpoints.
   *
-  *   - `spark.graft.checkpoint.mode = local` (default): eager
-  *     `localCheckpoint`. Right for single-JVM runs, benchmarks, and
-  *     short jobs where a retry is cheaper than N durable writes.
-  *   - `spark.graft.checkpoint.mode = reliable`: eager `checkpoint()` to
-  *     the SparkContext's own checkpoint directory. The deployer points
-  *     it (`spark.checkpoint.dir` at context start, or
-  *     `SparkContext.setCheckpointDir`) at storage that survives executor
-  *     loss — a local path on one node does NOT. Mandatory for long
-  *     iterative jobs on real clusters. The directory is context-global:
-  *     every session of one context checkpoints under it.
-  *
-  * Measured cost of `reliable`: a 12-iteration PageRank with
+  * Measured cost of durable checkpoints: a 12-iteration PageRank with
   * checkpointEvery=4 (two mid-loop lineage cuts + the edge
   * materialization) on the 1.2M-edge sf0.1 graph, alternating
-  * GC-separated local/reliable reps in one JVM against a local-disk
-  * checkpoint dir: local min 7.00 / med 7.30 s vs reliable min 7.46 /
+  * GC-separated local/durable reps in one JVM against a local-disk
+  * checkpoint dir: local min 7.00 / med 7.30 s vs durable min 7.46 /
   * med 7.92 s — a **1.07-1.08× overhead** for the write+re-read per
   * cut. Against S3/HDFS the write latency is higher but amortizes the
   * same way (cost scales with cuts × checkpointed bytes, not with
@@ -39,18 +32,16 @@ import org.apache.spark.sql.Dataset
   * durability on long iterative jobs.
   *
   * All operator/query call sites route through [[Checkpoints.cp]] (via
-  * the `.checkpointed()` syntax), so one conf flips the whole library.
+  * the `.checkpointed()` syntax), so the one directory switches the
+  * whole library.
   */
 object Checkpoints {
-  val ModeKey = "spark.graft.checkpoint.mode"
 
-  def mode(ds: Dataset[_]): String =
-    ds.sparkSession.conf.get(ModeKey, "local")
-
-  /** Eagerly materialize `ds` and truncate its lineage, per the session's
-    * checkpoint mode. See the object scaladoc for the tradeoff.
+  /** Eagerly materialize `ds` and truncate its lineage: durably when the
+    * SparkContext has a checkpoint directory, locally otherwise. See the
+    * object scaladoc for the tradeoff.
     *
-    * Superseded-checkpoint growth: reliable checkpoints are files the
+    * Superseded-checkpoint growth: durable checkpoints are files the
     * cluster must eventually delete. [[Sessions.builder]] sets
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, so the
     * ContextCleaner removes a checkpoint's files once its RDD is
@@ -60,18 +51,9 @@ object Checkpoints {
     * PeriodicCheckpointer behavior without the bookkeeping). Deployers
     * wiring this library into a session of their own must set that
     * cleaner flag (or prune the dir externally) for multi-day runs. */
-  def cp[T](ds: Dataset[T]): Dataset[T] = mode(ds) match {
-    case "local" => ds.localCheckpoint(true)
-    case "reliable" =>
-      require(ds.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
-        s"$ModeKey=reliable needs a durable checkpoint location: set " +
-          "spark.checkpoint.dir (or SparkContext.setCheckpointDir) to an " +
-          "HDFS/S3 path that survives executor loss")
-      ds.checkpoint(true)
-    case other =>
-      throw new IllegalArgumentException(
-        s"$ModeKey must be 'local' or 'reliable', got '$other'")
-  }
+  def cp[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.nonEmpty) ds.checkpoint(true)
+    else ds.localCheckpoint(true)
 
   /** `.checkpointed()` postfix syntax so call sites keep their chained
     * shape (`df.filter(...).checkpointed()`). */

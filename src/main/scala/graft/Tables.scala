@@ -185,8 +185,8 @@ object Sessions {
       // map_concat policy is EXCEPTION.
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Reliable-mode checkpoints are durable FILES: without this the
-      // ContextCleaner never deletes superseded ones, so a long
+      // Checkpoints under a checkpoint directory are FILES: without
+      // this the ContextCleaner never deletes superseded ones, so a long
       // iterative loop (one checkpoint per round) or a streaming job
       // (one per batch) grows the checkpoint volume without bound.
       // With it, a checkpoint's files go when its RDD becomes

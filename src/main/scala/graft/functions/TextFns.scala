@@ -367,7 +367,6 @@ object TextFns {
     while (c < cn) { if (!cut(c)) sb.append(clean(c)); c += 1 }
     sb.toString
   }
-  val scrubSpansUdf = udf { (s: String, pos: Seq[Int], k: Int) => scrubSpans(s, pos, k) }
 
   /** scrubSpans plus the cleaned length, in ONE kernel pass and ONE
     * cleaning space: deriving the cleaned length from a separate

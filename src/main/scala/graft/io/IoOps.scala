@@ -164,20 +164,19 @@ object IoOps {
     * upserts accrete small files; at fleet scale the scan-planning and
     * NameNode/listing overhead of millions of small files dominates
     * actual I/O, so periodic compaction is part of the engine surface.
-    * Write-then-swap (same pattern as the streaming upsert) because
-    * parquet cannot be read and overwritten in one job. Returns the
-    * file count after compaction. */
+    * Write-then-swap ([[DirSwap]], as the streaming upsert) because
+    * parquet cannot be read and overwritten in one job; a directory or
+    * partition leaf that an earlier crash left parked is restored first.
+    * Returns the file count after compaction. */
   def compactParquet(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetBytes: Long = 128L << 20): Int = {
     // Hadoop FileSystem throughout (not java.io.File) so sizing and the
     // swap work on whatever store `dir` lives on, not just the driver's
-    // local disk. Hadoop signals rename/delete failure by RETURNING
-    // FALSE, not throwing — every step is checked, and the original
-    // data is parked at `.old` (never deleted before the new data is
-    // in place) so the worst crash window leaves a recoverable backup,
-    // not a hole.
+    // local disk.
     val dirP = new org.apache.hadoop.fs.Path(dir)
     val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DirSwap.restore(fs, dirP)
+    DirSwap.restoreParked(fs, dirP)
     def hidden(name: String) = name.startsWith(".") || name.startsWith("_")
     // Hive-partitioned tree (subdirectories like `bucket=3/`): compact each
     // partition directory independently so the layout — and downstream
@@ -193,18 +192,14 @@ object IoOps {
       fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val bytes = parquetFiles(dirP).map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    // Tmp/backup siblings are dot-prefixed: inside a partitioned tree a
-    // visible sibling (`bucket=3.old`) would parse as a bogus partition
-    // value during discovery; hidden names are skipped by Spark and Hadoop
-    // listings alike.
-    val parent = dirP.getParent
-    val tmpP = new org.apache.hadoop.fs.Path(parent, "." + dirP.getName + ".compact")
+    // The tmp sibling is dot-prefixed: inside a partitioned tree a
+    // visible sibling (`bucket=3.compact`) would parse as a bogus
+    // partition value during discovery; hidden names are skipped by Spark
+    // and Hadoop listings alike.
+    val tmpP = new org.apache.hadoop.fs.Path(dirP.getParent, "." + dirP.getName + ".compact")
     spark.read.parquet(dir).repartition(nFiles)
       .write.mode("overwrite").parquet(tmpP.toString)
-    val bakP = new org.apache.hadoop.fs.Path(parent, "." + dirP.getName + ".old")
-    if (fs.exists(bakP)) require(fs.delete(bakP, true), s"cannot clear $bakP")
-    require(fs.rename(dirP, bakP), s"cannot park $dirP at $bakP")
-    require(fs.rename(tmpP, dirP), s"cannot move $tmpP to $dirP — original preserved at $bakP")
+    DirSwap.swap(fs, dirP, tmpP)
     parquetFiles(dirP).length
   }
 }

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * floor: g4's 15 driver jobs are the base cut plus AQE
   * stage / broadcast-build materializations of an already-single-DAG
   * loop — no round barrier exists to batch; `checkpointEvery` truncates
-  * lineage on longer walks, through [[graft.Checkpoints]] — set
-  * `spark.graft.checkpoint.mode=reliable` on long cluster runs (the
-  * default `local` mode loses blocks with a lost executor).
+  * lineage on longer walks, through [[graft.Checkpoints]] — set a
+  * durable `spark.checkpoint.dir` on long cluster runs (without one, a
+  * lost executor loses the cut).
   */
 object BfsOps {
 

@@ -47,7 +47,14 @@ object CmsOps {
     * (`termCol`, `cntCol`): one row per (row-index, bucket) with the
     * summed counter. Fan-out is d per input row, combined map-side by
     * the partial aggregate down to ≤ d·w rows per partition before the
-    * single shuffle. */
+    * single shuffle.
+    *
+    * Streamable as is: on a streaming `terms` this is a running
+    * aggregation whose state is the d×w counter grid itself — a few KB,
+    * bounded by construction, never by watermark — so Update/Complete
+    * mode needs no event-time column, and grid(all batches so far)
+    * equals the batch grid over the union (merge-associativity, pinned
+    * in FileStreamSpec). */
   def cmsBuild(terms: DataFrame, termCol: String, cntCol: String,
       d: Int, w: Int): DataFrame = {
     require(d >= 1 && w >= 2, "need d >= 1 hash rows and w >= 2 buckets")

@@ -30,10 +30,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * round's lineage is truncated through [[graft.Checkpoints]] (SURVEY
   * §4.2 iterative-plan note, same treatment as KMeansOps).
   *
-  * Fault tolerance: default `local` checkpoint mode keeps blocks on
-  * executors only — one lost executor mid-run is unrecoverable; set
-  * `spark.graft.checkpoint.mode=reliable` (plus a durable
-  * `spark.checkpoint.dir`) for long cluster runs.
+  * Fault tolerance: with no checkpoint directory the cuts keep blocks
+  * on executors only — one lost executor mid-run is unrecoverable; set
+  * a durable `spark.checkpoint.dir` for long cluster runs.
   */
 object GraphOps {
 

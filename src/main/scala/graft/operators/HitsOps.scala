@@ -32,9 +32,8 @@ import org.apache.spark.sql.functions._
   * the score table on broadcast joins so the fact-scaled edge list —
   * materialized once — is never re-shuffled; default keyed-shuffle
   * rounds for web-scale node sets. Lineage cuts route through
-  * [[graft.Checkpoints]]: set `spark.graft.checkpoint.mode=reliable`
-  * for long cluster runs (default `local` mode dies with a lost
-  * executor).
+  * [[graft.Checkpoints]]: set a durable `spark.checkpoint.dir` for long
+  * cluster runs (without one, a lost executor loses the cut).
   */
 object HitsOps {
 

@@ -52,11 +52,10 @@ import org.apache.spark.sql.functions._
   * keyed-shuffle mode depends on at real scale — not taken.
   *
   * Fault tolerance: every lineage cut routes through [[graft.Checkpoints]]
-  * — default `local` mode stores checkpoint blocks on executors only
-  * (fast; one lost executor kills a long run), `reliable` mode writes
-  * them to the durable `spark.checkpoint.dir` and survives executor
-  * loss. Long cluster runs of this iterative loop should set
-  * `spark.graft.checkpoint.mode=reliable`.
+  * — with no checkpoint directory the blocks live on executors only
+  * (fast; one lost executor kills a long run); with a durable
+  * `spark.checkpoint.dir` they are written there and survive executor
+  * loss. Long cluster runs of this iterative loop should set one.
   */
 object PageRankOps {
 

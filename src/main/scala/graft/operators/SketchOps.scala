@@ -233,9 +233,13 @@ object SketchOps {
   /** The HLL register build alone: (groupCols..., bucket, rho) with
     * rho = MAX of the geometric observable per register. Factored out
     * because MAX-per-register is duplicate-blind AND merge-associative,
-    * which makes this exact same plan a RUNNING STREAMING aggregation
-    * (FileStream.streamingHllRegisters): state = ≤ m small rows per
-    * group, the bounded-state property the sketch exists for.
+    * which makes this exact same plan, on a streaming `df`, a RUNNING
+    * STREAMING aggregation in Update/Complete mode: state = ≤ m small
+    * rows per group, bounded by construction, never by watermark — the
+    * bounded-state property the sketch exists for. The final state folds
+    * to the estimate with [[hllEstimate]] as a per-group batch step over
+    * the sink (two chained aggregations are not streamable in one
+    * query). Stream/batch register parity is pinned in FileStreamSpec.
     *
     * Hash note: KMV reads only the ORDER of hashes, so the affine
     * portable hash is enough there; HLL reads the BITS, and an affine

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * here via integer accumulation).
   *
   * The pruned-posting materialization routes through
-  * [[graft.Checkpoints]] — `spark.graft.checkpoint.mode=reliable` for
-  * cluster runs that must survive executor loss.
+  * [[graft.Checkpoints]] — a durable `spark.checkpoint.dir` for cluster
+  * runs that must survive executor loss.
   */
 object SparseSimOps {
 

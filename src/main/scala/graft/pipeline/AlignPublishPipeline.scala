@@ -30,7 +30,7 @@ object AlignPublishPipeline {
   /** Aligns, gates and publishes; writes JSONL under `outDir`.
     *
     * Three intermediates are materialised eagerly, once each, through
-    * [[graft.Checkpoints.cp]] (so `spark.graft.checkpoint.mode` applies):
+    * [[graft.Checkpoints.cp]] (durable under a checkpoint directory):
     * the utterance table, the per-book WER and the published table. The
     * call runs those jobs; the returned `utterances` and `bookWer` read
     * the materialised rows, so the segment and line files are scanned and

@@ -29,7 +29,7 @@ object CatalogPipeline {
   /** Builds the catalog, writes it as CSV under `outDir` and returns it.
     *
     * The fetched metadata is materialised eagerly, once, through
-    * [[graft.Checkpoints.cp]] (so `spark.graft.checkpoint.mode` applies):
+    * [[graft.Checkpoints.cp]] (durable under a checkpoint directory):
     * the call runs that job, and the max-narrators collect, the CSV write
     * and every consumer of the returned catalog read the materialised
     * rows. Each valid url is fetched once per call. */

@@ -37,7 +37,7 @@ object PreprocessPipeline {
   /** Text phase: returns (regrouped lines DF, per-book text metrics DF).
     *
     * The regrouped lines are materialised eagerly, once, through
-    * [[graft.Checkpoints.cp]] (so `spark.graft.checkpoint.mode` applies):
+    * [[graft.Checkpoints.cp]] (durable under a checkpoint directory):
     * the call runs the extraction job, and both returned frames read the
     * materialised lines. Each PDF is extracted once per call. */
   def processText(spark: SparkSession, pdfGlob: String,

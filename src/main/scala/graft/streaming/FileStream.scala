@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.Checkpoints.CheckpointSyntax
+import graft.io.DirSwap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -219,23 +220,18 @@ object FileStream {
       s"$basePath was written with nBuckets = $written but is upserted with " +
         s"nBuckets = $nBuckets; keys would hash to the wrong buckets")
     def bucketDir(b: Int) = new Path(baseP, s"$BucketCol=$b")
-    def backup(b: Int) = new Path(baseP, s".$BucketCol=$b.old")
-    // A crash mid-swap (below, or in IoOps.compactParquet, which parks
-    // under the same name) can leave a bucket parked at its backup with no
-    // live directory. Move every such bucket back before any batch reads:
-    // otherwise a batch touching it would merge without the bucket's rows
-    // and its swap would then delete the only copy of them. A failed batch
-    // stops the query, so a retried batch always comes through here.
-    val names = fs.listStatus(baseP).map(_.getPath.getName).toSet
-    val Parked = raw"\.$BucketCol=(\d+)\.old".r
-    val parked = names.toSeq.collect { case Parked(b) if !names(s"$BucketCol=$b") => b.toInt }
-    parked.foreach(b => require(fs.rename(backup(b), bucketDir(b)), s"cannot restore ${backup(b)}"))
+    // A crash mid-swap (below, or in IoOps.compactParquet) can leave a
+    // bucket parked at its backup with no live directory. Move every such
+    // bucket back before any batch reads: otherwise a batch touching it
+    // would merge without the bucket's rows. A failed batch stops the
+    // query, so a retried batch always comes through here.
+    DirSwap.restoreParked(fs, baseP)
     // The schema comes from one bucket directory, once per query: a read
     // of basePath itself would list every bucket (a Spark job of nBuckets
     // tasks above the parallel-discovery threshold) on every batch. The
     // merge writes the base's own columns back, so it cannot drift.
-    val anyBucket = names.find(_.startsWith(s"$BucketCol=")).map(new Path(baseP, _))
-      .orElse(parked.headOption.map(bucketDir)).getOrElse(baseP)
+    val anyBucket = fs.listStatus(baseP).map(_.getPath.getName)
+      .find(_.startsWith(s"$BucketCol=")).map(new Path(baseP, _)).getOrElse(baseP)
     val baseSchema = updates.sparkSession.read.option("basePath", basePath)
       .parquet(anyBucket.toString).schema
     updates.writeStream
@@ -267,26 +263,17 @@ object FileStream {
           baseSlice, keyed, keys, updateCols :+ BucketCol)
         // Write the merged TOUCHED buckets to a hidden sibling (dot prefix
         // keeps partition discovery from ever seeing it), then swap each
-        // touched bucket directory individually. Hadoop FileSystem (not
-        // java.io.File) so the swap works on whatever store basePath lives
-        // on; rename/delete signal failure by RETURNING FALSE, and a
-        // checked failure throws -> the batch fails -> the streaming
-        // engine retries it. A crash mid-swap leaves each bucket either
-        // old, new, or parked at its `.old` backup; the restarted query
-        // moves a parked bucket back before its first batch reads, so
-        // every bucket is recoverable (plain file stores have no atomic multi-dir swap; a
-        // table format is the transactional answer, this is the best a
-        // bare directory layout can do).
+        // touched bucket directory individually (DirSwap); a failed step
+        // throws -> the batch fails -> the streaming engine retries it. A
+        // crash mid-swap leaves each bucket either old, new, or parked at
+        // its backup; the restarted query moves a parked bucket back
+        // before its first batch reads, so every bucket is recoverable
+        // (plain file stores have no atomic multi-dir swap; a table format
+        // is the transactional answer, this is the best a bare directory
+        // layout can do).
         val tmpP = new Path(baseP.getParent, "." + baseP.getName + ".next")
         merged.write.mode("overwrite").partitionBy(BucketCol).parquet(tmpP.toString)
-        touched.foreach { b =>
-          val dir = bucketDir(b)
-          val src = new Path(tmpP, s"$BucketCol=$b")
-          val bak = backup(b)
-          if (fs.exists(bak)) require(fs.delete(bak, true), s"cannot clear $bak")
-          if (fs.exists(dir)) require(fs.rename(dir, bak), s"cannot park $dir at $bak")
-          require(fs.rename(src, dir), s"cannot move $src to $dir")
-        }
+        touched.foreach(b => DirSwap.swap(fs, bucketDir(b), new Path(tmpP, s"$BucketCol=$b")))
         fs.delete(tmpP, true)
         ()
       }
@@ -308,36 +295,6 @@ object FileStream {
         col(typeCol))
       .agg(count(lit(1)).as("n"),
         sum(col("value")).as("sum_value"))
-
-  /** Streaming count-min grid: the CMS counter build as a running
-    * streaming aggregation — the shape the sketch EXISTS for (one pass,
-    * no replay; the batch build in CmsOps is the same arithmetic over a
-    * bounded history). State is the d×w counter grid itself — a few KB
-    * bounded by construction, never by watermark — so Update output
-    * mode needs no event-time column at all: every micro-batch revises
-    * the touched cells, and grid(all batches so far) equals the batch
-    * grid over the union (merge-associativity, pinned in
-    * FileStreamSpec against CmsOps.cmsBuild on the same rows). */
-  def streamingCmsGrid(
-      terms: DataFrame, termCol: String, cntCol: String,
-      d: Int, w: Int): DataFrame =
-    graft.operators.CmsOps.cmsBuild(terms, termCol, cntCol, d, w)
-
-  /** Streaming HyperLogLog registers: the HLL register build as a
-    * running streaming aggregation over an unbounded value stream —
-    * per-register MAX is duplicate-blind and merge-associative, so
-    * Update/Complete mode state is exactly the register table (≤ m
-    * small rows per group, bounded by construction, never by
-    * watermark — the CMS-grid argument, for distinct counting). The
-    * final state folds to the estimate with SketchOps.hllEstimate
-    * (two chained aggregations are not streamable in one query; the
-    * fold is a per-group ≤ m-row batch step over the sink).
-    * Batch parity is pinned in FileStreamSpec: registers(all batches)
-    * == SketchOps.hllRegisters(union), hence identical estimates. */
-  def streamingHllRegisters(
-      df: DataFrame, groupCols: Seq[String],
-      valueCol: org.apache.spark.sql.Column): DataFrame =
-    graft.operators.SketchOps.hllRegisters(df, groupCols, valueCol)
 
   /** Watermarked stream-stream interval join: each left event joined to
     * the right events sharing its key whose event time falls within

@@ -2,16 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.ContextShim
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.CheckpointSyntax
 
-/** Pins the checkpoint-mode contract: both modes truncate lineage (the
-  * plan the iterative family depends on — without truncation each
-  * round's DAG nests the previous round's), `reliable` writes recoverable
-  * files under the SparkContext's checkpoint directory, and
-  * misconfiguration fails loudly instead of silently running
-  * non-durable. */
+/** Pins the checkpoint contract: with and without a checkpoint directory
+  * `cp` truncates lineage (the plan the iterative family depends on —
+  * without truncation each round's DAG nests the previous round's);
+  * without one nothing is written, and with one the cut is recoverable
+  * files under the SparkContext's checkpoint directory. */
 class CheckpointsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -26,29 +28,35 @@ class CheckpointsSpec extends AnyFunSuite {
   private def truncated(out: org.apache.spark.sql.DataFrame): Boolean =
     !out.queryExecution.analyzed.toString.contains("Range (")
 
+  /** The materialized RDD a checkpointed frame scans. */
+  private def cutRdd(out: org.apache.spark.sql.DataFrame): RDD[_] =
+    out.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      .getOrElse(fail(out.queryExecution.analyzed.toString))
+
   private def anyFile(p: java.io.File): Boolean = {
     val kids = Option(p.listFiles()).getOrElse(Array.empty)
     kids.exists(_.isFile) || kids.exists(anyFile)
   }
 
   test("local mode (default) truncates lineage eagerly") {
-    spark.conf.unset(Checkpoints.ModeKey)
-    val out = df.checkpointed()
-    assert(truncated(out), out.queryExecution.analyzed.toString)
-    assert(out.agg(sum("y")).head().getLong(0) == 10100L)
-    out.unpersist()
-  }
-
-  test("reliable mode without a durable dir fails loudly") {
-    val e = TestSpark.reliableWithoutDir(intercept[IllegalArgumentException](df.checkpointed()))
-    assert(e.getMessage.contains("spark.checkpoint.dir"), e.getMessage)
-    assert(e.getMessage.contains("setCheckpointDir"), e.getMessage)
+    ContextShim.withoutCheckpointDir(spark.sparkContext) {
+      val out = df.checkpointed()
+      assert(truncated(out), out.queryExecution.analyzed.toString)
+      // a local cut: materialized on the executors, no file written
+      val rdd = cutRdd(out)
+      assert(rdd.isCheckpointed && rdd.getCheckpointFile.isEmpty, rdd.toDebugString)
+      assert(out.agg(sum("y")).head().getLong(0) == 10100L)
+      out.unpersist()
+    }
   }
 
   test("reliable mode truncates lineage and persists under the durable dir") {
     TestSpark.reliable { dir =>
       val out = df.checkpointed()
       assert(truncated(out), out.queryExecution.analyzed.toString)
+      val file = cutRdd(out).getCheckpointFile
+      val ckptDir = spark.sparkContext.getCheckpointDir.get
+      assert(file.exists(_.startsWith(ckptDir)), s"$file is not under $ckptDir")
       // checked while `out` is still used below: the cleaner may delete
       // the files of a checkpoint whose RDD is unreachable
       assert(anyFile(new java.io.File(dir)), s"no checkpoint files written under $dir")
@@ -63,7 +71,6 @@ class CheckpointsSpec extends AnyFunSuite {
       val sc = spark.sparkContext
       val resolved = sc.getCheckpointDir.get
       val sibling = spark.newSession()
-      sibling.conf.set(Checkpoints.ModeKey, "reliable")
       import sibling.implicits._
       val out = (1L to 10L).toDF("x").checkpointed()
       assert(sc.getCheckpointDir.get == resolved, "the sibling's cp() moved the dir")
@@ -75,24 +82,18 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
-  test("unknown mode fails loudly") {
-    spark.conf.set(Checkpoints.ModeKey, "bogus")
-    try {
-      val e = intercept[IllegalArgumentException](df.checkpointed())
-      assert(e.getMessage.contains("bogus"))
-    } finally spark.conf.unset(Checkpoints.ModeKey)
-  }
-
   test("an iterative operator runs end-to-end in reliable mode") {
-    // The mode must flip the whole library through one conf: run a real
-    // member of the iterative family (connected components — star
-    // rounds checkpoint each round) under reliable mode and check the
-    // result is the same as local mode's.
+    // The directory must switch the whole library: run a real member of
+    // the iterative family (connected components — star rounds
+    // checkpoint each round) with one and check the result is the same
+    // as without.
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L))
       .toDF("a", "b")
-    val local = operators.GraphOps.connectedComponents(edges, "a", "b")
-      .as[(Long, Long)].collect().toMap
+    val local = ContextShim.withoutCheckpointDir(spark.sparkContext) {
+      operators.GraphOps.connectedComponents(edges, "a", "b")
+        .as[(Long, Long)].collect().toMap
+    }
     val rel = TestSpark.reliable { _ =>
       operators.GraphOps.connectedComponents(edges, "a", "b")
         .as[(Long, Long)].collect().toMap

@@ -8,7 +8,7 @@ import graft.tools.GenOracleBody
   * gate may parse the source for `"name" -> "SQL"` entries); the per-file
   * maps in the queries package are the editing source. This spec fails the
   * build when the two drift — regenerate with
-  * `sbt "runMain graft.tools.GenOracleBody" && python3 tools/splice_oracle.py`.
+  * `sbt "runMain graft.tools.GenOracleBody"`.
   */
 class OracleSyncSpec extends AnyFunSuite {
 

@@ -11,21 +11,11 @@ object TestSpark {
     s
   }
 
-  /** Runs `f` in reliable checkpoint mode, with the context's checkpoint
-    * directory set through `setCheckpointDir` to a fresh temp dir (passed
-    * to `f`); the mode and the previous directory are restored after. */
+  /** Runs `f` with the context's checkpoint directory set through
+    * `setCheckpointDir` to a fresh temp dir (passed to `f`), so every
+    * checkpoint is durable; the previous directory is restored after. */
   def reliable[T](f: String => T): T = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    reliableMode(ContextShim.withCheckpointDir(spark.sparkContext, dir)(f(dir)))
-  }
-
-  /** Runs `f` in reliable checkpoint mode with no checkpoint directory,
-    * whatever an earlier suite set on the shared context. */
-  def reliableWithoutDir[T](f: => T): T =
-    reliableMode(ContextShim.withoutCheckpointDir(spark.sparkContext)(f))
-
-  private def reliableMode[T](f: => T): T = {
-    spark.conf.set(Checkpoints.ModeKey, "reliable")
-    try f finally spark.conf.unset(Checkpoints.ModeKey)
+    ContextShim.withCheckpointDir(spark.sparkContext, dir)(f(dir))
   }
 }

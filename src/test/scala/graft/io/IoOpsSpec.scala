@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,6 +48,30 @@ class IoOpsSpec extends AnyFunSuite {
     assert(back.columns.toSet == Set("id", "bucket", "v"))
     assert(back.count() == 1000)
     assert(back.filter($"bucket" === 2).count() == 250)
+  }
+
+  test("compactParquet: a directory a crashed swap left parked is restored, not lost") {
+    // The state a crash leaves between the swap's park and move steps: the
+    // data sits only at the hidden backup `.<dir>.old`.
+    def park(dir: String): Unit = {
+      val p = Paths.get(dir)
+      Files.move(p, p.resolveSibling(s".${p.getFileName}.old"))
+    }
+    val df = (1 to 1000).map(i => (i, i % 4, s"row$i")).toDF("id", "bucket", "v")
+    val tree = tmp() + "/tree"
+    df.repartition(10).write.partitionBy("bucket").parquet(tree)
+    park(s"$tree/bucket=2")
+    assert(IoOps.compactParquet(spark, tree, targetBytes = 1L << 20) == 4)
+    assert(Files.isDirectory(Paths.get(tree, "bucket=2")), "the parked leaf is not live again")
+    val back = spark.read.parquet(tree)
+    assert(back.count() == 1000)
+    assert(back.filter($"bucket" === 2).count() == 250)
+    // an unpartitioned directory parked whole
+    val flat = tmp() + "/flat"
+    df.drop("bucket").repartition(10).write.parquet(flat)
+    park(flat)
+    assert(IoOps.compactParquet(spark, flat, targetBytes = 1L << 20) == 1)
+    assert(spark.read.parquet(flat).count() == 1000)
   }
 
   test("CSV roundtrip (K1 -> S1) preserves rows and types") {

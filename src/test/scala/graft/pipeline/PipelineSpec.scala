@@ -359,25 +359,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(reliable == local)
   }
 
-  test("reliable checkpoints without a directory fail each stage before it writes") {
-    val root = Files.createTempDirectory("pipeline_nodir")
-    writePassInputs(root)
-    Files.createDirectories(root.resolve("lines"))
-    Files.write(root.resolve("lines/part-0.txt"),
-      "bookA|0|mot hai ba\n".getBytes(StandardCharsets.UTF_8))
-    TestSpark.reliableWithoutDir {
-      def failsWithoutDir(stage: => Any): Unit = {
-        val e = intercept[IllegalArgumentException](stage)
-        assert(e.getMessage.contains("spark.checkpoint.dir"), e.getMessage)
-      }
-      failsWithoutDir(CatalogPipeline.run(spark, s"$root/urls/*.txt", s"$root/catalog"))
-      failsWithoutDir(PreprocessPipeline.processText(spark, s"$root/pdf/*/*.pdf"))
-      failsWithoutDir(AlignPublishPipeline.run(spark, s"$root/segments/*.tsv",
-        s"$root/lines/*.txt", s"$root/publish"))
-      assert(!Files.exists(root.resolve("catalog")) && !Files.exists(root.resolve("publish")))
-    }
-  }
-
   /** The executed plans of the queries `f` runs. */
   private def plansOf(f: => Unit): Seq[SparkPlan] = Tally.of(spark)(f)._2.plans
 

